@@ -20,6 +20,27 @@ import org.apache.spark.sql.functions._
   *  - `legacy.parquet.nanosAsLong=true`: `events.ts` is TIMESTAMP(NANOS),
   *    which Spark's vectorized reader rejects; we read the raw nanos long and
   *    convert (see [[Tables.events]]).
+  *  - `optimizer.canChangeCachedPlanOutputPartitioning=true`: a persisted
+  *    frame gets AQE-coalesced, data-sized partitions. Off (the Spark
+  *    default) AQE never coalesces the exchange under a `persist`, so every
+  *    cached frame keeps all `initialPartitionNum` (256) partitions and each
+  *    scan of it runs 256 tasks for a few KB. One pass of four dedup
+  *    queries over a 480-doc corpus runs 1,438 tasks that way and 160 with
+  *    the setting; `x_jaccard_ngram` drops from about 5 s to 1.1 s on a
+  *    4-vCPU host. Results are unchanged and no exchange is added above
+  *    the cache scans (PlanSpec pins both).
+  *  - `codegen.cache.maxEntries=1000`: the generated-class cache holds a
+  *    session's working set. One pass of the four dedup queries compiles
+  *    about 180 classes at sf0.001; at Spark's default of 100 entries each
+  *    pass evicts and recompiles the previous pass's classes (151 in a warm
+  *    pass of three of them). With 1000 a warm pass compiles about 40, all
+  *    in the streaming query (PlanSpec pins the other three).
+  *  - `codegen.useIdInClassName=false`: the cache key is the generated
+  *    source, and AQE numbers codegen stages in stage-completion order, so
+  *    two independent stages finishing in the other order swap their ids
+  *    and both classes compile again (4 to 8 of `x_curate_corpus`'s
+  *    classes on about half of its repeats). Without the id in the class
+  *    name the source is the same either way.
   */
 object Graft {
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -31,24 +52,27 @@ object Graft {
       .appName(appName)
       // On a cluster, shuffle partitions are sized to the DATA (~128-256 MB
       // each), not to a fixed core count; SPARK_GRAFT_SHUFFLE lets the
-      // scale probes model that (the r13 100x octave showed a fixed 32
-      // saturating: each partition carried 100x the bytes and spilled).
+      // scale probes model that (a fixed 32 saturates at the 100x octave:
+      // each partition carries 100x the bytes and spills).
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", nCpus.toString))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Spark's own remedy for the saturation above, promoted to the
-      // DEFAULT (VERDICT r13 #6): every exchange STARTS at 256 partitions
-      // and AQE coalesces down from map-output stats, so a 100x corpus
-      // gets data-sized partitions without the manual knob while small
-      // runs coalesce back to parallelism (r14 measured: sf0.1 bench
-      // within noise; the x_jaccard_ngram 30x->100x leg reads ~0.9
-      // without SPARK_GRAFT_SHUFFLE — COVERAGE.md). An explicit
-      // SPARK_GRAFT_SHUFFLE above 256 still wins: initialPartitionNum
-      // never splits below spark.sql.shuffle.partitions.
+      // Every exchange starts at 256 partitions and AQE coalesces down from
+      // map-output stats: a 100x corpus gets data-sized partitions without
+      // the SPARK_GRAFT_SHUFFLE knob (its 30x->100x x_jaccard_ngram leg
+      // reads ~0.9 without it, COVERAGE.md), while small runs coalesce
+      // back to parallelism at no measurable cost on the sf0.1 bench. An
+      // explicit SPARK_GRAFT_SHUFFLE above 256 still wins:
+      // initialPartitionNum never splits below spark.sql.shuffle.partitions.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         math.max(256,
           sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "0").toInt).toString)
+      // let that coalescing reach persisted frames too (scaladoc above)
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        "true")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

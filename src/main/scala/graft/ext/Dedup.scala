@@ -619,16 +619,6 @@ object Dedup {
     .groupBy("lang", "bucket", "g")
     .agg(collect_list(col("e")).as("entries"))
 
-  /** In-bucket all-pairs expansion of a sorted posting-list array —
-    * ids[i] < ids[j] for i < j, so pair order (doc_a < doc_b) is free.
-    * (Kept only as the r16 probe's BEFORE arm; the shipped path is
-    * [[expandSortedPairs]].) */
-  private[graft] val PairExpansionSql: String =
-    """flatten(transform(entries, (a, i) ->
-      |  transform(slice(entries, i + 2, size(entries)), b ->
-      |    struct(a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |           a.n_bg AS n_a, b.n_bg AS n_b))))""".stripMargin
-
   /** Posting lists longer than this expand as chunk PAIRS behind their own
     * (tiny) exchange instead of one d²/2-row generator call — the
     * VERDICT r16 #3 skew bound. 1024² / 2 ≈ 5·10⁵ rows per generator
@@ -640,17 +630,16 @@ object Dedup {
   /** In-bucket all-pairs expansion of a sorted posting-list `entries`
     * array as ONE codegen generator pass per element: `posexplode` yields
     * (i, ea), then `explode(slice(entries, i+2, n−i−1))` emits exactly the
-    * j > i suffix — n(n−1)/2 generated rows, no rank filter (r17). The two
-    * predecessors both failed a measurement: the r11
-    * `flatten(transform(..., slice(...)))` lambda ([[PairExpansionSql]])
-    * was CodegenFallback — 37 s cold / 60 s aggregate C2 time at sf0.1
-    * (r16 probe) — and the r16 double-`posexplode` + `j > i` filter
-    * generated n² rows to keep half, which the driver board measured at
-    * 51.1 s @32 cores vs 10.4 s @8 on x_jaccard_ngram (VERDICT r16 #1:
-    * 0.095 speedup, core-scaling 0.20; ADVICE r16 blames the n² row
-    * stream and per-row array duplication whenever the Generate pair runs
-    * outside a codegen stage). This form is codegen end to end (`Slice`
-    * is not CodegenFallback), emits only the upper triangle, and carries
+    * j > i suffix — n(n−1)/2 generated rows, no rank filter. Two
+    * alternative shapes measure worse: a higher-order lambda
+    * (`flatten(transform(entries, (a, i) -> transform(slice(...))))`) is
+    * CodegenFallback — 37 s cold / 60 s aggregate C2 time on
+    * x_jaccard_ngram at sf0.1 — and a double `posexplode` with a `j > i`
+    * filter generates n² rows to keep half, which runs x_jaccard_ngram at
+    * 51.1 s on 32 cores vs 10.4 s on 8 (the n² row stream and per-row
+    * array duplication whenever the Generate pair runs outside a codegen
+    * stage). This form is codegen end to end (`Slice` is not
+    * CodegenFallback), emits only the upper triangle, and carries
     * no rank columns downstream. Rows produced are identical: `entries`
     * is sorted ascending by (doc_id, n_bg) with one entry per doc, so
     * `i < j` ⇔ `doc_a < doc_b`. `carry` columns ride along unchanged.

@@ -2,8 +2,15 @@ package graft.assess
 
 import graft.{SparkEntry, TestSpark}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter,
+  QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan contracts — the properties that decide whether these plans
@@ -346,6 +353,106 @@ class PlanSpec extends AnyFunSuite {
       assert(spark.sharedState.cacheManager.isEmpty,
         s"$q left cached plans behind")
     }
+  }
+
+  /** Every node of an executed plan, reading through AQE wrappers and
+    * query stages (whose children are hidden behind `.plan`). */
+  private def nodesOf(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodesOf(a.executedPlan)
+    case q: QueryStageExec => q +: nodesOf(q.plan)
+    case _ => p +: p.children.flatMap(nodesOf)
+  }
+
+  /** The first node under `p` that is not a codegen, columnar or query
+    * stage wrapper — what an exchange actually reads. */
+  @scala.annotation.tailrec
+  private def unwrap(p: SparkPlan): SparkPlan = p match {
+    case w: WholeStageCodegenExec => unwrap(w.child)
+    case i: InputAdapter => unwrap(i.child)
+    case c: ColumnarToRowExec => unwrap(c.child)
+    case q: QueryStageExec => unwrap(q.plan)
+    case _ => p
+  }
+
+  test("cached frames get data-sized partitions, no exchange above a cache") {
+    // Persisted frames are AQE-coalesced like any other exchange output:
+    // without that the gram index keeps all 256 initialPartitionNum
+    // partitions and every scan of it runs 256 tasks for a few KB
+    spark.catalog.clearCache()
+    val df = graft.ext.Dedup.xJaccardNgramPlan(spark, dir)
+    df.collect()
+    val scans = nodesOf(df.queryExecution.executedPlan).collect {
+      case s: InMemoryTableScanExec => s
+    }
+    val index = scans.filter(_.output.exists(_.name == "entries"))
+    assert(index.nonEmpty, s"gram index cache scan missing:\n${
+      df.queryExecution.executedPlan.toString.take(3000)}")
+    val maxParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    index.foreach { s =>
+      val n = s.relation.cacheBuilder.cachedColumnBuffers.getNumPartitions
+      assert(n <= maxParts,
+        s"cached gram index has $n partitions, shuffle.partitions $maxParts")
+    }
+    spark.catalog.clearCache()
+    // the coalesced cache must not make consumers re-shuffle it: capture
+    // every executed plan the four persisted-frame queries run (caches are
+    // released inside the query, so the returned frame shows none of them)
+    val plans = scala.collection.mutable.ArrayBuffer.empty[(String, SparkPlan)]
+    val markerDf = spark.range(1).toDF()
+    val markerQe = markerDf.queryExecution
+    var marker = false
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized {
+          if (qe eq markerQe) marker = true
+          else plans += f -> qe.executedPlan
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      for (q <- Seq("x_jaccard_ngram", "x_lsh_recall", "x_multiband_recall",
+          "x_jaccard_recall"))
+        SparkEntry.queries(q)(spark, dir).collect()
+      // listener events arrive in order: once the marker action is seen,
+      // every plan the queries ran has been recorded
+      markerDf.collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!plans.synchronized(marker) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(plans.synchronized(marker), "execution listener never drained")
+    } finally spark.listenerManager.unregister(listener)
+    val cached = plans.filter { case (_, p) =>
+      nodesOf(p).exists(_.isInstanceOf[InMemoryTableScanExec]) }
+    assert(cached.nonEmpty, "the persisted-frame queries read no cache")
+    for ((f, p) <- cached; e <- nodesOf(p).collect { case e: Exchange => e })
+      assert(!unwrap(e.child).isInstanceOf[InMemoryTableScanExec],
+        s"$f: exchange directly above a cache scan:\n${p.toString.take(3000)}")
+  }
+
+  test("repeated dedup queries reuse their generated classes") {
+    // the codegen class cache must hold a session's working set: at Spark's
+    // default of 100 entries one pass of these queries evicts its own
+    // classes and the next pass compiles them all again. A repeat may
+    // still compile a few classes: AQE re-plans in stage-completion order,
+    // so a run can produce a stage plan (a join turned broadcast inside a
+    // different stage) that no earlier run did. Two warm rounds see most
+    // of those variants; what is left is bounded well below a pass.
+    val qs = Seq("x_jaccard_ngram", "x_minhash_pairs_multiband",
+      "x_curate_corpus")
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    def round(): Seq[(String, Long)] = qs.map { q =>
+      val before = compiles.getCount
+      SparkEntry.queries(q)(spark, dir).collect()
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+      q -> (compiles.getCount - before)
+    }
+    round()
+    round()
+    val fresh = round()
+    assert(fresh.map(_._2).sum <= 10,
+      s"a warm round compiled classes afresh: $fresh")
   }
 
   test("sequence packing: sharded window, never a single-partition funnel") {
