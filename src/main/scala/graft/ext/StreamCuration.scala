@@ -25,24 +25,6 @@ object StreamCuration {
 
   type Q = (SparkSession, String) => DataFrame
 
-  // TEMP r17 diagnostics (env-gated, removed before round close)
-  private val Trace = sys.env.contains("SPARK_GRAFT_TRACE")
-  private def gcMs: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).sum
-  }
-  private def jitMs: Long = java.lang.management.ManagementFactory
-    .getCompilationMXBean.getTotalCompilationTime
-  private def t[T](name: String)(f: => T): T =
-    if (!Trace) f else {
-      val (g0, j0, t0) = (gcMs, jitMs, System.nanoTime())
-      val r = f
-      System.err.println(f"[trace] $name: ${(System.nanoTime() - t0) / 1e9}%.3f s" +
-        f" (gc ${(gcMs - g0) / 1e3}%.1f s, jit ${(jitMs - j0) / 1e3}%.1f s)")
-      r
-    }
-
   private lazy val scratchRoot: java.nio.file.Path = {
     val root = java.nio.file.Files.createTempDirectory("graft_doc_stream_")
     def rm(f: java.io.File): Unit = {
@@ -52,20 +34,28 @@ object StreamCuration {
     root
   }
 
-  /** A session-scoped clone for the streaming leg: streaming state stores
-    * are one instance PER shuffle partition PER micro-batch, and their
-    * open/commit overhead — not the data — dominates an eval-sized run
-    * (measured r14 at sf0.1: 32 partitions ≈ 35 s, 8 partitions ≈ 12 s,
-    * verdicts identical). `newSession()` shares the SparkContext but owns
-    * its conf, so the reduction never leaks to queries running concurrently
-    * on the caller's session (ADVICE r14 #3 — the old in-place
-    * set/restore was a multi-tenant footgun). A real deployment sizes this
-    * to its ingest volume. */
-  private def streamSession(s: SparkSession, partitions: Int): SparkSession = {
-    val ss = graft.Graft.configure(s.newSession())
-    ss.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    ss
-  }
+  /** The session every streaming query runs under: the caller's session
+    * with 8 shuffle partitions. Streaming state stores are one instance
+    * per shuffle partition per micro-batch, and their open/commit overhead,
+    * not the data, dominates an eval-sized run (at sf0.1: 32 partitions
+    * ≈ 35 s, 8 ≈ 12 s, verdicts identical). A real deployment sizes this
+    * to its ingest volume. `newSession()` shares the SparkContext but owns
+    * its conf, so the setting never leaks to queries running on the
+    * caller's session. One child is kept per parent (weakly, so it goes
+    * with the parent): a fresh child per call would get a fresh executor
+    * class loader, and Spark's codegen cache, keyed by class loader, would
+    * compile every batch leg's classes again. */
+  private val streamSessions =
+    new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  private def streamSession(s: SparkSession): SparkSession =
+    streamSessions.synchronized {
+      streamSessions.computeIfAbsent(s, { _ =>
+        val ss = graft.Graft.configure(s.newSession())
+        ss.conf.set("spark.sql.shuffle.partitions", "8")
+        ss
+      })
+    }
 
   /** Watermark-bounded streaming dedup on `keys`: the first arrival of a
     * key is emitted, later arrivals are dropped while the key's state is
@@ -86,17 +76,12 @@ object StreamCuration {
     val ckpt = s"$tmp/ckpt"
     val src = s"$dir/documents.parquet"
     val batchSchema = s.read.parquet(src).schema
-    // r17: the stateful dedup runs under [[streamSession]] like every other
-    // streaming query — the stream previously inherited the BATCH session's
-    // shuffle.partitions (= core count locally), so `local[32]` opened 32
-    // dropDuplicates state stores per micro-batch where `local[8]` opened 8;
-    // the driver's r16 scaling block measured exactly that as 9.4 s @32 vs
-    // 3.0 s @8 for this query (PERF_r16 scaling 0.32). The state-store count
-    // is the deployment's ingest-volume knob (r14 measurement: 32 stores
-    // ≈ 35 s vs 8 ≈ 12 s at sf0.1), not something the batch core count
-    // should set implicitly; results are partition-count-invariant (keyed
-    // dedup), which the unchanged oracle pins.
-    val ss = streamSession(s, 8)
+    // The state-store count is the deployment's ingest-volume knob, not
+    // the batch core count: on the caller's session `local[32]` opened 32
+    // dropDuplicates stores per micro-batch (9.4 s against 3.0 s at
+    // `local[8]`). Results are partition-count-invariant (keyed dedup),
+    // which the oracle pins.
+    val ss = streamSession(s)
     // The file source streams the parent DIRECTORY with a glob pinned to
     // the one table file (same idiom as the capture round trips).
     val raw = ss.readStream.schema(batchSchema)
@@ -119,25 +104,18 @@ object StreamCuration {
     // `ing_ts` is processing time — the batch-epoch timestamp, constant
     // within a micro-batch, so eviction is keyed to ingest age exactly
     // like a production crawl feed would key it.
-    val q = t("curate stream") {
-      val q0 = boundedDedup(
-          curate(raw).withColumn("ing_ts", current_timestamp()),
-          "1 hour", "lang", "fp")
-        .select("doc_id", "lang", "fp", "n_tok")
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .partitionBy("lang")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q0.awaitTermination()
-      q0
-    }
-    if (Trace) q.recentProgress.foreach { p =>
-      System.err.println(s"[trace]   batch ${p.batchId}: " +
-        s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-    }
+    val q = boundedDedup(
+        curate(raw).withColumn("ing_ts", current_timestamp()),
+        "1 hour", "lang", "fp")
+      .select("doc_id", "lang", "fp", "n_tok")
+      .writeStream
+      .format("parquet")
+      .option("path", out)
+      .option("checkpointLocation", ckpt)
+      .partitionBy("lang")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
     // The dedup window is 1 hour of PROCESSING time while the oracle is
     // global dedup: a run whose micro-batches straddle the window (paused
     // or pathologically slow eval) would re-admit duplicates and go
@@ -156,8 +134,8 @@ object StreamCuration {
     // matches the table layout) must not pass as an empty-but-green result.
     // The expected count comes from the batch view of the same source
     // through the same curation filters.
-    val expected = t("curate expected count")(curate(s.read.parquet(src))
-      .select("lang", "fp").distinct().count())
+    val expected = curate(s.read.parquet(src))
+      .select("lang", "fp").distinct().count()
     if (expected == 0L) {
       // Legitimately-empty source (every doc below the floor): the sink may
       // hold no data files at all, so return the typed empty aggregate
@@ -171,7 +149,7 @@ object StreamCuration {
         .add("doc_id", "long").add("fp", "string")
         .add("n_tok", "long").add("lang", "string"))
       .parquet(out)
-    val backCount = t("curate sink count")(back.count())
+    val backCount = back.count()
     require(backCount == expected,
       s"stream curate round trip: sink has $backCount rows, " +
         s"batch view expects $expected (source $src)")
@@ -276,6 +254,13 @@ object StreamCuration {
     * `ttlBatches` is denominated in. */
   private val BatchIntervalMs = 2000L
 
+  /** Staged ingest time of micro-batch 0, a fixed instant in the past. Only
+    * differences between staged times matter (replay order, TTL ages,
+    * FileStreamSource's `maxFileAge` counts from the newest file), and a
+    * constant keeps the staging write's generated code the same on every
+    * call, so its classes come from the codegen cache. */
+  private val StagingEpochMs = 1700000000000L
+
   /** Default staging/TTL knobs, single-sourced with the TTL oracle SQL
     * (ADVICE r15: the oracle hard-wired `range(0, 4)` and `* 4) // n`
     * while the query parameterized both — a future default change would
@@ -321,40 +306,35 @@ object StreamCuration {
 
   /** Stage `batches` of the pre-assigned frame as parquet files under
     * `src`, one per micro-batch, each row carrying (seq, doc_id, text,
-    * ts). Distinct mtimes pin replay order (FileStreamSource orders by
-    * timestamp). Returns the staged epoch-ms base `t0`.
+    * ts), with `ts = StagingEpochMs + batch · BatchIntervalMs`. Distinct,
+    * increasing mtimes pin replay order (FileStreamSource orders by
+    * timestamp), so each file's mtime is its batch's `ts`.
     *
-    * r16: ONE dynamic-partitioned write stages every batch in a single
-    * pass (was one filter + coalesce(1) + write JOB per batch — nBatches
-    * corpus scans; at 100 TB staging must be one pass, and on the board it
-    * was 3 extra jobs per streaming query). `repartition(col("batch"))`
-    * sends each batch's rows to exactly one task, so every `batch=i`
-    * directory holds exactly one part file — the same one-file-per-batch
-    * layout as before; the per-row `ts` is the same `t0 + batch·interval`
-    * arithmetic the per-batch `lit(ts)` produced. Row ORDER within a file
-    * may differ from the coalesce(1) era, which is immaterial by
-    * construction: the admission gate sorts each state group by `seq` and
-    * the verdict frame is an aggregate (the spec pins both). */
+    * ONE dynamic-partitioned write stages every batch in a single pass.
+    * `repartition(col("batch"))` sends each batch's rows to exactly one
+    * task, so every `batch=i` directory holds exactly one part file. Row
+    * ORDER within a file is immaterial by construction: the admission gate
+    * sorts each state group by `seq` and the verdict frame is an aggregate
+    * (the spec pins both). */
   private def writeBatches(batched: DataFrame, src: java.io.File,
-                           batches: Range): Long = {
-    val t0 = System.currentTimeMillis() - 3600 * 1000L
+                           batches: Range): Unit = {
     val stage = s"${src.getParent}/stage_${src.getName}"
     batched.filter(col("batch").isInCollection(batches))
       .select(col("seq"), col("doc_id"), col("text"),
-        (lit(t0) + col("batch").cast("long") * lit(BatchIntervalMs))
+        (lit(StagingEpochMs) + col("batch").cast("long") * lit(BatchIntervalMs))
           .as("ts"), col("batch"))
       .repartition(col("batch"))
       .write.mode("overwrite").partitionBy("batch").parquet(stage)
     batches.foreach { i =>
       val part = new java.io.File(s"$stage/batch=$i")
-      val ts = t0 + i * BatchIntervalMs
+      val ts = StagingEpochMs + i * BatchIntervalMs
       val file = Option(part.listFiles).getOrElse(Array.empty[java.io.File])
         .find(_.getName.endsWith(".parquet"))
         .getOrElse {
           // a batch with no rows writes no batch=i directory under the
-          // dynamic-partitioned write — stage the empty file explicitly
-          // (the pre-r16 per-batch writer emitted one); only reachable on
-          // degenerate fixtures, never the driver defaults
+          // dynamic-partitioned write — stage an empty file explicitly;
+          // only reachable on degenerate fixtures, never the driver
+          // defaults
           batched.filter(lit(false))
             .select(col("seq"), col("doc_id"), col("text"),
               lit(ts).as("ts"))
@@ -372,7 +352,6 @@ object StreamCuration {
         s"cannot pin mtime on $dst — micro-batch replay order would be " +
           "undefined")
     }
-    t0
   }
 
   /** The streaming OR-LSH admission core shared by every variant: a file-
@@ -477,20 +456,13 @@ object StreamCuration {
         grouped.flatMapGroupsWithState[BandState, BandFlag](
           OutputMode.Append(), timeout)(fn)
     }
-    val q = t(s"stream ${src.getName}") {
-      val q0 = flagged.writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q0.awaitTermination()
-      q0
-    }
-    if (Trace) q.recentProgress.foreach { p =>
-      System.err.println(s"[trace]   batch ${p.batchId}: " +
-        s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-    }
+    val q = flagged.writeStream
+      .format("parquet")
+      .option("path", out)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
     val stateRows = q.recentProgress.toSeq
       .flatMap(p => p.stateOperators.headOption.map(_.numRowsTotal))
     val back = s.read.schema(
@@ -500,7 +472,7 @@ object StreamCuration {
     // Loud completeness guard: every doc must have emitted every band —
     // a lost micro-batch or silent 0-row stream fails here, not as a
     // subtly-wrong verdict frame.
-    val backCount = t("sink guard count")(back.count())
+    val backCount = back.count()
     require(backCount == nDocs * bands,
       s"stream neardup: sink has $backCount band flags, " +
         s"expected $nDocs docs x $bands bands (source $src)")
@@ -556,13 +528,13 @@ object StreamCuration {
                      staging: Staging = Staging.DocId): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "neardup_")
     val src = new java.io.File(s"$tmp/in"); src.mkdirs()
-    val ss = streamSession(s, 8)
+    val ss = streamSession(s)
     val docs = loadDocs(ss, dir)
-    val nDocs = t("docs.count")(docs.count()) // one count serves staging AND the sink guard
-    t("writeBatches")(writeBatches(batchedFrame(docs, nBatches, staging, nDocs), src,
-      0 until nBatches))
-    val (flags, _) = t("runNeardupStream total")(runNeardupStream(ss, src, tmp, bands, nDocs,
-      ttlBatches = None, initState = None))
+    val nDocs = docs.count() // one count serves staging AND the sink guard
+    writeBatches(batchedFrame(docs, nBatches, staging, nDocs), src,
+      0 until nBatches)
+    val (flags, _) = runNeardupStream(ss, src, tmp, bands, nDocs,
+      ttlBatches = None, initState = None)
     verdictFrame(flags)
   }
 
@@ -598,7 +570,7 @@ object StreamCuration {
         "StreamingQueryListener to accumulate per-batch numRowsTotal")
     val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "ndttl_")
     val src = new java.io.File(s"$tmp/in"); src.mkdirs()
-    val ss = streamSession(s, 8)
+    val ss = streamSession(s)
     val docs = loadDocs(ss, dir)
     val nDocs = docs.count() // one count serves staging AND the sink guard
     writeBatches(batchedFrame(docs, nBatches, staging, nDocs), src,
@@ -630,7 +602,7 @@ object StreamCuration {
     val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "ndcomp_")
     val src1 = new java.io.File(s"$tmp/in1"); src1.mkdirs()
     val src2 = new java.io.File(s"$tmp/in2"); src2.mkdirs()
-    val ss = streamSession(s, 8)
+    val ss = streamSession(s)
     import ss.implicits._
     val docs = loadDocs(ss, dir)
     // ONE batch assignment for the whole corpus, then the two runs stream

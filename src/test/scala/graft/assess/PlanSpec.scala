@@ -438,8 +438,12 @@ class PlanSpec extends AnyFunSuite {
     // so a run can produce a stage plan (a join turned broadcast inside a
     // different stage) that no earlier run did. Two warm rounds see most
     // of those variants; what is left is bounded well below a pass.
+    // x_stream_neardup has its own bound: its batch legs run on one reused
+    // stream session and hit the cache, but every streaming start clones
+    // that session, and the clone's class loader compiles the stream's
+    // classes again (a fresh child session per call compiled about 40).
     val qs = Seq("x_jaccard_ngram", "x_minhash_pairs_multiband",
-      "x_curate_corpus")
+      "x_curate_corpus", "x_stream_neardup")
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     def round(): Seq[(String, Long)] = qs.map { q =>
       val before = compiles.getCount
@@ -451,8 +455,11 @@ class PlanSpec extends AnyFunSuite {
     round()
     round()
     val fresh = round()
-    assert(fresh.map(_._2).sum <= 10,
+    val (stream, batch) = fresh.partition(_._1 == "x_stream_neardup")
+    assert(batch.map(_._2).sum <= 10,
       s"a warm round compiled classes afresh: $fresh")
+    assert(stream.map(_._2).sum <= 20,
+      s"a warm x_stream_neardup compiled classes afresh: $fresh")
   }
 
   test("sequence packing: sharded window, never a single-partition funnel") {
