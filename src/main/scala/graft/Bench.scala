@@ -22,19 +22,14 @@ object Bench {
         .orderBy(col("count"))
         .queryExecution.toRdd.count()
     }
-    // r16 warmup extension (same contract as the block above — one-time
-    // session costs must not land in whichever query happens to run first;
-    // methodology note in OPTIMIZATION_r16.md "Measure first"). The board's
-    // dedup/curation families run interpreted higher-order array lambdas
-    // (CodegenFallback) whose FIRST heavy use triggers a C2 compile-storm:
-    // measured this round at sf0.1, the pair-expansion path read 37 s cold
-    // (60 s of aggregate JIT compiler time) vs 1.8 s warm, and the
-    // alphabetically-first family member absorbed it (x_jaccard_ngram
-    // 23-36 s board vs 3-4 s isolated-warm on the same host). Exercise the
-    // shared machinery on 64 synthetic docs: lambda interpreter (transform/
-    // aggregate/filter), generators (explode/posexplode), array set ops,
-    // struct collect_list + sort_array, window, serialized persist, JSON,
-    // levenshtein — all byte-count-trivial, all off the clock.
+    // Same contract for the dedup and curation families: the first heavy
+    // use of their shared machinery pays JIT compile time that would land
+    // in whichever family member runs first (the pair expansion read 37 s
+    // cold vs 1.8 s warm at sf0.1 when it ran interpreted). Exercise it on
+    // 64 synthetic docs: lambda interpreter (transform/aggregate/filter),
+    // generators (explode/posexplode), array set ops, struct collect_list
+    // + sort_array, window, serialized persist, JSON, levenshtein — all
+    // byte-count-trivial, all off the clock.
     locally {
       import org.apache.spark.sql.functions._
       val docs = spark.range(0, 64)
@@ -54,27 +49,18 @@ object Bench {
           lit(8L).cast("bigint").as("n_bg"))).as("entries"))
         .filter(size(col("entries")).between(2, 64))
         .select(sort_array(col("entries")).as("entries"))
-      val pairs = postings
-        .select(col("entries"), posexplode(col("entries")).as(Seq("i", "ea")))
-        .select(col("i"), col("ea"),
-          posexplode(col("entries")).as(Seq("j", "eb")))
-        .filter(col("j") > col("i"))
-        .groupBy(col("ea.doc_id").as("doc_a"), col("eb.doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("ni"))
-      pairs.queryExecution.toRdd.count()
-      // r17 warmup addition (same contract — untimed, synthetic): the
-      // upper-triangle generator shape the pair expansion now uses
+      // the upper-triangle generator shape the pair expansion uses
       // (posexplode + explode(slice(suffix))) and the typed-Dataset
       // boundary (encoder codegen + Deserialize/Serialize) the native
-      // gram/signature flatMaps run through.
-      val pairs2 = postings
+      // gram/signature flatMaps run through
+      val pairs = postings
         .select(col("entries"), posexplode(col("entries")).as(Seq("i", "ea")))
         .select(col("ea"), explode(slice(col("entries"), col("i") + lit(2),
           greatest(size(col("entries")) - col("i") - lit(1), lit(0))))
           .as("eb"))
         .groupBy(col("ea.doc_id").as("doc_a"), col("eb.doc_id").as("doc_b"))
         .agg(count(lit(1)).as("ni"))
-      pairs2.queryExecution.toRdd.count()
+      pairs.queryExecution.toRdd.count()
       locally {
         import spark.implicits._
         spark.range(0, 64).selectExpr("id", "md5(cast(id AS string)) AS t")
@@ -110,7 +96,7 @@ object Bench {
     // first-use class-loading + JIT; a 16-row file stream through watermark
     // dedup into a parquet sink loads all of it once, off the clock.
     locally {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bench_warm_")
+      val tmp = Graft.scratchDir("bench_warm_")
       val src = s"$tmp/in"
       spark.range(0, 16)
         .selectExpr("id", "timestamp_micros(id * 1000000) AS ts")
@@ -123,10 +109,6 @@ object Bench {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(tmp.toFile)
     }
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"

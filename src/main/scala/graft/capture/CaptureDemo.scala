@@ -1,6 +1,6 @@
 package graft.capture
 
-import graft.Tables
+import graft.{Graft, Tables}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -79,36 +79,6 @@ object CaptureDemo {
       .orderBy("event_id")
   }
 
-  /** One scratch root + ONE shutdown hook for the process: bench, verify
-    * and test runs invoke [[capStream]] repeatedly, and registering a hook
-    * per call accumulated hooks and undeleted temp dirs for the JVM
-    * lifetime. The returned frame reads its subdir lazily, so per-call
-    * eager deletion is not possible — exit-time cleanup of the shared root
-    * is. */
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft_cap_stream_")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    sys.addShutdownHook(rm(root.toFile))
-    root
-  }
-
-  /** Stateful streaming queries allocate ONE state store per shuffle
-    * partition per stateful operator, and every micro-batch pays a
-    * load/commit round per store — for a bounded round trip whose state is
-    * a few thousand keys, 32 stores are pure fixed overhead (measured:
-    * cap_stream_join spends most of its wall clock there). Run the
-    * STREAMING part under a smaller partition count and restore the
-    * session conf after; at production scale this knob is sized to state
-    * volume, not left at the batch default. */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, old)
-  }
-
   /** End-to-end streaming capture demo (VERDICT r3 stretch): the events
     * table is replayed as a FILE STREAM through a capture projection
     * (QueryEvent columns, status classification, counters-as-JSON) into the
@@ -121,7 +91,7 @@ object CaptureDemo {
     * hash). Each call uses a fresh temp log + checkpoint: the run IS the
     * test of the commit protocol. */
   def capStream(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "run_")
+    val tmp = Graft.scratchDir("run_")
     val out = s"$tmp/log"
     val ckpt = s"$tmp/ckpt"
     val src = s"$dir/events.parquet"
@@ -173,12 +143,12 @@ object CaptureDemo {
     * only if the stream emitted every event exactly once despite the
     * injected duplication. */
   def capStreamDedup(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "dedup_")
+    val tmp = Graft.scratchDir("dedup_")
     val out = s"$tmp/log"
     val ckpt = s"$tmp/ckpt"
     val src = s"$dir/events.parquet"
     val batchSchema = s.read.parquet(src).schema
-    val raw = s.readStream.schema(batchSchema)
+    val raw = Graft.streamSession(s).readStream.schema(batchSchema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
     val ts = batchSchema("ts").dataType.typeName match {
@@ -198,11 +168,8 @@ object CaptureDemo {
       col("event_time").as("EndTime"),
       lit("SUCCESS").as("Status"),
       to_json(struct(col("value").as("value"))).as("CountersObject"))
-    withShufflePartitions(s, 8) {
-      val q = graft.sink.EventSink.writeStream(records, out, ckpt,
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
-    }
+    graft.sink.EventSink.writeStream(records, out, ckpt,
+      org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination()
     val back = graft.sink.EventSink.read(s, out)
     require(!back.isEmpty,
       s"cap_stream_dedup round trip read back 0 rows from $out (source $src)")
@@ -227,12 +194,13 @@ object CaptureDemo {
     * event exactly once — nothing dropped at the watermark, nothing
     * emitted twice. */
   def capStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "join_")
+    val tmp = Graft.scratchDir("join_")
     val out = s"$tmp/log"
     val ckpt = s"$tmp/ckpt"
     val src = s"$dir/events.parquet"
     val batchSchema = s.read.parquet(src).schema
-    def stream() = s.readStream.schema(batchSchema)
+    val ss = Graft.streamSession(s)
+    def stream() = ss.readStream.schema(batchSchema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
     def tsCol = batchSchema("ts").dataType.typeName match {
@@ -270,11 +238,8 @@ object CaptureDemo {
       col("done_ts").as("EndTime"),
       lit("SUCCESS").as("Status"),
       to_json(struct(col("latency_s").as("latency_s"))).as("CountersObject"))
-    withShufflePartitions(s, 8) {
-      val q = graft.sink.EventSink.writeStream(records, out, ckpt,
-        org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      q.awaitTermination()
-    }
+    graft.sink.EventSink.writeStream(records, out, ckpt,
+      org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination()
     val back = graft.sink.EventSink.read(s, out)
     require(!back.isEmpty,
       s"cap_stream_join round trip read back 0 rows from $out (source $src)")
@@ -332,7 +297,7 @@ object CaptureDemo {
     val probed = runTaggedProbes(s, tag, n = 3, expected = 6)
       .filter(_.EventType.contains(graft.model.EventType.QueryCompleted.name))
     require(probed.size == 3, s"expected 3 probe captures, got ${probed.size}")
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "livehook_")
+    val tmp = Graft.scratchDir("livehook_")
     import s.implicits._
     graft.sink.EventSink.writeBatchWithRetry(
       s.createDataset(probed).toDF(), s"$tmp/log")
@@ -354,7 +319,7 @@ object CaptureDemo {
   def capLiveLifecycle(s: SparkSession, dir: String): DataFrame = {
     val tag = s"graft_life_${java.util.UUID.randomUUID().toString.take(8)}"
     val events = runTaggedProbes(s, tag, n = 3, expected = 6)
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "livelife_")
+    val tmp = Graft.scratchDir("livelife_")
     import s.implicits._
     graft.sink.EventSink.writeBatchWithRetry(
       s.createDataset(events).toDF(), s"$tmp/log")
@@ -428,7 +393,7 @@ object CaptureDemo {
       SparkCaptureListener.uninstall(s, l)
       scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $table"))
     }
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "livent_")
+    val tmp = Graft.scratchDir("livent_")
     import s.implicits._
     graft.sink.EventSink.writeBatchWithRetry(
       s.createDataset(events.toSeq).toDF(), s"$tmp/log")
@@ -482,7 +447,7 @@ object CaptureDemo {
     * completion event can have. */
   def capLiveFail(s: SparkSession, dir: String): DataFrame = {
     val tag = s"boom_${java.util.UUID.randomUUID().toString.take(8)}"
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "livefail_")
+    val tmp = Graft.scratchDir("livefail_")
     val log = s"$tmp/log"
     val drainer = new CaptureDrainer(s, log, intervalMs = 250L)
     try {
@@ -544,7 +509,7 @@ object CaptureDemo {
     * — exactly-once end-to-end. */
   def capLiveMulti(s: SparkSession, dir: String): DataFrame = {
     val tag = s"graft_multi_${java.util.UUID.randomUUID().toString.take(8)}"
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "livemulti_")
+    val tmp = Graft.scratchDir("livemulti_")
     val base = new java.io.File(s"$tmp/log"); base.mkdirs()
     val schema = graft.sink.AvroEventSink.avroSchema
     val names = graft.model.QueryEvent.schema.fieldNames
@@ -638,21 +603,21 @@ object CaptureDemo {
     * partition, constant regardless of stream length — the top-talkers
     * monitor a 100 TB/day stream can actually afford. */
   def capStreamTopk(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "topk_")
+    val tmp = Graft.scratchDir("topk_")
     val src = s"$tmp/keys"
     val k = 16
     val keyed = graft.ext.SqlSurface.hotColdKeys(s, dir)
     keyed.repartition(4).write.mode("overwrite").parquet(src)
-    val est = withShufflePartitions(s, 8) {
-      val stream = s.readStream.schema("key STRING")
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .agg(graft.functions.FreqSketchMG.freqSketch(k)(col("key")).as("m"))
-      val q = stream.writeStream.format("memory").queryName("graft_topk")
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_topk").select(explode(col("m")).as(Seq("key", "est")))
-        .localCheckpoint() // detach from the stopped memory sink
-    }
+    val ss = Graft.streamSession(s)
+    val q = ss.readStream.schema("key STRING")
+      .option("maxFilesPerTrigger", "1").parquet(src)
+      .agg(graft.functions.FreqSketchMG.freqSketch(k)(col("key")).as("m"))
+      .writeStream.format("memory").queryName("graft_topk")
+      .outputMode("complete").start()
+    try q.processAllAvailable() finally q.stop()
+    val est = ss.table("graft_topk")
+      .select(explode(col("m")).as(Seq("key", "est")))
+      .localCheckpoint() // detach from the stopped memory sink
     require(!est.isEmpty, s"cap_stream_topk: empty sketch from $src")
     val exact = keyed.groupBy("key").agg(count(lit(1)).as("n_exact"))
     graft.ext.SqlSurface.hotKeyVerdict(exact, est, k)
@@ -668,7 +633,7 @@ object CaptureDemo {
     * ORIGINAL table, so the hash is green only if the container encode →
     * layout → distributed decode chain lost and duplicated nothing. */
   def capAvroRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "avro_")
+    val tmp = Graft.scratchDir("avro_")
     val log = s"$tmp/log"
     val records = graft.Tables.events(s, dir)
       .filter(col("ts").isNotNull && col("event_type").isNotNull &&
@@ -706,7 +671,7 @@ object CaptureDemo {
     * event log runs to restore exactly-once semantics after retried
     * commits. */
   def capLogCompact(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "compact_")
+    val tmp = Graft.scratchDir("compact_")
     val log = s"$tmp/log"
     val records = graft.Tables.events(s, dir)
       .filter(col("ts").isNotNull && col("event_type").isNotNull)

@@ -327,7 +327,8 @@ object Curation {
     * that AQE can skew-split. Nothing is ever collected or broadcast at
     * corpus scale. */
   def xNgramNovelty(s: SparkSession, dir: String): DataFrame = {
-    val sh = docShingleRows(s, dir).localCheckpoint()
+    val sh = Grams.shingleRows(Tables.load(s, dir, "documents"))
+      .localCheckpoint()
     val first = sh.groupBy("shingle").agg(min("doc_id").as("first_doc"))
     sh.join(first, "shingle")
       .groupBy("doc_id")
@@ -438,10 +439,7 @@ object Curation {
     * shingle-level checkpoint vs recompute — spill to a checkpoint dir at
     * cluster scale). */
   def xCorpusOverlap(s: SparkSession, dir: String): DataFrame = {
-    val ss = Tables.load(s, dir, "documents")
-      .select(col("source"), split(col("text"), " ").as("toks"))
-      .select(col("source"),
-        explode(array_distinct(Dedup.shingles(col("toks")))).as("shingle"))
+    val ss = Grams.shingleRows(Tables.load(s, dir, "documents"), "source")
       .distinct()
       .localCheckpoint()
     val sizes = ss.groupBy("source").agg(count(lit(1)).as("n_a"))
@@ -593,13 +591,14 @@ object Curation {
       .orderBy("doc_id", "rk")
   }
 
-  private def docShingleRows(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      // split projected separately so it isn't cloned into every
-      // element_at of the shingle lambda (see SqlSurface.xSqlKmv)
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"),
-        explode(array_distinct(Dedup.shingles(col("toks")))).as("shingle"))
+  /** Shingle rows of the eval docs (0–9) and of the rest of the corpus,
+    * each side filtered at the scan, before shingling. */
+  private def evalSplit(s: SparkSession,
+                        dir: String): (DataFrame, DataFrame) = {
+    val docs = Tables.load(s, dir, "documents")
+    (Grams.shingleRows(docs.filter(col("doc_id") < 10)),
+      Grams.shingleRows(docs.filter(col("doc_id") >= 10)))
+  }
 
   /** Benchmark-decontamination check: count, per corpus document, the
     * 3-gram shingles it shares with an "eval set" (here: docs 0–9 stand in
@@ -608,10 +607,9 @@ object Curation {
     * map-side hash probe — no shuffle of corpus text at any scale. Only
     * contaminated docs surface. */
   def xDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    val sh = docShingleRows(s, dir)
-    val evalSet = sh.filter(col("doc_id") < 10)
-      .select(col("shingle")).distinct()
-    sh.filter(col("doc_id") >= 10)
+    val (evalSh, corpusSh) = evalSplit(s, dir)
+    val evalSet = evalSh.select(col("shingle")).distinct()
+    corpusSh
       .join(broadcast(evalSet), "shingle")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shared"))
@@ -627,10 +625,9 @@ object Curation {
     * makes one pass, and the aggregate keys on the TINY side (eval ids), so
     * the shuffle after the probe is eval-sized, not corpus-sized. */
   def xContaminationReport(s: SparkSession, dir: String): DataFrame = {
-    val sh = docShingleRows(s, dir)
-    val evalSh = sh.filter(col("doc_id") < 10)
-      .select(col("doc_id").as("eval_id"), col("shingle"))
-    sh.filter(col("doc_id") >= 10)
+    val (evalRows, corpusSh) = evalSplit(s, dir)
+    val evalSh = evalRows.select(col("doc_id").as("eval_id"), col("shingle"))
+    corpusSh
       .join(broadcast(evalSh), "shingle")
       .groupBy("eval_id")
       .agg(countDistinct(col("doc_id")).as("n_docs_hit"),
@@ -656,9 +653,8 @@ object Curation {
       org.apache.spark.util.sketch.BloomFilter]]
 
   def xDecontaminateBloom(s: SparkSession, dir: String): DataFrame = {
-    val sh = docShingleRows(s, dir)
-    val evalSet = sh.filter(col("doc_id") < 10)
-      .select(col("shingle")).distinct()
+    val (evalSh, corpusSh) = evalSplit(s, dir)
+    val evalSet = evalSh.select(col("shingle")).distinct()
     // expectedNumItems sized to the eval set (always enumerable: it's the
     // held-out benchmark suite), fpp 0.1% keeps the confirm join's input
     // within 1.001x of the true overlap.
@@ -674,7 +670,7 @@ object Curation {
     }
     val mightOverlap =
       udf((x: String) => x != null && bloomRef.value.mightContain(x))
-    sh.filter(col("doc_id") >= 10)
+    corpusSh
       .filter(mightOverlap(col("shingle")))
       .join(broadcast(evalSet), "shingle")
       .groupBy("doc_id")
@@ -702,7 +698,8 @@ object Curation {
     // checkpoint is ~3x corpus size: spill it to a checkpoint dir (HDFS/
     // object store), or accept the recompute if storage is the binding
     // constraint — the crossover is cluster-specific, re-measure there.
-    val sh = docShingleRows(s, dir).localCheckpoint()
+    val sh = Grams.shingleRows(Tables.load(s, dir, "documents"))
+      .localCheckpoint()
     val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("docs_with"))
     sh.join(dfreq, "shingle")
       .groupBy("doc_id")
@@ -748,7 +745,8 @@ object Curation {
       .agg(count(lit(1)).cast("double").as("n_docs"))
     // Measured r4 at sf0.1: checkpoint 4.4 s, recompute 12.6 s across the
     // four shingle consumers — see xBoilerplate for the 100 TB disposition.
-    val sh = docShingleRows(s, dir).localCheckpoint()
+    val sh = Grams.shingleRows(Tables.load(s, dir, "documents"))
+      .localCheckpoint()
     val evalSet = sh.filter(col("doc_id") < 10)
       .select(col("shingle")).distinct()
     val contaminated = sh.filter(col("doc_id") >= 10)

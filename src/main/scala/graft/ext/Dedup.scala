@@ -36,128 +36,16 @@ object Dedup {
       i => concat_ws(" ", element_at(toks, i),
         try_element_at(toks, i + 1), try_element_at(toks, i + 2)))
 
-  // ---- native (no-CodegenFallback) twins of the gram/shingle lambdas ----
-  //
-  // Higher-order array functions (`transform`/`sequence` lambdas) evaluate
-  // on the interpreted Expression path and are the engine's measured JIT
-  // liability: r16's probe put ~60 s of aggregate C2 compile time on their
-  // first heavy use, and the r17 probe still reads 22 s of compile during
-  // the postings build alone — at `local[32]` the compiler threads compete
-  // with 32 busy task slots, which is exactly the anti-scaling the driver
-  // board measured (VERDICT r16 #1/#4: "make the shingle path native, no
-  // CodegenFallback in the hot fragment"; guide §4). The typed-Dataset
-  // loops below produce BYTE-IDENTICAL rows (same concat_ws null-skip
-  // tail, same first-occurrence distinct order, same md5-hex chunk
-  // arithmetic the DuckDB oracles replay — the [[StreamCuration.bandMins]]
-  // precedent, whose streaming verdicts share the batch oracles).
-
-  /** Distinct n-token grams of a pre-split token array — gram i (1-based)
-    * is `concat_ws(' ', toks[i], …, toks[i+n-1])` with the null-skip tail,
-    * i in 1..max(len-(n-1), 1); first-occurrence order like
-    * `array_distinct`. */
-  private def distinctGrams(toks: Array[String], n: Int): Array[String] = {
-    val len = toks.length
-    val last = math.max(len - (n - 1), 1)
-    val seen = new java.util.LinkedHashSet[String]
-    var i = 0
-    while (i < last) {
-      val sb = new java.lang.StringBuilder(toks(i))
-      var k = 1
-      while (k < n && i + k < len) { sb.append(' ').append(toks(i + k)); k += 1 }
-      seen.add(sb.toString)
-      i += 1
-    }
-    seen.toArray(new Array[String](seen.size))
-  }
-
-  /** Per-band minhash minima over a distinct shingle set: band b of the
-    * signature is the min over shingles of 8-hex-char chunk `b % 4` of
-    * md5(salt ++ shingle), salt = "" for bands 0–3 then "1", "2", … per
-    * digest — the [[signaturesOf]] arithmetic (and DuckDB's), natively.
-    * Lexicographic min on fixed-width lowercase hex equals numeric min,
-    * and String.compareTo on ASCII equals UTF8String binary order. */
-  private def bandMinsOf(shingles: Array[String], bands: Int): Array[String] = {
-    val nHashes = (bands + 3) / 4
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def md5hex(str: String): String = {
-      md.reset()
-      val d = md.digest(str.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val sb = new java.lang.StringBuilder(32)
-      d.foreach { b =>
-        sb.append(Character.forDigit((b & 0xf0) >> 4, 16))
-        sb.append(Character.forDigit(b & 0x0f, 16))
-      }
-      sb.toString
-    }
-    val mins = new Array[String](bands)
-    var s = 0
-    while (s < shingles.length) {
-      val sh = shingles(s)
-      var k = 0
-      while (k < nHashes) {
-        val h = md5hex(if (k == 0) sh else k.toString + sh)
-        var b = k * 4
-        val hi = math.min(bands, k * 4 + 4)
-        while (b < hi) {
-          val c = h.substring(8 * (b % 4), 8 * (b % 4) + 8)
-          if (mins(b) == null || c < mins(b)) mins(b) = c
-          b += 1
-        }
-        k += 1
-      }
-      s += 1
-    }
-    mins
-  }
-
-  /** Native (doc_id, shingle) stream — the typed twin of
-    * `select(doc_id, explode(array_distinct(shingles(toks))))`. */
-  private def distinctShingleRows(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .flatMap { case (id, text) =>
-        if (text == null) Iterator.empty
-        else distinctGrams(text.split(" ", -1), 3).iterator.map((id, _))
-      }
-      .toDF("doc_id", "shingle")
-  }
-
-  /** One md5 per distinct shingle; all hash-family members derive from it. */
-  def shingleHashes(shingleCol: Column): Column =
-    transform(array_distinct(shingleCol), sh => md5(sh))
-
-  /** MinHash value for band `i`: min over the i-th 8-hex-char chunk of each
-    * shingle's single md5. One digest serves every band (vs. re-hashing with
-    * a per-band salt, which doubles-or-worse the dominant md5 cost — the
-    * 32-bit chunks are independent enough for candidate generation). */
-  def minhash(shingleCol: Column, band: Int): Column =
-    minhashOfHashes(shingleHashes(shingleCol), band)
-
-  def minhashOfHashes(hashes: Column, band: Int): Column =
-    array_min(transform(hashes, h => substring(h, 1 + 8 * band, 8)))
-
   /** Jaccard similarity of two (multi)sets, on distinct elements. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(array_distinct(a), array_distinct(b))).cast("double") /
       size(array_union(a, b))
 
-  private def docsWithShingles(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "documents")
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .withColumn("sh", shingles(col("toks")))
-
-  /** Per-doc band signatures, computed NATIVELY in one narrow map — no
-    * shuffle at all (r17; guide §2.4 "remove shuffles outright" + §4). The
-    * r11–r16 shape exploded distinct shingles and re-aggregated them by
-    * doc_id: the partial aggregation kept the exchange fixed-width, but it
-    * was still an exchange (one row per doc per map partition) and its
-    * shingle lambdas were CodegenFallback — the engine's measured JIT
-    * liability (OPTIMIZATION_r17.md). [[bandMinsOf]] computes the same
-    * md5-chunk minima per doc inside the scan task, so the signature frame
-    * is now scan → flatMap, zero Exchange, no interpreted expressions;
-    * rows are byte-identical (same shingle construction, same salt/chunk
-    * arithmetic, `n_sh` = distinct shingle count as before). */
+  /** Per-doc band signatures (`doc_id, n_sh, b0..`), computed in one
+    * narrow map with no Exchange: [[Grams.bandMins]] takes the md5-chunk
+    * minima per doc inside the scan task, and `n_sh` is the doc's distinct
+    * shingle count. The values are those [[signaturesOf]] aggregates from
+    * an exploded shingle frame. */
   private[ext] def docSignatures(s: SparkSession, dir: String,
                             bands: Int): DataFrame = {
     require(bands >= 1 && bands <= 12, s"bands=$bands outside 1..12")
@@ -168,8 +56,8 @@ object Dedup {
       .flatMap { case (id, text) =>
         if (text == null) Iterator.empty
         else {
-          val sh = distinctGrams(text.split(" ", -1), 3)
-          Iterator.single((id, sh.length.toLong, bandMinsOf(sh, nb)))
+          val sh = Grams.distinct(text.split(" ", -1), 3)
+          Iterator.single((id, sh.length.toLong, Grams.bandMins(sh, nb)))
         }
       }
       .toDF("doc_id", "n_sh", "mins")
@@ -227,7 +115,7 @@ object Dedup {
     // without this it would run twice. Size is O(candidate docs), not corpus.
     // Measured r4 at sf0.1: dropping this costs +0.4 s on x_minhash_pairs
     // and +2.2 s on x_dup_clusters (which replays the whole pipeline).
-    val docShingles = distinctShingleRows(
+    val docShingles = Grams.shingleRows(
       Tables.load(s, dir, "documents")
         .join(broadcast(involved), "doc_id")) // prune BEFORE shingling
       .localCheckpoint()
@@ -350,16 +238,13 @@ object Dedup {
   /** Per-doc MinHash signature (4 bands) — the sketch that downstream LSH
     * passes shuffle instead of text. */
   def xMinhashSignatures(s: SparkSession, dir: String): DataFrame = {
-    // r17: native [[bandMinsOf]] loop (guide §4) — one narrow map, no
-    // interpreted transform lambdas; bands 0–3 chunk the unsalted digest
-    // exactly like minhashOfHashes(shingleHashes(sh), 0..3).
     import s.implicits._
     Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .flatMap { case (id, text) =>
         if (text == null) Iterator.empty
         else {
-          val m = bandMinsOf(distinctGrams(text.split(" ", -1), 3), 4)
+          val m = Grams.bandMins(Grams.distinct(text.split(" ", -1), 3), 4)
           Iterator.single((id, m(0), m(1), m(2), m(3)))
         }
       }
@@ -599,7 +484,7 @@ object Dedup {
           val toks = text.split(" ", -1)
           if (toks.length < 2) Iterator.empty // bigram-less docs can't pair
           else Iterator.single(
-            (id, lang, (toks.length / bw).toLong, distinctGrams(toks, 2)))
+            (id, lang, (toks.length / bw).toLong, Grams.distinct(toks, 2)))
         }
       }
       .toDF("doc_id", "lang", "bucket", "bg")
@@ -627,22 +512,22 @@ object Dedup {
     * the unit fixture, not the board. */
   private[ext] val PairChunkLen = 1024
 
-  /** In-bucket all-pairs expansion of a sorted posting-list `entries`
-    * array as ONE codegen generator pass per element: `posexplode` yields
-    * (i, ea), then `explode(slice(entries, i+2, n−i−1))` emits exactly the
-    * j > i suffix — n(n−1)/2 generated rows, no rank filter. Two
-    * alternative shapes measure worse: a higher-order lambda
-    * (`flatten(transform(entries, (a, i) -> transform(slice(...))))`) is
-    * CodegenFallback — 37 s cold / 60 s aggregate C2 time on
-    * x_jaccard_ngram at sf0.1 — and a double `posexplode` with a `j > i`
-    * filter generates n² rows to keep half, which runs x_jaccard_ngram at
-    * 51.1 s on 32 cores vs 10.4 s on 8 (the n² row stream and per-row
-    * array duplication whenever the Generate pair runs outside a codegen
-    * stage). This form is codegen end to end (`Slice` is not
-    * CodegenFallback), emits only the upper triangle, and carries
-    * no rank columns downstream. Rows produced are identical: `entries`
-    * is sorted ascending by (doc_id, n_bg) with one entry per doc, so
-    * `i < j` ⇔ `doc_a < doc_b`. `carry` columns ride along unchanged.
+  /** `(doc_a, doc_b, n_a, n_b)` of an [[expandSortedPairs]] row over
+    * `(doc_id, n_bg)` posting entries. */
+  private val entryPair = Seq(col("ea.doc_id").as("doc_a"),
+    col("eb.doc_id").as("doc_b"), col("ea.n_bg").as("n_a"),
+    col("eb.n_bg").as("n_b"))
+
+  /** In-bucket all-pairs expansion of a sorted, duplicate-free `entries`
+    * array: one row `(carry…, ea, eb)` per element pair with `ea` before
+    * `eb` in the array, so `ea < eb`. `posexplode` yields (i, ea), then
+    * `explode(slice(entries, i+2, n−i−1))` emits exactly the j > i suffix:
+    * n(n−1)/2 generated rows, no rank filter, codegen end to end (`Slice`
+    * is not CodegenFallback). A `transform` lambda over the array runs
+    * interpreted (37 s cold on x_jaccard_ngram at sf0.1), and a double
+    * `posexplode` with a `j > i` filter generates n² rows to keep half.
+    * Elements are the array's own (structs or bare ids); callers project
+    * the fields they need.
     *
     * `maxLen` is the caller's static bound on `size(entries)` (its df cap
     * or ceiling). When it exceeds [[PairChunkLen]], lists past the chunk
@@ -664,16 +549,11 @@ object Dedup {
         explode(slice(col("__t"), col("i") + lit(2),
           greatest(size(col("__t")) - col("i") - lit(1), lit(0))))
           .as("eb")): _*)
-    def pairs(in: DataFrame): DataFrame = in
-      .select(c ++ Seq(col("ea.doc_id").as("doc_a"),
-        col("eb.doc_id").as("doc_b"),
-        col("ea.n_bg").as("n_a"), col("eb.n_bg").as("n_b")): _*)
-    if (maxLen <= PairChunkLen) pairs(upperTriangle(lists, "entries"))
+    if (maxLen <= PairChunkLen) upperTriangle(lists, "entries")
     else {
       val n = size(col("entries"))
       val kMax = floor((n - lit(1)) / lit(PairChunkLen)).cast("int")
-      val direct = pairs(upperTriangle(
-        lists.filter(n <= PairChunkLen), "entries"))
+      val direct = upperTriangle(lists.filter(n <= PairChunkLen), "entries")
       val chunkPairs = lists.filter(n > PairChunkLen)
         .select(c ++ Seq(col("entries"),
           explode(sequence(lit(0), kMax)).as("ka")): _*)
@@ -688,11 +568,10 @@ object Dedup {
         // spread the d²-mass across tasks — the whole point of chunking;
         // only oversized lists' chunk pairs cross this exchange
         .repartition(col("ca"), col("kb"))
-      val cross = pairs(chunkPairs.filter(!col("diag"))
+      val cross = chunkPairs.filter(!col("diag"))
         .select(c ++ Seq(col("cb"), explode(col("ca")).as("ea")): _*)
-        .select(c ++ Seq(col("ea"), explode(col("cb")).as("eb")): _*))
-      direct.unionByName(pairs(upperTriangle(
-          chunkPairs.filter(col("diag")), "ca")))
+        .select(c ++ Seq(col("ea"), explode(col("cb")).as("eb")): _*)
+      direct.unionByName(upperTriangle(chunkPairs.filter(col("diag")), "ca"))
         .unionByName(cross)
     }
   }
@@ -850,7 +729,7 @@ object Dedup {
     val cand = expandSortedPairs(grouped
         .filter(size(col("entries")).between(2, dfCap))
         .select(sort_array(col("entries")).as("entries")), dfCap)
-      .groupBy("doc_a", "doc_b", "n_a", "n_b")
+      .groupBy(entryPair: _*)
       .agg(count(lit(1)).as("ni_s"))
     val capped = grouped
       .filter(size(col("entries")) > dfCap)
@@ -918,19 +797,16 @@ object Dedup {
     // measured 5.3 s → isolated re-bench after the rewrite. Per-gram work
     // is bounded by dfCap²/2, so candidates still grow linearly with the
     // corpus.
+    // collect_set keeps one entry per doc for a gram the title repeats
     val postings = t
-      .select(col("doc_id"), explode(array_distinct(transform(
-        sequence(lit(1), greatest(length(col("title")) - 7, lit(1))),
-        i => col("title").substr(i, lit(8))))).as("gram"))
-      .groupBy("gram")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) <= dfCap && size(col("ids")) >= 2)
-    val cand = postings
-      .select(explode(expr(
-        """flatten(transform(ids, (a, i) ->
-          |  transform(slice(ids, i + 2, size(ids)), b ->
-          |    struct(a AS doc_a, b AS doc_b))))""".stripMargin)).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"))
+      .select(col("doc_id"), col("title"),
+        explode(sequence(lit(1), greatest(length(col("title")) - 7, lit(1))))
+          .as("i"))
+      .groupBy(col("title").substr(col("i"), lit(8)).as("gram"))
+      .agg(sort_array(collect_set(col("doc_id"))).as("entries"))
+      .filter(size(col("entries")) <= dfCap && size(col("entries")) >= 2)
+    val cand = expandSortedPairs(postings, dfCap)
+      .select(col("ea").as("doc_a"), col("eb").as("doc_b"))
       .distinct()
     cand
       .join(t.as("ta"), col("doc_a") === col("ta.doc_id"))
@@ -1139,8 +1015,7 @@ object Dedup {
     * Emitted as a comma-joined scalar so the driver compare (pandas sort)
     * can hash it — array-typed output columns crash lexsort. */
   def xKmvSketch(s: SparkSession, dir: String): DataFrame =
-    docsWithShingles(s, dir)
-      .select(col("doc_id"), explode(array_distinct(col("sh"))).as("shingle"))
+    Grams.shingleRows(Tables.load(s, dir, "documents"))
       .groupBy("doc_id")
       .agg(graft.functions.BottomKSketch.bottomK(8)(md5(col("shingle")))
         .as("kmv_arr"))
@@ -1151,8 +1026,7 @@ object Dedup {
     * TypedImperativeAggregate (binary partial buffers, no Dataset encoders)
     * — shares the typed Aggregator's oracle; both must agree exactly. */
   def xKmvNative(s: SparkSession, dir: String): DataFrame =
-    docsWithShingles(s, dir)
-      .select(col("doc_id"), explode(array_distinct(col("sh"))).as("shingle"))
+    Grams.shingleRows(Tables.load(s, dir, "documents"))
       .groupBy("doc_id")
       .agg(graft.functions.BottomKNative.bottomK(8)(md5(col("shingle")))
         .as("kmv"))
@@ -1176,10 +1050,7 @@ object Dedup {
     * dimension table. The exact twin (`x_corpus_overlap`) shuffles the
     * shingle stream; this one shuffles k hashes per source. */
   def xKmvSetops(s: SparkSession, dir: String, k: Int = 64): DataFrame = {
-    val sk = Tables.load(s, dir, "documents")
-      .select(col("source"), split(col("text"), " ").as("toks"))
-      .withColumn("sh", shingles(col("toks")))
-      .select(col("source"), explode(array_distinct(col("sh"))).as("shingle"))
+    val sk = Grams.shingleRows(Tables.load(s, dir, "documents"), "source")
       .groupBy("source")
       .agg(split(graft.functions.BottomKNative.bottomK(k)(md5(col("shingle"))),
         ",").as("kmv"))
@@ -1446,7 +1317,7 @@ object Dedup {
     // meaning; the candidate arm needs no change — a sampled pair is a
     // candidate iff its bands collide, which sampling never alters.
     val effCap = math.max(1, math.ceil(dfCap * sampleFrac).toInt)
-    val exploded = mat(distinctShingleRows(hashSampled(
+    val exploded = mat(Grams.shingleRows(hashSampled(
       Tables.load(s, dir, "documents"), col("doc_id"), sampleFrac)))
       // df aggregate + the capped-index join re-read it
     val rare = exploded.groupBy("shingle").agg(count(lit(1)).as("df"))
@@ -1542,7 +1413,7 @@ object Dedup {
         .filter(size(col("entries")).between(2, truthDfCeil))
         .select(size(col("entries")).cast("bigint").as("df"),
           sort_array(col("entries")).as("entries")), truthDfCeil, "df")
-      .groupBy("doc_a", "doc_b", "n_a", "n_b")
+      .groupBy(entryPair: _*)
       .agg(count(lit(1)).as("ni"), min(col("df")).as("min_df"))
       .select(col("doc_a"), col("doc_b"),
         round(col("ni").cast("double") /

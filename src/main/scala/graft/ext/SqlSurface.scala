@@ -48,14 +48,7 @@ object SqlSurface {
     * Column-API [[Dedup.xKmvNative]]. */
   def xSqlKmv(s: SparkSession, dir: String): DataFrame = {
     graft.functions.BottomKNative.register(s)
-    Tables.load(s, dir, "documents")
-      // two-step projection: composing shingles(split(...)) inline clones
-      // the split into size() and every element_at — the text re-splits
-      // per shingle index (measured 3.5s vs 0.8s for the Column twin at
-      // sf0.1); as a named column it stays one expression per row
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"), explode(array_distinct(
-        Dedup.shingles(col("toks")))).as("shingle"))
+    Grams.shingleRows(Tables.load(s, dir, "documents"))
       .createOrReplaceTempView("graft_shingles")
     s.sql("""
       SELECT doc_id, bottom_k(md5(shingle), 8) AS kmv

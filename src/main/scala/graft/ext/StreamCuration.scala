@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.Graft
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
@@ -25,38 +27,6 @@ object StreamCuration {
 
   type Q = (SparkSession, String) => DataFrame
 
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft_doc_stream_")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    sys.addShutdownHook(rm(root.toFile))
-    root
-  }
-
-  /** The session every streaming query runs under: the caller's session
-    * with 8 shuffle partitions. Streaming state stores are one instance
-    * per shuffle partition per micro-batch, and their open/commit overhead,
-    * not the data, dominates an eval-sized run (at sf0.1: 32 partitions
-    * ≈ 35 s, 8 ≈ 12 s, verdicts identical). A real deployment sizes this
-    * to its ingest volume. `newSession()` shares the SparkContext but owns
-    * its conf, so the setting never leaks to queries running on the
-    * caller's session. One child is kept per parent (weakly, so it goes
-    * with the parent): a fresh child per call would get a fresh executor
-    * class loader, and Spark's codegen cache, keyed by class loader, would
-    * compile every batch leg's classes again. */
-  private val streamSessions =
-    new java.util.WeakHashMap[SparkSession, SparkSession]()
-
-  private def streamSession(s: SparkSession): SparkSession =
-    streamSessions.synchronized {
-      streamSessions.computeIfAbsent(s, { _ =>
-        val ss = graft.Graft.configure(s.newSession())
-        ss.conf.set("spark.sql.shuffle.partitions", "8")
-        ss
-      })
-    }
-
   /** Watermark-bounded streaming dedup on `keys`: the first arrival of a
     * key is emitted, later arrivals are dropped while the key's state is
     * live, and state is EVICTED once the `ing_ts` watermark passes
@@ -71,7 +41,7 @@ object StreamCuration {
 
   def xStreamCurate(s: SparkSession, dir: String,
                     minTokens: Int = 20): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "run_")
+    val tmp = Graft.scratchDir("run_")
     val out = s"$tmp/corpus"
     val ckpt = s"$tmp/ckpt"
     val src = s"$dir/documents.parquet"
@@ -81,7 +51,7 @@ object StreamCuration {
     // dropDuplicates stores per micro-batch (9.4 s against 3.0 s at
     // `local[8]`). Results are partition-count-invariant (keyed dedup),
     // which the oracle pins.
-    val ss = streamSession(s)
+    val ss = Graft.streamSession(s)
     // The file source streams the parent DIRECTORY with a glob pinned to
     // the one table file (same idiom as the capture round trips).
     val raw = ss.readStream.schema(batchSchema)
@@ -196,56 +166,9 @@ object StreamCuration {
     case object Arrival extends Staging
   }
 
-  /** The multiband signature of one document, computed natively: 3-token
-    * shingles exactly as [[Dedup.shingles]] builds them (concat_ws null-
-    * skip at the tail included), one md5 per shingle per salt group, band
-    * i = min over shingles of digest chunk `i % 4` — byte-identical to
-    * the SQL/DuckDB md5-chunk arithmetic (lowercase hex; lexicographic
-    * min on fixed-width hex = numeric min). Duplicate shingles need no
-    * dedup: a min is multiset-invariant. */
-  private[ext] def bandMins(text: String, bands: Int): Array[String] = {
-    val toks = text.split(" ", -1)
-    val n = toks.length
-    val nHashes = (bands + 3) / 4
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def md5hex(str: String): String = {
-      md.reset()
-      val d = md.digest(str.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val sb = new java.lang.StringBuilder(32)
-      d.foreach { b =>
-        sb.append(Character.forDigit((b & 0xf0) >> 4, 16))
-        sb.append(Character.forDigit(b & 0x0f, 16))
-      }
-      sb.toString
-    }
-    val mins = new Array[String](bands)
-    var i = 0
-    val last = math.max(n - 2, 1)
-    while (i < last) {
-      val sb = new java.lang.StringBuilder(toks(i))
-      if (i + 1 < n) sb.append(' ').append(toks(i + 1))
-      if (i + 2 < n) sb.append(' ').append(toks(i + 2))
-      val sh = sb.toString
-      var k = 0
-      while (k < nHashes) {
-        val h = md5hex(if (k == 0) sh else k.toString + sh)
-        var b = k * 4
-        val hi = math.min(bands, k * 4 + 4)
-        while (b < hi) {
-          val c = h.substring(8 * (b % 4), 8 * (b % 4) + 8)
-          if (mins(b) == null || c < mins(b)) mins(b) = c
-          b += 1
-        }
-        k += 1
-      }
-      i += 1
-    }
-    mins
-  }
-
   private[ext] def bandObs(docId: Long, text: String, bands: Int,
                            seq: Long, tsMs: Long): Seq[BandObs] = {
-    val mins = bandMins(text, bands)
+    val mins = Grams.bandMins(Grams.distinct(text.split(" ", -1), 3), bands)
     val ts = new java.sql.Timestamp(tsMs)
     (0 until bands).map(b => BandObs(b, mins(b), seq, docId, ts))
   }
@@ -387,16 +310,10 @@ object StreamCuration {
     val ckpt = s"$tmp/ckpt_${src.getName}"
     val nBands = bands
     val ttlMs = ttlBatches.map(_ * BatchIntervalMs)
-    // Per-doc band values in plain Scala inside a typed flatMap. The
-    // column-expression formulation (8 × array_min(transform(sh, md5…)))
-    // was MEASURED at 26-28 s for 5k docs regardless of parallelism:
-    // higher-order array functions evaluate interpreted, CollapseProject
-    // re-inlines the shingle pipeline into every band, and the batch
-    // path's explode+agg cure needs an aggregation, which Structured
-    // Streaming forbids upstream of flatMapGroupsWithState. The native
-    // loop computes each salted digest once per shingle (md5 of UTF-8,
-    // hex chunks — byte-identical to the oracle's md5 arithmetic) and
-    // took the query from 34.5 to 4.2 s at sf0.1 (isolated bench).
+    // Per-doc band values come from [[Grams]] inside a typed flatMap: a
+    // column form (8 × array_min(transform(sh, md5…))) evaluates
+    // interpreted, and the batch path's explode + aggregate is not allowed
+    // upstream of flatMapGroupsWithState.
     val raw = s.readStream
       .schema("seq LONG, doc_id LONG, text STRING, ts LONG")
       .option("maxFilesPerTrigger", "1")
@@ -526,9 +443,9 @@ object StreamCuration {
   def xStreamNeardup(s: SparkSession, dir: String,
                      bands: Int = 8, nBatches: Int = DefaultNBatches,
                      staging: Staging = Staging.DocId): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "neardup_")
+    val tmp = Graft.scratchDir("neardup_")
     val src = new java.io.File(s"$tmp/in"); src.mkdirs()
-    val ss = streamSession(s)
+    val ss = Graft.streamSession(s)
     val docs = loadDocs(ss, dir)
     val nDocs = docs.count() // one count serves staging AND the sink guard
     writeBatches(batchedFrame(docs, nBatches, staging, nDocs), src,
@@ -568,9 +485,9 @@ object StreamCuration {
       s"nBatches=$nBatches exceeds the recentProgress retention (100); " +
         "the state-store trace would be silently truncated — use a " +
         "StreamingQueryListener to accumulate per-batch numRowsTotal")
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "ndttl_")
+    val tmp = Graft.scratchDir("ndttl_")
     val src = new java.io.File(s"$tmp/in"); src.mkdirs()
-    val ss = streamSession(s)
+    val ss = Graft.streamSession(s)
     val docs = loadDocs(ss, dir)
     val nDocs = docs.count() // one count serves staging AND the sink guard
     writeBatches(batchedFrame(docs, nBatches, staging, nDocs), src,
@@ -599,10 +516,10 @@ object StreamCuration {
                               splitAt: Int = 2): DataFrame = {
     require(splitAt > 0 && splitAt < nBatches,
       s"splitAt=$splitAt must split $nBatches batches into two runs")
-    val tmp = java.nio.file.Files.createTempDirectory(scratchRoot, "ndcomp_")
+    val tmp = Graft.scratchDir("ndcomp_")
     val src1 = new java.io.File(s"$tmp/in1"); src1.mkdirs()
     val src2 = new java.io.File(s"$tmp/in2"); src2.mkdirs()
-    val ss = streamSession(s)
+    val ss = Graft.streamSession(s)
     import ss.implicits._
     val docs = loadDocs(ss, dir)
     // ONE batch assignment for the whole corpus, then the two runs stream

@@ -217,15 +217,9 @@ object TextOps {
     * sort. Docs under 3 tokens can't form a trigram and are excluded
     * identically on both engines. */
   def xRepetition(s: SparkSession, dir: String): DataFrame = {
-    // Clamped bounds + try_element_at: the size>=3 filter below makes the
-    // unclamped form equivalent today, but ANSI element_at would throw if a
-    // plan rewrite ever evaluates the projection before the filter (the
-    // inferred-pre-filter reordering documented at Dedup.xJaccardNgram) —
-    // same hardening as Dedup.shingles.
-    val tri = transform(
-      sequence(lit(1), greatest(size(col("toks")) - 2, lit(1))),
-      i => concat_ws(" ", element_at(col("toks"), i),
-        try_element_at(col("toks"), i + 1), try_element_at(col("toks"), i + 2)))
+    // Dedup.shingles' clamped bounds keep the projection safe even if a
+    // plan rewrite evaluates it before the size >= 3 filter.
+    val tri = Dedup.shingles(col("toks"))
     Tables.load(s, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= 3)

@@ -11,15 +11,8 @@ object TestSpark {
     * keeps every suite on the same corpus (ADVICE r14 #4). */
   val Sf01 = "/root/testdata/sf0.1"
 
-  /** Shared scratch root for test fixtures — shutdown-hook cleaned, so
-    * repeated suite runs don't accumulate parquet trees in /tmp
-    * (ADVICE r14 #5). */
-  lazy val scratch: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft_test_scratch_")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    sys.addShutdownHook(rm(root.toFile))
-    root
-  }
+  /** Shared scratch root for test fixtures, under the process's one
+    * shutdown-cleaned root, so repeated suite runs don't accumulate
+    * parquet trees in /tmp (ADVICE r14 #5). */
+  lazy val scratch: java.nio.file.Path = Graft.scratchDir("test_")
 }

@@ -4,6 +4,7 @@ import graft.{SparkEntry, TestSpark}
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter,
   QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
@@ -374,6 +375,36 @@ class PlanSpec extends AnyFunSuite {
     case _ => p
   }
 
+  /** Every query execution that building and collecting each named query
+    * runs (eager checkpoints and counts included), as (action, execution). */
+  private def executionsOf(qs: Seq[String]): Seq[(String, QueryExecution)] = {
+    val seen = scala.collection.mutable.ArrayBuffer
+      .empty[(String, QueryExecution)]
+    val markerDf = spark.range(1).toDF()
+    val markerQe = markerDf.queryExecution
+    var marker = false
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.synchronized {
+          if (qe eq markerQe) marker = true
+          else seen += f -> qe
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      qs.foreach(q => SparkEntry.queries(q)(spark, dir).collect())
+      // listener events arrive in order: once the marker action is seen,
+      // every execution the queries ran has been recorded
+      markerDf.collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.synchronized(marker) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(seen.synchronized(marker), "execution listener never drained")
+    } finally spark.listenerManager.unregister(listener)
+    seen.synchronized(seen.toSeq)
+  }
+
   test("cached frames get data-sized partitions, no exchange above a cache") {
     // Persisted frames are AQE-coalesced like any other exchange output:
     // without that the gram index keeps all 256 initialPartitionNum
@@ -394,40 +425,32 @@ class PlanSpec extends AnyFunSuite {
         s"cached gram index has $n partitions, shuffle.partitions $maxParts")
     }
     spark.catalog.clearCache()
-    // the coalesced cache must not make consumers re-shuffle it: capture
+    // the coalesced cache must not make consumers re-shuffle it: check
     // every executed plan the four persisted-frame queries run (caches are
     // released inside the query, so the returned frame shows none of them)
-    val plans = scala.collection.mutable.ArrayBuffer.empty[(String, SparkPlan)]
-    val markerDf = spark.range(1).toDF()
-    val markerQe = markerDf.queryExecution
-    var marker = false
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.synchronized {
-          if (qe eq markerQe) marker = true
-          else plans += f -> qe.executedPlan
-        }
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      for (q <- Seq("x_jaccard_ngram", "x_lsh_recall", "x_multiband_recall",
-          "x_jaccard_recall"))
-        SparkEntry.queries(q)(spark, dir).collect()
-      // listener events arrive in order: once the marker action is seen,
-      // every plan the queries ran has been recorded
-      markerDf.collect()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!plans.synchronized(marker) && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert(plans.synchronized(marker), "execution listener never drained")
-    } finally spark.listenerManager.unregister(listener)
+    val plans = executionsOf(Seq("x_jaccard_ngram", "x_lsh_recall",
+      "x_multiband_recall", "x_jaccard_recall"))
+      .map { case (f, qe) => f -> qe.executedPlan }
     val cached = plans.filter { case (_, p) =>
       nodesOf(p).exists(_.isInstanceOf[InMemoryTableScanExec]) }
     assert(cached.nonEmpty, "the persisted-frame queries read no cache")
     for ((f, p) <- cached; e <- nodesOf(p).collect { case e: Exchange => e })
       assert(!unwrap(e.child).isInstanceOf[InMemoryTableScanExec],
         s"$f: exchange directly above a cache scan:\n${p.toString.take(3000)}")
+  }
+
+  test("gram and pair kernels leave no lambda in the dedup plans") {
+    // higher-order functions (transform/sequence lambdas) evaluate on the
+    // interpreted path; grams come from Grams and pairs from
+    // expandSortedPairs. Every execution counts, so a lambda hidden behind
+    // a localCheckpoint is caught in the checkpoint's own plan.
+    val found = for {
+      (f, qe) <- executionsOf(Seq("x_curate_corpus", "x_kmv_sketch",
+        "x_edit_pairs", "x_decontaminate"))
+      h <- qe.optimizedPlan.flatMap(_.expressions)
+        .flatMap(_.collect { case h: HigherOrderFunction => h })
+    } yield s"$f: ${h.sql.take(120)}"
+    assert(found.isEmpty, found.mkString("\n"))
   }
 
   test("repeated dedup queries reuse their generated classes") {
@@ -650,16 +673,13 @@ class PlanSpec extends AnyFunSuite {
     val opt = df.queryExecution.optimizedPlan.toString
     assert(!opt.contains("array_intersect"), opt.take(2000))
     // r10 shape: the gram pipeline expands ONCE into the posting-list
-    // aggregate (sort_array(collect_list(...))); candidate pairs are
+    // aggregate (sort_array(collect_set(...))); candidate pairs are
     // generated in-bucket from the sorted array, so there is exactly one
-    // Generate over the gram transform — the r9 dual-branch self-join
-    // re-expanded it per side
-    // the second Generate in the plan is the in-bucket pair expansion over
-    // `ids` — only the gram transform itself must not be re-expanded
-    assert("explode\\(array_distinct\\(transform\\(sequence".r
-      .findAllIn(opt).length == 1,
+    // Generate over the gram positions — the r9 dual-branch self-join
+    // re-expanded it per side (the other Generates are the pair expansion)
+    assert("explode\\(sequence".r.findAllIn(opt).length == 1,
       s"gram pipeline must expand exactly once:\n${opt.take(2000)}")
-    assert(opt.contains("sort_array(collect_list("),
+    assert(opt.contains("sort_array(collect_set("),
       s"posting-list aggregate missing:\n${opt.take(2000)}")
     val plan = planOf(df)
     assert(!plan.contains("CartesianProduct"), plan.take(2000))

@@ -25,7 +25,6 @@ class LiveAssessSpec extends AnyFunSuite {
   test("star workload captured live, assessed from the captured log") {
     val t0 = new java.sql.Timestamp(System.currentTimeMillis() - 1000)
     val l = SparkCaptureListener.install(spark)
-    val seen0 = l.seen
     val workload = Seq(
       "q1_pricing_summary", "q6_forecast_revenue", "q3_top_orders",
       "q5_nation_revenue", "q10_returned_revenue",
@@ -36,9 +35,17 @@ class LiveAssessSpec extends AnyFunSuite {
     try {
       workload.foreach(q =>
         graft.assess.StarQueries.queries(q)(spark, TestSpark.Sf0001).collect())
-      awaitUntil()(l.seen >= seen0 + workload.size * 2)
+      // `seen` also counts unrelated bus traffic: drain until every
+      // execution has delivered the COMPLETED event the log filter keeps
+      val events = collection.mutable.ArrayBuffer.empty[graft.model.QueryEvent]
+      awaitUntil() {
+        events ++= l.drain()
+        events.count(e => e.EventType.contains("QUERY_COMPLETED") &&
+          e.StartTime.exists(!_.before(t0)) &&
+          e.TablesRead.exists(_.contains("lineitem"))) >= workload.size
+      }
       val dir = Files.createTempDirectory("graft_live_assess_full").toString
-      graft.sink.EventSink.writeBatch(l.drainToFrame(spark), dir)
+      graft.sink.EventSink.writeBatch(spark.createDataFrame(events.toSeq), dir)
       // this test's workload only: completed events started after t0 whose
       // plans scan lineitem (all five star queries do)
       val captured = graft.sink.EventSink.readLatestEvents(spark, dir)

@@ -172,14 +172,20 @@ class SparkCaptureListenerSpec extends AnyFunSuite {
     // persist the log through the sink, then run the assessment layer's
     // A2-style rollup ON THE CAPTURED LOG — observe Hive → assess, on Spark.
     val l = SparkCaptureListener.install(spark)
-    val t0 = l.seen
     try {
       Seq("q1_pricing_summary", "q6_forecast_revenue", "q3_top_orders")
         .foreach(q =>
           graft.assess.StarQueries.queries(q)(spark, TestSpark.Sf0001).collect())
-      awaitUntil()(l.seen >= t0 + 6) // 2 lifecycle events per query
+      // `seen` also counts unrelated bus traffic: drain until each of the
+      // three executions has delivered its lineitem COMPLETED event
+      val events = collection.mutable.ArrayBuffer.empty[graft.model.QueryEvent]
+      awaitUntil() {
+        events ++= l.drain()
+        events.count(e => e.EventType.contains("QUERY_COMPLETED") &&
+          e.TablesRead.exists(_.contains("lineitem"))) >= 3
+      }
       val dir = Files.createTempDirectory("graft_live_assess").toString
-      graft.sink.EventSink.writeBatch(l.drainToFrame(spark), dir)
+      graft.sink.EventSink.writeBatch(spark.createDataFrame(events.toSeq), dir)
       val log = graft.sink.EventSink.readLatestEvents(spark, dir)
         // the three workload queries all scan lineitem; other bus traffic
         // (earlier suites, metadata reads) is not part of the assessment

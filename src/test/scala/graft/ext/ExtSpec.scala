@@ -308,14 +308,13 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("minhash containment: signature of a superset bounds the subset min") {
-    import spark.implicits._
-    // minhash(A ∪ B) = min(minhash(A), minhash(B)) — the sketch property
-    val df = Seq((Seq("a", "b"), Seq("c", "d"), Seq("a", "b", "c", "d")))
-      .toDF("a", "b", "u")
-    val r = df.select(
-      Dedup.minhash($"a", 0).as("ma"), Dedup.minhash($"b", 0).as("mb"),
-      Dedup.minhash($"u", 0).as("mu")).head()
-    assert(r.getString(2) == Seq(r.getString(0), r.getString(1)).min)
+    // minhash(A ∪ B) = min(minhash(A), minhash(B)) — the sketch property,
+    // in every band of both salt groups past the first
+    val ma = Grams.bandMins(Array("a", "b"), 12)
+    val mb = Grams.bandMins(Array("c", "d"), 12)
+    val mu = Grams.bandMins(Array("a", "b", "c", "d"), 12)
+    (0 until 12).foreach(b =>
+      assert(mu(b) == Seq(ma(b), mb(b)).min, s"band $b"))
   }
 
   test("semdedup: full partition, drops have twins, cell minimum kept") {
@@ -1115,26 +1114,33 @@ class ExtSpec extends AnyFunSuite {
     // repartitioned chunk pairs so no single task owns a d²/2 generator
     // call. The driver SFs never exceed the chunk length (max in-block df
     // at sf0.1 = 63), so pin the equivalence on synthetic sorted lists
-    // that straddle the boundary: same pair set, exactly n(n−1)/2 rows.
+    // that straddle the boundary: same pair set, exactly n(n−1)/2 rows,
+    // each with ea < eb. Elements are (doc_id, n_bg) structs as in the
+    // jaccard postings, or bare ids as in the edit-pairs postings.
     import spark.implicits._
     val big = (0L until 2500L).map(i => (i, i + 10000L))
-    val lists = Seq(
+    val rows = Seq(
       (1L, big),             // 3 chunks: diagonal + cross expansions
       (2L, big.take(5)),     // direct arm inside the chunked plan
       (3L, big.take(1030))   // 2 chunks, one short tail chunk
     ).toDF("df", "raw")
-      .select(col("df"), expr(
-        "transform(raw, e -> struct(e._1 AS doc_id, e._2 AS n_bg))")
-        .as("entries"))
-    val direct = Dedup.expandSortedPairs(lists, maxLen = 100, "df")
-    val chunked = Dedup.expandSortedPairs(lists, maxLen = 5000, "df")
+    val structs = rows.select(col("df"), expr(
+      "transform(raw, e -> struct(e._1 AS doc_id, e._2 AS n_bg))")
+      .as("entries"))
+    val ids = rows.select(col("df"), col("raw._1").as("entries"))
     val expected = 2500L * 2499 / 2 + 5L * 4 / 2 + 1030L * 1029 / 2
-    assert(direct.count() == expected)
-    assert(chunked.count() == expected)
-    assert(chunked.exceptAll(direct).isEmpty,
-      "chunked expansion emitted pairs the direct triangle does not")
-    assert(direct.exceptAll(chunked).isEmpty,
-      "chunked expansion missed pairs of the direct triangle")
+    for (lists <- Seq(structs, ids)) {
+      val direct = Dedup.expandSortedPairs(lists, maxLen = 100, "df")
+      val chunked = Dedup.expandSortedPairs(lists, maxLen = 5000, "df")
+      assert(direct.count() == expected)
+      assert(chunked.count() == expected)
+      assert(direct.filter(col("ea") >= col("eb")).isEmpty,
+        "a pair out of array order")
+      assert(chunked.exceptAll(direct).isEmpty,
+        "chunked expansion emitted pairs the direct triangle does not")
+      assert(direct.exceptAll(chunked).isEmpty,
+        "chunked expansion missed pairs of the direct triangle")
+    }
   }
 
   test("language guess is deterministic and total over the corpus") {

@@ -104,7 +104,8 @@ class StreamCurationSpec extends AnyFunSuite {
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val distinctBands = docs.flatMap { case (_, text) =>
-      StreamCuration.bandMins(text, 8).zipWithIndex.map(_.swap)
+      Grams.bandMins(Grams.distinct(text.split(" ", -1), 3), 8)
+        .zipWithIndex.map(_.swap)
     }.distinct.length
     assert(trace.nonEmpty, "stream reported no state metrics")
     assert(trace.last < distinctBands,
@@ -137,7 +138,7 @@ class StreamCurationSpec extends AnyFunSuite {
       }
     }.toMap
     val bands = docs.map { case (id, text) =>
-      id -> StreamCuration.bandMins(text, 8) }.toMap
+      id -> Grams.bandMins(Grams.distinct(text.split(" ", -1), 3), 8) }.toMap
     val expected = docs.map { case (id, _) =>
       val stale = (0 until 8).count { b =>
         docs.exists { case (o, _) =>
