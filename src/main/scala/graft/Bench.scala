@@ -146,10 +146,16 @@ object Bench {
       }
       System.gc()
     }
+    // Classes each query's first pass compiled (Janino compiles at planning
+    // and in tasks alike): a query that recompiles per call shows it here.
+    val compiles = scala.collection.mutable.Map.empty[String, Long]
+    def compileCount = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
     // Sorted order: Map iteration order shifts with the key set, which moved
     // residual first-slot noise onto different queries per run — sorted is
     // deterministic and comparable across rounds and subsets.
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val c0 = compileCount
       val t0 = System.nanoTime()
       // toRdd.count() materializes every output column of the final plan
       // (unlike df.count(), which lets Catalyst prune the projection and
@@ -161,6 +167,7 @@ object Bench {
           Some(e.toString.linesIterator.next())
         }
       val dt = (System.nanoTime() - t0) / 1e9
+      compiles(name) = compileCount - c0
       interQueryCleanup()
       (name, dt, err)
     }
@@ -203,10 +210,12 @@ object Bench {
       .mkString("{", ",", "}")
     val fp = firstPass.toSeq.sortBy(_._1)
       .map { case (k, v) => jstr(k) + ":" + f"$v%.3f" }.mkString("{", ",", "}")
+    val cg = compiles.toSeq.sortBy(_._1)
+      .map { case (k, n) => jstr(k) + ":" + n }.mkString("{", ",", "}")
     val total = finalResults.map(_._2).sum
     val nFailed = finalResults.count(_._3.isDefined)
     val fullLine =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"failed":$nFailed,"errors":$errs,"first_pass":$fp,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"failed":$nFailed,"errors":$errs,"first_pass":$fp,"codegen_compiles":$cg,"sf":"$sfDir"}"""
     // The full record (96+ queries, ~2.5 KB) physically cannot fit the
     // driver's 2,000-char stdout tail window (measured from BENCH_r0{1..4}:
     // every round's head was cut mid-line and the parse failed). The

@@ -87,7 +87,7 @@ final class SparkCaptureListener(appId: String, user: String,
   // under sustained saturation (all-young entries because Ends are being
   // lost), putting an O(MaxTracked) sweep on the listener bus thread per
   // Start. Draining a quarter of the map buys MaxTracked/4 cheap inserts
-  // per sweep — genuinely amortized O(1) in every regime (ADVICE r9).
+  // per sweep, so an insert is amortized O(1) in every regime.
   private val LowWatermark = MaxTracked - MaxTracked / 4
   private val StaleMs = 10L * 60 * 1000
 
@@ -483,8 +483,7 @@ object SparkCaptureListener {
     * NEVER forced (a stage AQE planned but skipped, e.g. pruned to empty)
     * are detected via the numFiles driver metric — set as a side effect
     * of computing the listing — and skipped entirely, so the fallback
-    * can't start a driver-side file listing on the bus thread
-    * (ADVICE r10). */
+    * can't start a driver-side file listing on the bus thread. */
   def partitionsRead(qe: QueryExecution): Seq[String] =
     Try {
       import org.apache.spark.sql.execution.{FileSourceScanLike, SparkPlan}
@@ -499,10 +498,10 @@ object SparkCaptureListener {
               // filesSize (a size metric, init -1) on the driver when
               // (dynamically)selectedPartitions is computed, so isZero
               // flips false even for a pruned-to-zero-files listing
-              // (numFiles.value would conflate that with never-forced —
-              // review r11); still-zero means the scan never executed and
-              // forcing either lazy val HERE would do the file listing.
-              // SPARK-4.x COUPLING (ADVICE r11): the pruned-to-zero case
+              // (numFiles.value would conflate that with never-forced);
+              // still-zero means the scan never executed and forcing
+              // either lazy val HERE would do the file listing.
+              // SPARK-4.x COUPLING: the pruned-to-zero case
               // relies on SQLMetric.add promoting a -1-initialized metric
               // to 0 (verified in the pinned 4.1.2 jar); on Spark <= 3.5
               // add() does not promote, so there a zero-file listing would
@@ -717,7 +716,7 @@ final class CaptureDrainer(session: SparkSession, sinkPath: String,
     if (t.isAlive) {
       // The flush overran its bound: interrupt it BEFORE uninstalling the
       // listener so the in-flight self-tagged write doesn't race the
-      // detach, and give the interrupt a moment to land (ADVICE r9).
+      // detach, and give the interrupt a moment to land.
       t.interrupt()
       t.join(500)
       System.err.println(

@@ -182,15 +182,16 @@ object AsOfJoinStrategy extends SparkStrategy {
   * .withExtensions(new GraftExtensions)` or config
   * `spark.sql.extensions=graft.plans.GraftExtensions` (works via
   * spark-submit --conf too — no code changes to the host app). Injects the
-  * as-of join planner strategy + optimizer rules and registers graft's
-  * custom expressions as SQL functions, so plain `spark.sql(...)` reaches
-  * everything. */
+  * as-of join planner strategy + optimizer rules and the [[BindConstants]]
+  * physical rule, and registers graft's custom expressions as SQL
+  * functions, so plain `spark.sql(...)` reaches everything. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    e.injectColumnar(_ => BindConstants)
     e.injectOptimizerRule(_ => PushFilterThroughAsOfJoin)
     e.injectOptimizerRule(_ => PruneAsOfJoinColumns)
     e.injectOptimizerRule(_ => RewriteCountDistinctToSketch)
@@ -238,7 +239,7 @@ object AsOfJoin {
         spark.experimental.extraStrategies :+ AsOfJoinStrategy
     }
     // Dual-registry guard for the rules, mirroring the strategy guard
-    // above (ADVICE r11): `optimizer.batches` reflects BOTH registries —
+    // above: `optimizer.batches` reflects BOTH registries —
     // extension-injected rules land in the operator-optimization batches
     // and experimental extras in "User Provided Optimizers" — so a session
     // built with GraftExtensions doesn't get each (idempotent, but

@@ -33,8 +33,8 @@ object RewriteCountDistinctToSketch extends Rule[LogicalPlan] {
       case agg: Aggregate => agg.transformExpressions {
         case ae @ AggregateExpression(c: Count, _, true, None, _)
             if c.children.size == 1 =>
-          // relativeSD pinned explicitly to the ~2% the doc promises —
-          // the constructor default is 0.05 (ADVICE r9)
+          // relativeSD pinned explicitly to the ~2% the doc promises;
+          // the constructor default is 0.05
           ae.copy(aggregateFunction =
             HyperLogLogPlusPlus(c.children.head, relativeSD = 0.02),
             isDistinct = false)

@@ -57,6 +57,28 @@ class SparkCaptureListenerSpec extends AnyFunSuite {
     } finally SparkCaptureListener.uninstall(spark, l)
   }
 
+  test("a bound filter constant reads as the literal in the QueryText") {
+    // template mining keys on this text: the constant must read as typed
+    val tag = nonce("bindtag")
+    val dir = TestSpark.scratch.resolve(tag).toString
+    spark.range(300).selectExpr("CAST(id AS INT) AS cust").write.parquet(dir)
+    val l = SparkCaptureListener.install(spark)
+    try {
+      val df = spark.read.parquet(dir).where(col("cust") < 137)
+        .select(col("cust").as(tag))
+      assert(df.collect().length == 137)
+      assert(df.queryExecution.executedPlan.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.plans.BoundConstant]))),
+        df.queryExecution.executedPlan.toString)
+      val events = collection.mutable.ArrayBuffer.empty[graft.model.QueryEvent]
+      def subs = events.filter(e => e.EventType.contains("QUERY_SUBMITTED") &&
+        e.QueryText.exists(_.contains(tag)))
+      awaitUntil() { events ++= l.drain(); subs.nonEmpty }
+      assert(subs.size == 1 && subs.head.QueryText.exists(_.contains("< 137)")),
+        subs.map(_.QueryText))
+    } finally SparkCaptureListener.uninstall(spark, l)
+  }
+
   test("file-source reads surface as TablesRead; counters JSON parses") {
     val l = SparkCaptureListener.install(spark)
     try {

@@ -23,21 +23,8 @@ class ExtensionsSqlSpec extends AnyFunSuite {
   /** Run `f` on a session whose ONLY access to graft functions is the
     * extensions hook (fresh function registry, shared SparkContext). The
     * shared test session is restored as default/active afterwards. */
-  private def withExtensionSession[T](f: SparkSession => T): T = {
-    val shared = graft.TestSpark.spark // ensure the context exists
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = SparkSession.builder()
-        .withExtensions(new GraftExtensions()).getOrCreate()
-      assert(s ne shared, "builder must create a fresh session")
-      f(s)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
-    }
-  }
+  private def withExtensionSession[T](f: SparkSession => T): T =
+    graft.TestSpark.withFreshSession(_.withExtensions(new GraftExtensions()))(f)
 
   test("ensureRegistered skips rules a GraftExtensions session already has") {
     // ADVICE r11: on an extensions-built session the rules live in the
@@ -231,6 +218,22 @@ class ExtensionsSqlSpec extends AnyFunSuite {
           .contains("array_histogram"), "count(NULL) must stay stock")
         assert(cntNull.limit(5).collect().forall(_.getLong(1) == 0L))
       } finally s.conf.set(RewriteExplodeCountToHistogram.FlagKey, "false")
+    }
+  }
+
+  test("extension session binds filter constants: no new class per constant") {
+    withExtensionSession { s =>
+      s.range(1000).selectExpr("CAST(id AS INT) AS v")
+        .createOrReplaceTempView("ext_bind")
+      def count(k: Int) =
+        s.sql(s"SELECT count(*) AS n FROM ext_bind WHERE v < $k").head().getLong(0)
+      val compiles =
+        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      assert(count(137) == 137)
+      val before = compiles.getCount
+      assert(count(138) == 138)
+      assert(compiles.getCount == before,
+        s"second statement compiled ${compiles.getCount - before} classes")
     }
   }
 
