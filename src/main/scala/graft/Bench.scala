@@ -133,17 +133,13 @@ object Bench {
     //    regressed 2-6x with no code change (r5 verdict). A/B measured r6 on
     //    the r5 regression cluster: async reproduced the spike, blocking
     //    matched no-cleanup while keeping storage memory flat.
-    //    SPARK_GRAFT_UNPERSIST=async|none opts back in for re-measurement.
     // 2. System.gc(): collect the run's accumulated garbage between
     //    measurements rather than letting an organic full GC land inside one
     //    unlucky query's timed window (observed r6: a roving 3-4x spike
     //    hitting a different heavy query each full run).
     def interQueryCleanup(): Unit = {
-      sys.env.getOrElse("SPARK_GRAFT_UNPERSIST", "blocking") match {
-        case "none" =>
-        case mode => spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = mode == "blocking"))
-      }
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
       System.gc()
     }
     // Classes each query's first pass compiled (Janino compiles at planning
@@ -180,9 +176,8 @@ object Bench {
     // A single re-run of the tail removes the artifact: min-of-2 is the
     // reproducible number. First-pass values stay in the record under
     // "first_pass" so the de-noising is visible, not silent.
-    val remeasureN = sys.env.getOrElse("SPARK_GRAFT_REMEASURE", "10").toInt
     val tail = results.filter(r => r._3.isEmpty && r._2 > 2.0)
-      .sortBy(-_._2).take(remeasureN).map(_._1).toSet
+      .sortBy(-_._2).take(10).map(_._1).toSet
     val firstPass = results.collect {
       case (name, dt, _) if tail(name) => name -> dt
     }.toMap

@@ -74,24 +74,16 @@ object Graft {
       .master(s"local[$nCpus]")
       .appName(appName)
       .withExtensions(_.injectColumnar(_ => graft.plans.BindConstants))
-      // On a cluster, shuffle partitions are sized to the DATA (~128-256 MB
-      // each), not to a fixed core count; SPARK_GRAFT_SHUFFLE lets the
-      // scale probes model that (a fixed 32 saturates at the 100x octave:
-      // each partition carries 100x the bytes and spills).
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", nCpus.toString))
+      // Every exchange starts at 256 partitions and AQE coalesces down from
+      // map-output stats, so partitions follow the data: a 100x corpus gets
+      // data-sized partitions (its 30x->100x x_jaccard_ngram leg reads ~0.9,
+      // COVERAGE.md), while small runs coalesce back to one per core at no
+      // measurable cost on the sf0.1 bench.
+      .config("spark.sql.shuffle.partitions", nCpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Every exchange starts at 256 partitions and AQE coalesces down from
-      // map-output stats: a 100x corpus gets data-sized partitions without
-      // the SPARK_GRAFT_SHUFFLE knob (its 30x->100x x_jaccard_ngram leg
-      // reads ~0.9 without it, COVERAGE.md), while small runs coalesce
-      // back to parallelism at no measurable cost on the sf0.1 bench. An
-      // explicit SPARK_GRAFT_SHUFFLE above 256 still wins:
-      // initialPartitionNum never splits below spark.sql.shuffle.partitions.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        math.max(256,
-          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "0").toInt).toString)
+        "256")
       // let that coalescing reach persisted frames too (scaladoc above)
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")

@@ -44,8 +44,10 @@ object Dedup {
   /** Per-doc band signatures (`doc_id, n_sh, b0..`), computed in one
     * narrow map with no Exchange: [[Grams.bandMins]] takes the md5-chunk
     * minima per doc inside the scan task, and `n_sh` is the doc's distinct
-    * shingle count. The values are those [[signaturesOf]] aggregates from
-    * an exploded shingle frame. */
+    * shingle count. Band i is the minimum over the doc's distinct shingles
+    * of hex chunk i % 4 of md5(salt || shingle), the salt being "" for
+    * bands 0-3, then "1", "2": the arithmetic the DuckDB oracles replay
+    * (GramsSpec pins it against that SQL on every corpus doc). */
   private[ext] def docSignatures(s: SparkSession, dir: String,
                             bands: Int): DataFrame = {
     require(bands >= 1 && bands <= 12, s"bands=$bands outside 1..12")
@@ -65,47 +67,17 @@ object Dedup {
         (0 until bands).map(i => col("mins")(i).as(s"b$i")): _*)
   }
 
-  /** Band signatures over an explicit distinct (doc_id, shingle) stream —
-    * factored out so [[xMultibandRecall]] can reuse its cached truth-arm
-    * explode instead of re-shingling the corpus.
-    *
-    * One md5 yields four independent-enough 8-hex-char chunks; bands past
-    * 4 salt the shingle (md5('1' || sh), md5('2' || sh), ...) so each
-    * extra digest buys four more bands. The salted digests are computed
-    * once per distinct shingle alongside the primary — the md5 cost grows
-    * with ceil(bands/4), never with band count alone — and the DuckDB
-    * oracles mirror the salt literally. */
-  private def signaturesOf(exploded: DataFrame, bands: Int): DataFrame = {
-    require(bands >= 1 && bands <= 12, s"bands=$bands outside 1..12")
-    val nHashes = (bands + 3) / 4
-    val aggs = count(lit(1)).as("n_sh") +:
-      (0 until bands).map(i =>
-        min(substring(col(s"h${i / 4}"), 1 + 8 * (i % 4), 8)).as(s"b$i"))
-    val hashed = (0 until nHashes).foldLeft(exploded) { (df, k) =>
-      val digest = if (k == 0) md5(col("shingle"))
-        else md5(concat(lit(k.toString), col("shingle")))
-      df.withColumn(s"h$k", digest)
-    }
-    hashed
-      .groupBy("doc_id")
-      .agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Exact-Jaccard scoring of an LSH candidate-pair set (`doc_a, doc_b,
-    * n_a, n_b`): re-shingle ONLY the documents that survived candidate
-    * generation (a broadcast semi-join prunes the corpus scan before any
-    * shingling), then count intersections with an explode-join — (pair ⋈
-    * shingles-of-a) ⋈ shingles-of-b on (doc, shingle), then a count per
-    * pair. All codegen'd hash joins; no per-pair hash-set allocation the
-    * way `array_intersect` does it. Candidate counts are sub-linear in
-    * corpus size by LSH design, so everything here is O(|pairs| · |doc|)
-    * rows — the full corpus never ships shingle sets through a shuffle. */
   /** Shingle-set intersection counts for a candidate-pair set (`doc_a,
     * doc_b, n_a, n_b`): re-shingle ONLY the documents that survived
     * candidate generation (a broadcast semi-join prunes the corpus scan
-    * before any shingling), then count intersections with an explode-join.
-    * Returns the pairs with `ni` (intersection size, double); Jaccard and
-    * containment are one arithmetic step away. */
+    * before any shingling), then count intersections with an explode-join:
+    * (pair ⋈ shingles-of-a) ⋈ shingles-of-b on (doc, shingle), then a count
+    * per pair. All codegen'd hash joins, with no per-pair hash set the way
+    * `array_intersect` builds one. Candidate counts are sub-linear in corpus
+    * size by LSH design, so the work is O(|pairs| · |doc|) rows and the full
+    * corpus never ships shingle sets through a shuffle. Returns the pairs
+    * with `ni` (intersection size, double); Jaccard and containment are one
+    * arithmetic step away. */
   private def scoreIntersections(s: SparkSession, dir: String,
                                  pairs: DataFrame): DataFrame = {
     val involved = pairs.select(col("doc_a").as("doc_id"))
@@ -113,8 +85,8 @@ object Dedup {
     // Materialized once: referenced as both join sides below, and shingling
     // is the expensive part (string building over every involved doc) —
     // without this it would run twice. Size is O(candidate docs), not corpus.
-    // Measured r4 at sf0.1: dropping this costs +0.4 s on x_minhash_pairs
-    // and +2.2 s on x_dup_clusters (which replays the whole pipeline).
+    // At sf0.1, dropping it costs +0.4 s on x_minhash_pairs and +2.2 s on
+    // x_dup_clusters (which replays the whole pipeline).
     val docShingles = Grams.shingleRows(
       Tables.load(s, dir, "documents")
         .join(broadcast(involved), "doc_id")) // prune BEFORE shingling
@@ -137,42 +109,29 @@ object Dedup {
         round(col("ni") / (col("n_a") + col("n_b") - col("ni")), 4)
           .as("jaccard"))
 
-  /** LSH candidate pairs + exact verification for `bands` shared minhash
-    * bands. Candidate generation is an equi-join on the band signature
-    * (fixed-width shuffle, bucket-local quadratics); scoring touches only
-    * surviving docs. */
   /** LSH candidate pairs (`doc_a < doc_b` with their distinct-shingle
-    * counts) — ids and set sizes only, never shingle arrays, so the shuffle
-    * payload is fixed-width at any corpus size. */
+    * counts `n_a, n_b`) for docs that agree on all `bands` minhash bands.
+    * Candidate generation is an equi-join on the band signature, so the
+    * shuffle carries ids and set sizes only, never shingle arrays, and the
+    * quadratic work stays inside a bucket. */
   private def lshCandidates(s: SparkSession, dir: String,
-                            bands: Int): DataFrame =
-    lshCandidatesFrom(docSignatures(s, dir, bands), bands)
-
-  /** Candidate generation over an explicit signature frame — the surface
-    * that lets [[xLshRecall]] derive its candidate arm from the already-
-    * cached truth-arm (doc_id, shingle) explode instead of re-shingling
-    * the corpus a second time (the [[multibandCandidatesFrom]] idiom,
-    * applied r16; a doc's signature depends only on its own shingles, so
-    * the candidate verdict per pair is unchanged). */
-  private def lshCandidatesFrom(sigIn: DataFrame, bands: Int,
-                                barrier: Boolean = true): DataFrame = {
+                            bands: Int): DataFrame = {
     val bandCols = (0 until bands).map(i => col(s"b$i"))
-    val sig = sigIn
-      // explicit exchange → reused across both self-join branches; measured
-      // r4 at sf0.1: removing it costs +1.1 s (pairs) / +2.0 s (clusters)
+    val sig = docSignatures(s, dir, bands)
+      // explicit exchange, reused across both self-join branches; at sf0.1
+      // removing it costs +1.1 s (pairs) / +2.0 s (clusters)
       .repartition(bandCols: _*)
     val cond = (0 until bands)
       .map(i => col(s"a.b$i") === col(s"b.b$i"))
       .reduce(_ && _) && col("a.doc_id") < col("b.doc_id")
     // Materialize the candidate set once: it is tiny (sub-linear in corpus
-    // pairs by LSH design) but referenced three times by the scorer — without
-    // this the signature aggregation + self-join would replay per reference.
-    // (`barrier = false` only on the plan-audit surfaces, where the eager
-    // localCheckpoint would hide the tree behind an ExistingRDD scan.)
-    val out = sig.as("a").join(sig.as("b"), cond)
+    // pairs by LSH design) but referenced three times by the scorer, and
+    // without this the signature map and self-join would replay per
+    // reference.
+    sig.as("a").join(sig.as("b"), cond)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.n_sh").as("n_a"), col("b.n_sh").as("n_b"))
-    if (barrier) out.localCheckpoint() else out
+      .localCheckpoint()
   }
 
   private def lshPairs(s: SparkSession, dir: String, bands: Int): DataFrame =
@@ -578,8 +537,8 @@ object Dedup {
 
   /** Recall bar the multiband recommendation column clears — single-
     * sourced between [[xMultibandRecall]]'s `recallBar` default and the
-    * DuckDB oracle string (ADVICE r15: a future default change must not
-    * desynchronize operator and oracle). */
+    * DuckDB oracle string, so a default change cannot desynchronize
+    * operator and oracle. */
   private[ext] val MultibandRecallBar = 0.95
 
   /** Serialized storage for corpus-sized shared frames (see the
@@ -587,9 +546,9 @@ object Dedup {
     * 3-5x larger and squeeze execution memory at scale). */
   private val Ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
-  /** Cache lifecycle for the eval/jaccard family (VERDICT r13 #2): the
-    * family persists corpus-sized shared frames for the duration of ONE
-    * query, so the query must also RELEASE them — a long-lived session
+  /** Cache lifecycle for the eval/jaccard family: the family persists
+    * corpus-sized shared frames for the duration of ONE query, so the
+    * query must also RELEASE them — a long-lived session
     * (the bench, a multi-tenant cluster app) would otherwise accumulate
     * corpus-sized serialized blocks per call until LRU pressure squeezes
     * every later query. The result is localCheckpoint'ed FIRST (eager —
@@ -605,64 +564,45 @@ object Dedup {
 
   def xJaccardNgram(s: SparkSession, dir: String,
                     threshold: Double = 0.3, bucketWidth: Int = 20,
-                    dfCap: Int = 50): DataFrame = {
-    val (out, docs, grouped) = jaccardNgramCached(s, dir, threshold,
-      bucketWidth, dfCap, docsPersist = None)
-    releaseAfter(docs, grouped)(out)
-  }
+                    dfCap: Int = 50): DataFrame =
+    jaccardNgram(s, dir, threshold, bucketWidth, dfCap, dropDocs = false)
 
-  /** Plan surface for the PlanSpec cache contract: the same pipeline with
-    * the two persists REGISTERED but not yet released, so the optimized
-    * plan shows the InMemoryRelations. Spec-only — callers must
-    * `spark.catalog.clearCache()` when done. Forces the docs persist so
-    * the contract is independent of the storage-pressure gate. */
-  private[graft] def xJaccardNgramPlan(s: SparkSession, dir: String): DataFrame =
-    jaccardNgramCached(s, dir, 0.3, 20, 50, docsPersist = Some(true))._1
-
-  /** [[xJaccardNgram]] with the docs-persist arm forced — the spec surface
-    * that pins the storage-pressure fallback produces byte-identical
-    * output. */
-  private[ext] def xJaccardNgramForced(s: SparkSession, dir: String,
-                                       keepDocs: Boolean): DataFrame = {
-    val (out, docs, grouped) = jaccardNgramCached(s, dir, 0.3, 20, 50,
-      docsPersist = Some(keepDocs))
-    releaseAfter(docs, grouped)(out)
-  }
+  /** [[xJaccardNgram]] with the docs persist dropped, as the storage-
+    * pressure gate drops it: the spec seam that pins the fallback's output
+    * byte-identical. */
+  private[ext] def xJaccardNgramDocsDropped(s: SparkSession,
+                                            dir: String): DataFrame =
+    jaccardNgram(s, dir, 0.3, 20, 50, dropDocs = true)
 
   /** Fraction of block-manager storage capacity past which the measured
     * footprint of the family's two caches counts as STORAGE PRESSURE and
-    * the docs persist is dropped (VERDICT r14 #1: the two corpus-sized
-    * persists made `x_jaccard_ngram`'s full-board time hostage to
-    * block-manager neighborhood — same-code readings spanned 3.9–26.8 s
-    * driver-side and 117–170 s at the 100× octave). The gate is REACTIVE,
-    * not predictive: parquet-size-based estimates are off by two orders
-    * (594 KB of snappy parquet becomes multi-GB bigram caches), so the
-    * caches are materialized first and the real bytes decide. Calibration
-    * from the r14 octave (16 GB probe heap → ~9.4 GiB storage): 30× fits
-    * comfortably (cached variant wins, 33–41 s vs the fallback's 52) and
-    * stays cached; at 100× the caches overgrow storage and spill
-    * (117–170 s, ±20% flutter) while the docs-free fallback is flat
-    * (165 s, leg 0.954) — so the gate fires between them, trading a
-    * possibly-faster median for the bounded worst case. */
+    * the docs persist is dropped. With both corpus-sized persists kept,
+    * `x_jaccard_ngram`'s time depended on what else the block manager held:
+    * same-code readings spanned 3.9–26.8 s on the sf0.1 board and
+    * 117–170 s at the 100× scale. The gate is REACTIVE, not predictive: parquet-size-
+    * based estimates are off by two orders (594 KB of snappy parquet
+    * becomes multi-GB bigram caches), so the caches are materialized first
+    * and the real bytes decide. Calibration from the 30×/100× scale runs
+    * (16 GB probe heap → ~9.4 GiB storage): 30× fits comfortably (cached
+    * variant wins, 33–41 s vs the fallback's 52) and stays cached; at 100×
+    * the caches overgrow storage and spill (117–170 s, ±20% flutter) while
+    * the docs-free fallback is flat (165 s, leg 0.954) — so the gate fires
+    * between them, trading a possibly-faster median for the bounded worst
+    * case. */
   private val StoragePressureFraction = 0.5
 
-  private def jaccardNgramCached(s: SparkSession, dir: String,
-                                 threshold: Double, bucketWidth: Int,
-                                 dfCap: Int, docsPersist: Option[Boolean])
-      : (DataFrame, DataFrame, DataFrame) = {
+  private def jaccardNgram(s: SparkSession, dir: String,
+                           threshold: Double, bucketWidth: Int,
+                           dfCap: Int, dropDocs: Boolean): DataFrame = {
     require(threshold > 0, "zero-intersection pairs are pruned by the index")
-    // materialize the two shared frames SERIALIZED. Honest COLD numbers
-    // (r14, fresh caches per call under the release-on-completion
-    // lifecycle; the r13 table's 15 s @30x / 56-83 s @100x were measured
-    // in the leaked-cache-entry regime the lifecycle fix removed): sf0.1
-    // ~4.3 s, 30x 33-38 s, 100x 117-170 s — still dominating the
-    // docs-persist-ONLY fallback (52/165, leg 0.954, the documented
-    // low-executor-disk choice) and the cache-free r12 shape (131/391)
-    // at every scale. The 30x->100x leg reads 0.97-1.25 across four
-    // runs (0.969 with 512 data-sized partitions): single-JVM spill
-    // flutter as both caches outgrow one 9.4 GiB block manager, a
-    // pressure profile a many-executor cluster does not reproduce; see
-    // COVERAGE.md "r14 scale + drift measurements".
+    // The two shared frames are materialized SERIALIZED and released when
+    // the query completes. Cold timings: sf0.1 ~4.3 s, 30x 33-38 s, 100x
+    // 117-170 s, ahead of the docs-persist-only fallback (52/165 s, leg
+    // 0.954) and of a cache-free shape (131/391 s) at every scale. The
+    // 30x->100x leg reads 0.97-1.25 across four runs: single-JVM spill
+    // flutter as both caches outgrow one 9.4 GiB block manager, a pressure
+    // profile a many-executor cluster does not reproduce; see COVERAGE.md
+    // "r14 scale + drift measurements".
     //  - `docs` (shingled corpus): consumed by the posting build AND the
     //    exact-scoring `sets` frame — uncached, the scoring arm re-scans
     //    and re-shingles the whole corpus (shingle CPU, not the shuffle,
@@ -671,38 +611,36 @@ object Dedup {
     //    candidate and capped-count branches — caching it keeps the
     //    corpus-sized gram SHUFFLE at exactly one, the invariant that
     //    dominates on a real cluster where exchanges cross the network
-    //    (pre-r13 this was ReusedExchange; a cache is robust to AQE
-    //    re-planning where plan-identity reuse is not).
+    //    (a cache is robust to AQE re-planning where plan-identity
+    //    exchange reuse is not).
     // MEMORY_AND_DISK_SER, not localCheckpoint: deserialized gram arrays
-    // are 3-5x larger and squeezed execution memory at the 100x probe
+    // are 3-5x larger and squeezed execution memory at the 100x scale
     // (localCheckpoint variant measured leg exponent 1.47; serialized
     // persist 0.95). At 100 TB both caches are disk-backed spill; a
     // deployment short on executor disk should drop the `docs` persist
     // first — recomputing the shingle scan is cheap, re-shuffling the
     // gram index is not.
     val docsBase = bigramDocs(s, dir, bucketWidth)
-    val docs = if (docsPersist.contains(false)) docsBase
-      else docsBase.persist(Ser)
+    val docs = if (dropDocs) docsBase else docsBase.persist(Ser)
     // one aggregation classifies every (lang, bucket, gram) group: lists
     // with 2..dfCap docs become posting lists (candidate generators);
     // lists past the cap only contribute to the per-doc capped-gram count
     // the pruning bound needs
     val grouped = bigramPostings(docs).persist(Ser)
-    if (docsPersist.isEmpty) {
-      // Storage-pressure gate (VERDICT r14 #1): materialize both caches
-      // through one count (the postings build would run first anyway; the
-      // main job below reuses the cached index, so the extra cost is one
-      // count over cached data), then let the measured storage footprint
-      // decide whether the docs persist survives. The measurement is
-      // DELIBERATELY total-context (every cached RDD in the SparkContext,
-      // mem + disk, vs the block managers' memory capacity — ADVICE r15):
-      // the failure mode being bounded is the block manager squeezing
+    if (!dropDocs) {
+      // Storage-pressure gate: materialize both caches through one count
+      // (the postings build would run first anyway; the main job below
+      // reuses the cached index, so the extra cost is one count over
+      // cached data), then let the measured storage footprint decide
+      // whether the docs persist survives. The measurement is DELIBERATELY
+      // total-context (every cached RDD in the SparkContext, mem + disk,
+      // vs the block managers' memory capacity): the failure mode being
+      // bounded is the block manager squeezing
       // execution memory, and a neighbor's cache squeezes exactly like our
       // own, so under a crowded context the right call is still to drop
       // the optional persist (result-invariant either way). Under pressure
       // the scoring arm recomputes the shingle scan instead of competing
-      // for storage — the scaladoc'd fallback (leg 0.954, far flatter
-      // worst case), now automatic instead of prose.
+      // for storage (leg 0.954, a far flatter worst case).
       grouped.count()
       val maxStorage = s.sparkContext.getExecutorMemoryStatus
         .values.map(_._1).sum
@@ -765,7 +703,7 @@ object Dedup {
           .as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .orderBy("doc_a", "doc_b")
-    (out, docs, grouped)
+    releaseAfter(docs, grouped)(out)
   }
 
   /** Character-level edit-distance similarity join over document title
@@ -949,10 +887,10 @@ object Dedup {
     * signature — bands 0..3 chunk md5(sh), bands past 4 chunk salted
     * digests). Per-band collision probability for a pair at Jaccard J is J,
     * so the OR over b bands catches it with 1−(1−J)^b — the knob that
-    * reaches the mid-band (J 0.3–0.6) template clusters the r13 hard-corpus
-    * grid proved invisible to both the 1-band generator (recall 0.35) and
-    * the dfCap=50 exact join (0.311): at J = 0.32, 8 bands give an expected
-    * 0.95.
+    * reaches the mid-band (J 0.3–0.6) template clusters of the hard corpus
+    * (`tools/recall_hard.py`), which both the 1-band generator (recall
+    * 0.35) and the dfCap=50 exact join (0.311) miss: at J = 0.32, 8 bands
+    * give an expected 0.95.
     *
     * Spark shape: ONE equi-join, not b of them — the signature frame
     * posexplodes to (band_idx, band_val, doc_id, n_sh) rows (fixed-width,
@@ -964,16 +902,9 @@ object Dedup {
     * candidate for any b' > min_band (the same one-pass trick as
     * [[jaccardTruthPairs]]' min_df), which [[xMultibandRecall]] exploits. */
   private[ext] def multibandCandidates(s: SparkSession, dir: String,
-                                       bands: Int): DataFrame =
-    multibandCandidatesFrom(docSignatures(s, dir, bands), bands)
-
-  /** Candidate generation over an explicit signature frame — the surface
-    * that lets [[xMultibandRecall]] derive signatures from its already-
-    * cached (doc_id, shingle) truth frame instead of re-shingling the
-    * corpus a second time. */
-  private def multibandCandidatesFrom(sig: DataFrame,
-                                      bands: Int): DataFrame = {
-    val banded = sig.select(col("doc_id"), col("n_sh"),
+                                       bands: Int): DataFrame = {
+    val banded = docSignatures(s, dir, bands)
+      .select(col("doc_id"), col("n_sh"),
         posexplode(array((0 until bands).map(i => col(s"b$i")): _*))
           .as(Seq("band_idx", "band_val")))
       // explicit exchange → reused across both self-join branches (the
@@ -1148,39 +1079,20 @@ object Dedup {
     * shingles ([[lshTruthPairs]]' `dfCap` — drop ubiquitous shingles from
     * the index), which bounds the per-shingle quadratic exactly like LSH
     * bucket width; the cap is applied in BOTH engines, so the oracle pins
-    * the capped semantics. */
+    * the capped semantics.
+    *
+    * The candidate arm is [[lshCandidates]] itself. A doc's band minima
+    * depend only on its own shingles and the truth pairs are left-joined to
+    * the candidates, so each truth pair's verdict is the same whether or
+    * not the truth arm is sampled. */
   def xLshRecall(s: SparkSession, dir: String,
                  thresholds: Seq[Double] =
                    Seq(0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8),
                  dfCap: Int = 100,
-                 sampleFrac: Double = 1.0): DataFrame =
-    lshRecallBuild(s, dir, thresholds, dfCap, sampleFrac, barriers = true)
-
-  /** Plan-audit surface (r16): the same logical pipeline with every
-    * materialization barrier removed (no persists, no localCheckpoints) so
-    * `explain` shows the whole operator tree instead of an ExistingRDD
-    * scan. Never benched or oracle-checked. */
-  private[graft] def xLshRecallPlan(s: SparkSession, dir: String): DataFrame =
-    lshRecallBuild(s, dir, Seq(0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8), 100, 1.0,
-      barriers = false)
-
-  private def lshRecallBuild(s: SparkSession, dir: String,
-                             thresholds: Seq[Double], dfCap: Int,
-                             sampleFrac: Double,
-                             barriers: Boolean): DataFrame = {
-    // Persist registers in both modes: the plan-audit surface must SHOW
-    // the cache reuse (candidate arm reading the truth explode's
-    // InMemoryRelation instead of a second corpus scan) — its caller
-    // clears the cache; only the checkpoints/releases are plan-opaque.
+                 sampleFrac: Double = 1.0): DataFrame = {
     val (truth, exploded, docShingles) =
-      lshTruthBuild(s, dir, dfCap, _.persist(Ser), sampleFrac)
-    // candidate signatures derive from the truth arm's CACHED (doc_id,
-    // shingle) explode — one corpus shingle pass serves both arms, the
-    // same reuse [[xMultibandRecall]] measured at −2 s in r14 (a doc's
-    // band minima depend only on its own shingles, so candidate verdicts
-    // are unchanged — sampled or not)
-    val cand = lshCandidatesFrom(signaturesOf(exploded, 1), bands = 1,
-        barrier = barriers)
+      lshTruthBuild(s, dir, dfCap, sampleFrac)
+    val cand = lshCandidates(s, dir, bands = 1)
       .select(col("doc_a").as("c_a"), col("doc_b").as("c_b"),
         lit(1L).as("cand_hit"))
     val scored = truth.join(cand,
@@ -1190,7 +1102,7 @@ object Dedup {
       .select(explode(typedLit(thresholds)).as("threshold"))
     // 7 threshold rows broadcast against the (small) true-pair set; a
     // threshold with zero qualifying pairs still reports a row
-    val res = broadcast(th)
+    releaseAfter(exploded, docShingles)(broadcast(th)
       .join(scored, col("jac") >= col("threshold"), "left")
       .groupBy("threshold")
       .agg(count(col("jac")).as("n_true"),
@@ -1199,8 +1111,7 @@ object Dedup {
         when(col("n_true") > 0,
           round(col("n_hit") / col("n_true") + lit(1e-9), 6))
           .otherwise(lit(0.0)).as("recall"))
-      .orderBy("threshold")
-    if (barriers) releaseAfter(exploded, docShingles)(res) else res
+      .orderBy("threshold"))
   }
 
   /** Recall of the OR-composed multi-band candidate generator
@@ -1221,13 +1132,8 @@ object Dedup {
                        sampleFrac: Double = 1.0,
                        recallBar: Double = MultibandRecallBar): DataFrame = {
     val (truth, exploded, docShingles) =
-      lshTruthBuild(s, dir, dfCap, _.persist(Ser), sampleFrac)
-    // signatures derive from the truth arm's CACHED (doc_id, shingle)
-    // explode — one corpus shingle pass serves both arms (measured r14,
-    // isolated 3-query bench at sf0.1: 9.8 -> 7.2 s, i.e. from +2.2 s
-    // over x_lsh_recall's shared truth arm down to +0.2 s)
-    val cand = multibandCandidatesFrom(
-        signaturesOf(exploded, bandGrid.max), bandGrid.max)
+      lshTruthBuild(s, dir, dfCap, sampleFrac)
+    val cand = multibandCandidates(s, dir, bandGrid.max)
       .select(col("doc_a").as("c_a"), col("doc_b").as("c_b"),
         col("min_band"))
     val scored = truth.join(cand,
@@ -1248,11 +1154,11 @@ object Dedup {
         when(col("n_true") > 0,
           round(col("n_hit").cast("double") / col("n_true") + lit(1e-9), 6))
           .otherwise(lit(0.0)).as("recall"))
-    // the eval emits the DECISION, not just the table (VERDICT r14 #8):
-    // per threshold, `recommended` marks the SMALLEST banding whose
-    // measured recall clears the bar — the b a deployment should run at
-    // that similarity floor; no row is marked where nothing clears it.
-    // A 28-row window, not a corpus operation.
+    // the eval emits the DECISION, not just the table: per threshold,
+    // `recommended` marks the SMALLEST banding whose measured recall clears
+    // the bar — the b a deployment should run at that similarity floor; no
+    // row is marked where nothing clears it. A 28-row window, not a corpus
+    // operation.
     val wTh = org.apache.spark.sql.expressions.Window.partitionBy("threshold")
     releaseAfter(exploded, docShingles)(cells
       .withColumn("best_b",
@@ -1265,36 +1171,24 @@ object Dedup {
   }
 
   /** Exact-Jaccard ground-truth pairs for [[xLshRecall]], with the scale
-    * bound actually CODED, not just documented (VERDICT r8 "what's wrong"
-    * #1): shingles whose document frequency exceeds `dfCap` are dropped
-    * from the truth index BEFORE the self-join — one ubiquitous shingle
-    * would otherwise make its bucket quadratic in the corpus. Jaccard is
-    * then computed over the surviving (non-ubiquitous) shingles on both
-    * the intersection and the size side, a well-defined quantity the
-    * DuckDB oracle mirrors with the same cap. */
+    * bound coded: shingles whose document frequency exceeds `dfCap` are
+    * dropped from the truth index BEFORE the self-join — one ubiquitous
+    * shingle would otherwise make its bucket quadratic in the corpus.
+    * Jaccard is then computed over the surviving (non-ubiquitous) shingles
+    * on both the intersection and the size side, a well-defined quantity
+    * the DuckDB oracle mirrors with the same cap. */
   private[ext] def lshTruthPairs(s: SparkSession, dir: String,
-                                 dfCap: Int): DataFrame =
-    lshTruthBuild(s, dir, dfCap, identity)._1
+                                 dfCap: Int): DataFrame = {
+    val (truth, exploded, docShingles) = lshTruthBuild(s, dir, dfCap)
+    releaseAfter(exploded, docShingles)(truth)
+  }
 
-  /** The truth pipeline with its two corpus-sized shared frames passed
-    * through `mat` — `_.persist(Ser)` in the recall queries (which then
-    * release via [[releaseAfter]]), `identity` in the spec surface
-    * [[lshTruthPairs]] where nothing must outlive the call. Returns the
-    * truth frame plus the materialized handles so the CALLER owns the
-    * cache lifecycle (VERDICT r13 #2: persisting here and releasing
-    * nowhere leaked corpus-sized blocks per query).
-    *
-    * Serialized persists, not localCheckpoint: these two frames are
-    * CORPUS-sized (every (doc, shingle) row), and the 100x octave showed
-    * deserialized caches of corpus-sized string data squeezing execution
-    * memory 3-5x harder than their serialized form (x_jaccard_ngram's
-    * localCheckpoint variant: leg exponent 1.47 vs 0.95 serialized). */
   /** Deterministic md5 draw on a key column: keeps a row iff the first 8
     * hex chars of md5(key), read as a 32-bit integer, fall below
-    * `frac` of the hash space — the eval-envelope sampling arm (VERDICT
-    * r13 #7). md5, not rand(): the draw must be reproducible across runs,
-    * engines and partitionings, and the DuckDB compare never sees it
-    * (the driver always runs the frac = 1 defaults). */
+    * `frac` of the hash space — the eval-envelope sampling arm. md5, not
+    * rand(): the draw must be reproducible across runs, engines and
+    * partitionings, and the DuckDB compare never sees it (`Verify` always
+    * runs the frac = 1 defaults). */
   private def hashSampled(df: DataFrame, key: Column,
                           frac: Double): DataFrame = {
     require(frac > 0.0 && frac <= 1.0, s"sample fraction $frac outside (0,1]")
@@ -1304,27 +1198,35 @@ object Dedup {
         < lit(frac * 4294967296.0))
   }
 
+  /** The truth pipeline of [[lshTruthPairs]]. Its two corpus-sized shared
+    * frames are persisted and returned with the truth frame, so the caller
+    * releases them through [[releaseAfter]] once the truth is consumed.
+    *
+    * Serialized persists, not localCheckpoint: these two frames are
+    * CORPUS-sized (every (doc, shingle) row), and the 100x scale run showed
+    * deserialized caches of corpus-sized string data squeezing execution
+    * memory 3-5x harder than their serialized form (x_jaccard_ngram's
+    * localCheckpoint variant: leg exponent 1.47 vs 0.95 serialized). */
   private def lshTruthBuild(s: SparkSession, dir: String, dfCap: Int,
-                            mat: DataFrame => DataFrame,
                             sampleFrac: Double = 1.0)
       : (DataFrame, DataFrame, DataFrame) = {
-    // Sampling arm (the scaladoc'd envelope, now CODE): restrict the truth
-    // corpus to an md5-drawn doc sample BEFORE shingling — recall is a
-    // ratio, statistically valid on the pair subset whose endpoints both
-    // survive the draw (~frac² of pairs), and the truth arm's
-    // Σ min(df,cap)²/2 cost shrinks with the sample. The df cap scales to
-    // the sample (ceil(cap·frac)) so "ubiquitous" keeps its per-capita
-    // meaning; the candidate arm needs no change — a sampled pair is a
-    // candidate iff its bands collide, which sampling never alters.
+    // Sampling arm: restrict the truth corpus to an md5-drawn doc sample
+    // BEFORE shingling — recall is a ratio, statistically valid on the
+    // pair subset whose endpoints both survive the draw (~frac² of pairs),
+    // and the truth arm's Σ min(df,cap)²/2 cost shrinks with the sample.
+    // The df cap scales to the sample (ceil(cap·frac)) so "ubiquitous"
+    // keeps its per-capita meaning; the candidate arm needs no change — a
+    // sampled pair is a candidate iff its bands collide, which sampling
+    // never alters.
     val effCap = math.max(1, math.ceil(dfCap * sampleFrac).toInt)
-    val exploded = mat(Grams.shingleRows(hashSampled(
-      Tables.load(s, dir, "documents"), col("doc_id"), sampleFrac)))
-      // df aggregate + the capped-index join re-read it
+    val exploded = Grams.shingleRows(hashSampled(
+      Tables.load(s, dir, "documents"), col("doc_id"), sampleFrac))
+      .persist(Ser) // df aggregate + the capped-index join re-read it
     val rare = exploded.groupBy("shingle").agg(count(lit(1)).as("df"))
       .filter(col("df") <= effCap).select("shingle")
-    val docShingles = mat(exploded.join(rare, "shingle")
-      .select("doc_id", "shingle"))
-      // both truth-join sides + the size aggregate
+    val docShingles = exploded.join(rare, "shingle")
+      .select("doc_id", "shingle")
+      .persist(Ser) // both truth-join sides + the size aggregate
     val sizes = docShingles.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val inter = docShingles.as("a").join(docShingles.as("b"),
         col("a.shingle") === col("b.shingle") &&
@@ -1364,37 +1266,39 @@ object Dedup {
     * essentially every doc of the block and carry no pair information,
     * and the oracle mirrors the ceiling exactly. A HIT ceiling would
     * silently undercount truth Jaccard and break the min_df≤cap
-    * equivalence (ADVICE r12), so the ceiling is ASSERTED against the
-    * corpus's actual max in-block df — a bigger/skewed corpus fails loud
-    * ("raise the ceiling"), never quietly mis-measures recall. */
+    * equivalence, so the ceiling is ASSERTED against the corpus's actual
+    * max in-block df — a bigger/skewed corpus fails loud ("raise the
+    * ceiling"), never quietly mis-measures recall. */
   private[ext] def jaccardTruthPairs(s: SparkSession, dir: String,
                                      bucketWidth: Int = 20,
-                                     truthDfCeil: Int = 10000): DataFrame =
-    jaccardTruthBuild(s, dir, bucketWidth, truthDfCeil, identity)._1
+                                     truthDfCeil: Int = 10000): DataFrame = {
+    val (truth, docs) = jaccardTruthBuild(s, dir, bucketWidth, truthDfCeil)
+    releaseAfter(docs)(truth)
+  }
 
-  /** The uncapped truth pipeline with the shingled-docs shared frame
-    * passed through `mat` — `_.persist(Ser)` in [[xJaccardRecall]] (which
-    * releases via [[releaseAfter]]), `identity` in the spec surface above.
-    * The serialized persist carries the same reuse + footprint trade as
-    * [[xJaccardNgram]]: the ceiling ASSERT and the truth pipeline both
-    * read the frame, and the assert's df probe is a count-only aggregate
-    * (map-side-combinable longs — never the collect_list posting arrays,
-    * whose extra build cost the r12 watch item forbids). */
+  /** The uncapped truth pipeline of [[jaccardTruthPairs]]. The shingled
+    * docs frame is persisted and returned with the truth frame, so the
+    * caller releases it through [[releaseAfter]]. The serialized persist
+    * carries the same reuse + footprint trade as [[xJaccardNgram]]: the
+    * ceiling ASSERT and the truth pipeline both read the frame, and the
+    * assert's df probe is a count-only aggregate (map-side-combinable
+    * longs — never the collect_list posting arrays, which cost more to
+    * build). */
   private def jaccardTruthBuild(s: SparkSession, dir: String,
                                 bucketWidth: Int, truthDfCeil: Int,
-                                mat: DataFrame => DataFrame,
                                 blockSampleFrac: Double = 1.0)
-      : (DataFrame, Seq[DataFrame]) = {
+      : (DataFrame, DataFrame) = {
     // Sampling arm: the jaccard envelope samples whole (lang, bucket)
     // BLOCKS, not documents — within a surviving block every df, min_df
     // and pair is EXACT (doc-sampling would shrink in-block dfs and bias
     // the min_df <= cap equivalence optimistic), and blocks are the unit
     // the df²/2 truth cost accrues by. md5 draw on the block key.
-    val docs = mat(hashSampled(bigramDocs(s, dir, bucketWidth),
-      concat_ws("|", col("lang"), col("bucket")), blockSampleFrac))
+    val docs = hashSampled(bigramDocs(s, dir, bucketWidth),
+      concat_ws("|", col("lang"), col("bucket")), blockSampleFrac)
+      .persist(Ser)
     // the ceiling probe runs (and can throw) BEFORE the caller gets the
-    // cache handles back — release on the failure path so a loud assert
-    // doesn't also leak a corpus-sized cache (no-op when mat = identity)
+    // cache handle back — release on the failure path so a loud assert
+    // doesn't also leak a corpus-sized cache
     val maxDf = try {
       val maxDfRow = docs
         .select(col("lang"), col("bucket"), explode(col("bg")).as("g"))
@@ -1419,14 +1323,13 @@ object Dedup {
         round(col("ni").cast("double") /
           (col("n_a") + col("n_b") - col("ni")), 4).as("jac"),
         col("min_df"))
-    (truth, Seq(docs))
+    (truth, docs)
   }
 
-  /** Recall of [[xJaccardNgram]]'s df-cap — the knob VERDICT r11 called
-    * "asserted, never measured" — against exact uncapped truth, reported
-    * over a (dfCap × threshold) grid: for each cap in `dfCaps` and each
-    * similarity threshold, how many true pairs (exact Jaccard ≥ t within
-    * the same blocking) the capped join surfaces. The capped arm is NOT
+  /** Recall of [[xJaccardNgram]]'s df-cap against exact uncapped truth,
+    * reported over a (dfCap × threshold) grid: for each cap in `dfCaps` and
+    * each similarity threshold, how many true pairs (exact Jaccard ≥ t
+    * within the same blocking) the capped join surfaces. The capped arm is NOT
     * re-run per cap: a pair survives cap c iff `min_df <= c` (see
     * [[jaccardTruthPairs]]), so the whole grid is one truth pass + a
     * broadcast grid join — the same harness shape as [[xLshRecall]], but
@@ -1435,7 +1338,7 @@ object Dedup {
     * more grams; near-identical pairs share rarer grams), and the report
     * shows where the curve crosses the ~0.95 bar the cap must clear.
     *
-    * ==Eval-harness scale envelope (VERDICT r12 #8)==
+    * ==Eval-harness scale envelope==
     * The recall evals deliberately carry an expensive truth arm — that IS
     * their point — so each has a stated envelope beyond which the eval
     * must run on a SAMPLE (hash-sample doc_id/vec_id; recall is a ratio,
@@ -1460,8 +1363,7 @@ object Dedup {
     *
     * Measured anchors at sf0.1 (5k docs, local[32]): x_jaccard_recall
     * ~9 s, x_lsh_recall ~6 s — both linear in their cost models above.
-    * The sampling arms are PARAMETERS, not just prose (r13 stretch #7):
-    * `blockSampleFrac` here draws whole (lang, bucket) blocks by md5 so
+    * The sampling arms are parameters: `blockSampleFrac` here draws whole (lang, bucket) blocks by md5 so
     * every in-block df stays exact; `sampleFrac` on [[xLshRecall]] /
     * [[xMultibandRecall]] draws documents (the cap scales to the sample).
     * ExtSpec pins that sampled recall tracks full recall at sf0.1. */
@@ -1469,31 +1371,16 @@ object Dedup {
                      dfCaps: Seq[Int] = Seq(25, 50, 100),
                      thresholds: Seq[Double] =
                        Seq(0.3, 0.4, 0.5, 0.6, 0.7, 0.8),
-                     blockSampleFrac: Double = 1.0): DataFrame =
-    jaccardRecallBuild(s, dir, dfCaps,
-      thresholds, blockSampleFrac, barriers = true)
-
-  /** Plan-audit surface (r16) — see [[xLshRecallPlan]]. */
-  private[graft] def xJaccardRecallPlan(s: SparkSession,
-                                        dir: String): DataFrame =
-    jaccardRecallBuild(s, dir, Seq(25, 50, 100),
-      Seq(0.3, 0.4, 0.5, 0.6, 0.7, 0.8), 1.0, barriers = false)
-
-  private def jaccardRecallBuild(s: SparkSession, dir: String,
-                                 dfCaps: Seq[Int],
-                                 thresholds: Seq[Double],
-                                 blockSampleFrac: Double,
-                                 barriers: Boolean): DataFrame = {
-    val (truthAll, caches) = jaccardTruthBuild(s, dir, bucketWidth = 20,
-      truthDfCeil = 10000,
-      if (barriers) _.persist(Ser) else identity, blockSampleFrac)
+                     blockSampleFrac: Double = 1.0): DataFrame = {
+    val (truthAll, docs) = jaccardTruthBuild(s, dir, bucketWidth = 20,
+      truthDfCeil = 10000, blockSampleFrac)
     val truth = truthAll.filter(col("jac") >= thresholds.min)
     val grid = s.range(1)
       .select(explode(typedLit(dfCaps.map(_.toLong))).as("df_cap"))
       .select(col("df_cap"), explode(typedLit(thresholds)).as("threshold"))
     // 18 grid rows broadcast against the (small) true-pair set; a cell
     // with zero qualifying pairs still reports a row
-    val res = broadcast(grid)
+    releaseAfter(docs)(broadcast(grid)
       .join(truth, col("jac") >= col("threshold"), "left")
       .groupBy("df_cap", "threshold")
       .agg(count(col("jac")).as("n_true"),
@@ -1503,8 +1390,7 @@ object Dedup {
         when(col("n_true") > 0,
           round(col("n_hit").cast("double") / col("n_true") + lit(1e-9), 6))
           .otherwise(lit(0.0)).as("recall"))
-      .orderBy("df_cap", "threshold")
-    if (barriers) releaseAfter(caches: _*)(res) else res
+      .orderBy("df_cap", "threshold"))
   }
 
   val queries: Map[String, Q] = Map(

@@ -291,53 +291,52 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("jaccard ngram: df-capped posting lists, candidate-bounded scoring") {
-    // r11 shape (the 30x probe caught the r9 self-join going quadratic in
-    // bucket population): ONE expansion of the bigram pipeline into the
-    // df-capped posting-list aggregate, in-bucket pair generation, and
-    // array_intersect only on the candidate-bounded frame (the edit-pairs
-    // levenshtein pattern — per-pair set algebra was the anti-pattern only
-    // on the QUADRATIC in-bucket pair set, where it measured 92 s at sf0.1)
-    // the PLAN surface: same pipeline as xJaccardNgram with the persists
-    // registered but not yet released (the public query materializes and
-    // then drops its caches — r14 lifecycle — so its returned frame is a
-    // checkpoint scan with nothing left to inspect)
-    val df = graft.ext.Dedup.xJaccardNgramPlan(spark, dir)
-    val opt = df.queryExecution.optimizedPlan.toString
-    assert(opt.contains("collect_list("),
-      s"posting-list aggregate missing:\n${opt.take(2000)}")
+    // the shape that keeps x_jaccard_ngram linear in bucket population:
+    // ONE expansion of the bigram pipeline into the df-capped posting-list
+    // aggregate, in-bucket pair generation, and array_intersect only on the
+    // candidate-bounded frame (per-pair set algebra on the QUADRATIC
+    // in-bucket pair set measured 92 s at sf0.1). The query releases its
+    // caches before it returns, so the plans are read from the executions
+    // it runs: the gate's count and the eager checkpoint of the result.
+    spark.catalog.clearCache()
+    val runs = executionsOf(Seq("x_jaccard_ngram"))
+    val opts = runs.map(_._2.optimizedPlan.toString)
+    val plans = runs.map(_._2.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.toString
+      case p => p.toString
+    })
+    def show(ps: Seq[String]) = ps.map(_.take(2000)).mkString("\n----\n")
+    assert(opts.exists(_.contains("collect_list(")),
+      s"posting-list aggregate missing:\n${show(opts)}")
     // the sort lives OUTSIDE the aggregate, after the df-cap filter, so
     // only <=dfCap-element arrays are ever sorted — sorting inside the
-    // aggregate would sort the heaviest capped lists, twice (review r11)
-    assert(opt.contains("sort_array(entries"),
-      s"pair expansion must sort the capped posting lists:\n${opt.take(2000)}")
-    assert(!opt.contains("sort_array(collect_list("),
-      s"sort must not run inside the shared aggregate:\n${opt.take(2000)}")
-    // r13 shape: the shingled docs AND the grouped gram index are both
-    // persisted SERIALIZED — the candidate and capped-count branches read
-    // the index CACHE (one gram shuffle, computed once, the invariant
-    // that matters when exchanges cross a real cluster's network) and the
-    // exact-scoring sets frames read the docs cache (one shingle pass —
-    // measured as the dominant local cost; honest cold r14 numbers:
-    // sf0.1 ~4.3 s, 30x 33-38 s vs the cache-free shape's 131 s, see
-    // Dedup.xJaccardNgram). The cache replaces the r11 ReusedExchange
-    // pin: plan-identity reuse broke the moment one consumer's pruning
-    // diverged, while a cache is robust to AQE re-planning.
-    assert(opt.contains("InMemoryRelation"),
-      s"shared frames must be cached:\n${opt.take(2000)}")
-    val plan = planOf(df)
-    assert(plan.split("InMemoryTableScan", -1).length - 1 >= 4,
+    // aggregate would sort the heaviest capped lists, twice
+    assert(opts.exists(_.contains("sort_array(entries")),
+      s"pair expansion must sort the capped posting lists:\n${show(opts)}")
+    assert(!opts.exists(_.contains("sort_array(collect_list(")),
+      s"sort must not run inside the shared aggregate:\n${show(opts)}")
+    // the shingled docs AND the grouped gram index are both persisted
+    // SERIALIZED — the candidate and capped-count branches read the index
+    // CACHE (one gram shuffle, computed once, the invariant that matters
+    // when exchanges cross a real cluster's network) and the exact-scoring
+    // sets frames read the docs cache (one shingle pass — measured as the
+    // dominant local cost). A cache, unlike plan-identity exchange reuse,
+    // survives one consumer's pruning diverging under AQE re-planning.
+    assert(opts.exists(_.contains("InMemoryRelation")),
+      s"shared frames must be cached:\n${show(opts)}")
+    val main = plans.maxBy(_.split("InMemoryTableScan", -1).length)
+    assert(main.split("InMemoryTableScan", -1).length - 1 >= 4,
       s"both index branches and both sets sides must read the caches:\n${
-        plan.take(3000)}")
+        main.take(3000)}")
     // serialized storage, not deserialized: gram arrays are 3-5x larger
-    // deserialized and squeezed execution memory at the 100x probe
+    // deserialized and squeezed execution memory at the 100x scale
     // (localCheckpoint variant measured leg exponent 1.47 vs 0.95)
-    assert(plan.contains("StorageLevel(disk, memory, 1 replicas)") &&
-      !plan.contains("StorageLevel(disk, memory, deserialized"),
-      s"caches must be MEMORY_AND_DISK_SER:\n${plan.take(2000)}")
-    assert(!plan.contains("CartesianProduct"), plan.take(2000))
-    // the plan surface leaves its persists registered by design — drop them
-    // so later suites' string-count plan assertions stay cache-free
-    spark.catalog.clearCache()
+    assert(main.contains("StorageLevel(disk, memory, 1 replicas)") &&
+      !plans.exists(_.contains("StorageLevel(disk, memory, deserialized")),
+      s"caches must be MEMORY_AND_DISK_SER:\n${main.take(2000)}")
+    assert(!plans.exists(_.contains("CartesianProduct")), show(plans))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "x_jaccard_ngram left cached plans behind")
   }
 
   test("jaccard/LSH family releases its caches when the query completes") {
@@ -408,29 +407,30 @@ class PlanSpec extends AnyFunSuite {
   test("cached frames get data-sized partitions, no exchange above a cache") {
     // Persisted frames are AQE-coalesced like any other exchange output:
     // without that the gram index keeps all 256 initialPartitionNum
-    // partitions and every scan of it runs 256 tasks for a few KB
+    // partitions and every scan of it runs 256 tasks for a few KB. The
+    // caches are released inside each query, so every executed plan the
+    // four persisted-frame queries run is checked.
     spark.catalog.clearCache()
-    val df = graft.ext.Dedup.xJaccardNgramPlan(spark, dir)
-    df.collect()
-    val scans = nodesOf(df.queryExecution.executedPlan).collect {
-      case s: InMemoryTableScanExec => s
-    }
-    val index = scans.filter(_.output.exists(_.name == "entries"))
-    assert(index.nonEmpty, s"gram index cache scan missing:\n${
-      df.queryExecution.executedPlan.toString.take(3000)}")
-    val maxParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    index.foreach { s =>
-      val n = s.relation.cacheBuilder.cachedColumnBuffers.getNumPartitions
-      assert(n <= maxParts,
-        s"cached gram index has $n partitions, shuffle.partitions $maxParts")
-    }
-    spark.catalog.clearCache()
-    // the coalesced cache must not make consumers re-shuffle it: check
-    // every executed plan the four persisted-frame queries run (caches are
-    // released inside the query, so the returned frame shows none of them)
     val plans = executionsOf(Seq("x_jaccard_ngram", "x_lsh_recall",
       "x_multiband_recall", "x_jaccard_recall"))
       .map { case (f, qe) => f -> qe.executedPlan }
+    val index = plans.flatMap { case (_, p) => nodesOf(p) }.collect {
+      case s: InMemoryTableScanExec if s.output.exists(_.name == "entries") => s
+    }
+    assert(index.nonEmpty, s"gram index cache scan missing:\n${
+      plans.map(_._2.toString.take(2000)).mkString("\n----\n")}")
+    val maxParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    index.foreach { s =>
+      // the partitioning the cache was built with: its final plan's
+      val built = s.relation.cachedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val n = built.outputPartitioning.numPartitions
+      assert(n <= maxParts,
+        s"cached gram index has $n partitions, shuffle.partitions $maxParts")
+    }
+    // the coalesced cache must not make consumers re-shuffle it
     val cached = plans.filter { case (_, p) =>
       nodesOf(p).exists(_.isInstanceOf[InMemoryTableScanExec]) }
     assert(cached.nonEmpty, "the persisted-frame queries read no cache")

@@ -285,17 +285,14 @@ class ExtSpec extends AnyFunSuite {
   test("jaccard ngram: docs-persist fallback is byte-identical, caches released") {
     // the storage-pressure gate may drop the docs persist (the scoring arm
     // then recomputes the shingle scan) — a pure execution choice that must
-    // never touch the result; both forced arms and the auto default agree
+    // never touch the result; the forced drop and the gated default agree
     val auto = Dedup.xJaccardNgram(spark, dir).collect().map(_.toSeq).toSeq
-    val kept = Dedup.xJaccardNgramForced(spark, dir, keepDocs = true)
+    val dropped = Dedup.xJaccardNgramDocsDropped(spark, dir)
       .collect().map(_.toSeq).toSeq
-    val dropped = Dedup.xJaccardNgramForced(spark, dir, keepDocs = false)
-      .collect().map(_.toSeq).toSeq
-    assert(auto == kept, "auto vs forced-keep diverge")
     assert(auto == dropped, "auto vs forced-drop diverge")
     assert(auto.nonEmpty, "no jaccard pairs at test scale — vacuous")
     assert(spark.sharedState.cacheManager.isEmpty,
-      "forced arms left cached plans behind")
+      "the forced drop left cached plans behind")
   }
 
   test("jaccard: identity is 1, disjoint is 0") {
@@ -535,10 +532,14 @@ class ExtSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("lshcap").toString
     rows.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    spark.catalog.clearCache()
     val uncapped = Dedup.lshTruthPairs(spark, tmp, dfCap = 100).collect()
     assert(uncapped.length == 66, s"uncapped pairs: ${uncapped.length}")
     val capped = Dedup.lshTruthPairs(spark, tmp, dfCap = 5).collect()
     assert(capped.length == 1, s"capped pairs: ${capped.length}")
+    // the truth build persists its shingle frames and releases them
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "lshTruthPairs left cached plans behind")
     val p = capped.head
     assert(p.getAs[Long]("doc_a") == 1L && p.getAs[Long]("doc_b") == 2L)
     // jac over the SURVIVING shingles only, both numerator and denominator
@@ -746,8 +747,12 @@ class ExtSpec extends AnyFunSuite {
     // of xJaccardNgram equals the uncapped truth frame filtered to
     // min_df <= c — so ONE truth pass measures every cap. Pin it against
     // the shipped query itself for two caps, values included.
+    spark.catalog.clearCache()
     val truth = Dedup.jaccardTruthPairs(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+    // the truth build persists its docs frame and releases it
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "jaccardTruthPairs left cached plans behind")
     for (cap <- Seq(5, 50)) {
       val fromTruth = truth
         .filter(t => t._4 <= cap && t._3 >= 0.3)
@@ -780,6 +785,8 @@ class ExtSpec extends AnyFunSuite {
     // one cell recomputed from the truth frame directly
     val truth = Dedup.jaccardTruthPairs(spark, dir).collect()
       .map(r => (r.getDouble(2), r.getLong(3)))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "jaccardTruthPairs left cached plans behind")
     val nTrue03 = truth.count(_._1 >= 0.3)
     val nHit03 = truth.count(t => t._1 >= 0.3 && t._2 <= 50L)
     val cell = rows.find(r => r._1 == 50L && r._2 == 0.3).get

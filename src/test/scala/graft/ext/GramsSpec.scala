@@ -43,27 +43,30 @@ class GramsSpec extends AnyFunSuite {
   }
 
   test("band minima equal the md5-chunk signature of a corpus doc") {
-    val doc = graft.Tables.load(spark, dir, "documents")
-      .filter(col("text").isNotNull).orderBy("doc_id")
-      .select("doc_id", "text").head()
-    val id = doc.getLong(0)
-    val mins = Grams.bandMins(
-      Grams.distinct(doc.getString(1).split(" ", -1), 3), 12)
-    // the SQL arithmetic: band i = min over distinct shingles of hex chunk
-    // i % 4 of md5(salt || shingle), salt "" then "1", "2"
-    val sh = graft.Tables.load(spark, dir, "documents")
-      .filter(col("doc_id") === id)
-      .select(explode(array_distinct(
+    // every non-NULL doc of the corpus: the SQL aggregate the DuckDB
+    // oracles replay (band i = min over distinct shingles of hex chunk
+    // i % 4 of md5(salt || shingle), salt "" then "1", "2"; n_sh = the
+    // distinct shingle count) against docSignatures and Grams.bandMins
+    val docs = graft.Tables.load(spark, dir, "documents")
+      .filter(col("text").isNotNull).select("doc_id", "text")
+    val sql = docs.select(col("doc_id"), explode(array_distinct(
         Dedup.shingles(split(col("text"), " ")))).as("shingle"))
-    val sql = sh.agg(min(substring(md5(col("shingle")), 1, 8)),
-      (1 until 12).map { i =>
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_sh"), (0 until 12).map { i =>
         val salted = if (i < 4) col("shingle")
           else concat(lit((i / 4).toString), col("shingle"))
-        min(substring(md5(salted), 1 + 8 * (i % 4), 8))
-      }: _*).head()
-    assert(mins.toSeq == (0 until 12).map(sql.getString))
-    val sig = Dedup.docSignatures(spark, dir, 12)
-      .filter(col("doc_id") === id).head()
-    assert(mins.toSeq == (0 until 12).map(i => sig.getAs[String](s"b$i")))
+        min(substring(md5(salted), 1 + 8 * (i % 4), 8)).as(s"b$i")
+      }: _*)
+    def byDoc(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getLong(0) -> (r.getLong(1) +: (0 until 12)
+        .map(i => r.getAs[String](s"b$i")))).toMap
+    val expected = byDoc(sql)
+    assert(expected.size == docs.count(), "a non-NULL doc has no shingles")
+    assert(byDoc(Dedup.docSignatures(spark, dir, 12)) == expected)
+    docs.collect().foreach { r =>
+      val mins = Grams.bandMins(
+        Grams.distinct(r.getString(1).split(" ", -1), 3), 12)
+      assert(mins.toSeq == expected(r.getLong(0)).tail, s"doc ${r.getLong(0)}")
+    }
   }
 }
