@@ -10,9 +10,9 @@ import scala.Option;
  * reference's reflection shims (SURVEY.md §2.1 O28; reference
  * {@code hive/.../ShimLoader}-style version adapters): where the reference
  * reaches across Hive's version-private surface with runtime reflection,
- * this project needs exactly one package-private Spark surface — the
- * completed {@code QueryExecution} carried by the SQL-execution-end listener
- * event — and reaches it at COMPILE time instead. Scala's {@code
+ * this project reaches the few package-private Spark surfaces the capture
+ * hook needs — chiefly the completed {@code QueryExecution} carried by the
+ * SQL-execution-end listener event — at COMPILE time instead. Scala's {@code
  * private[sql]} qualifier exists only in the Scala signature metadata; the
  * JVM methods are public, so javac (which reads only bytecode) links them
  * directly: no {@code setAccessible}, no per-event reflective cost, and an
@@ -47,6 +47,14 @@ final class SqlEndShim {
    *  session) — the live hook's SessionId. */
   static String sessionUUID(org.apache.spark.sql.classic.SparkSession s) {
     return s.sessionUUID();
+  }
+
+  /** Blocks until every event already posted to the context's listener
+   *  bus has been delivered to its listeners ({@code private[spark]} on the
+   *  context), or throws once {@code timeoutMs} has passed. */
+  static void awaitListenerBus(org.apache.spark.SparkContext sc, long timeoutMs)
+      throws java.util.concurrent.TimeoutException {
+    sc.listenerBus().waitUntilEmpty(timeoutMs);
   }
 
   /** The scan's execution-time partition listing after dynamic pruning

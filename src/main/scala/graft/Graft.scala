@@ -163,10 +163,14 @@ object Tables {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     Graft.configure(spark)
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    eventTs(spark.read.parquet(s"$dir/events.parquet"))
+  }
+
+  /** The `ts` conversion of [[events]] for any frame read from the events
+    * file, batch or streaming. */
+  def eventTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType.typeName match {
       case "long" => raw.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
       case _      => raw // already a timestamp type (future-proof)
     }
-  }
 }

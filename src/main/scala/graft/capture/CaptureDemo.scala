@@ -2,7 +2,7 @@ package graft.capture
 
 import graft.{Graft, Tables}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Oracle-checkable exercise of the capture operators (SURVEY.md §2.1) over
@@ -79,51 +79,68 @@ object CaptureDemo {
       .orderBy("event_id")
   }
 
-  /** End-to-end streaming capture demo (VERDICT r3 stretch): the events
-    * table is replayed as a FILE STREAM through a capture projection
-    * (QueryEvent columns, status classification, counters-as-JSON) into the
-    * date-partitioned exactly-once sink ([[graft.sink.EventSink.writeStream]],
-    * Trigger.AvailableNow), then read BACK from the committed log and rolled
-    * up per (event date, query type) — so one driver-checkable query spans
-    * O1 source → O4/O5 projection → O16 counters JSON → O23 partitioned sink
-    * → O26 read → A2 rollup, and the DuckDB oracle checks the round trip
-    * end-to-end (any lost/duplicated/mis-partitioned record breaks the
-    * hash). Each call uses a fresh temp log + checkpoint: the run IS the
-    * test of the commit protocol. */
-  def capStream(s: SparkSession, dir: String): DataFrame = {
-    val tmp = Graft.scratchDir("run_")
+  /** The events table as completed-query records: the
+    * QueryId/QueryType/EventType/StartTime/EndTime/Status/CountersObject
+    * projection every replayed or batch-landed `cap_*` log shares, with
+    * the event id as QueryId, its upper-cased kind as QueryType and one
+    * counter as the CountersObject JSON. */
+  private def asCompleted(df: DataFrame, id: Column = col("event_id"),
+                          start: Column = col("ts"), end: Column = col("ts"),
+                          status: Column = lit("SUCCESS"),
+                          counter: Column = col("value")): DataFrame =
+    df.select(
+      id.cast("string").as("QueryId"),
+      upper(col("event_type")).as("QueryType"),
+      lit("QUERY_COMPLETED").as("EventType"),
+      start.as("StartTime"),
+      end.as("EndTime"),
+      status.as("Status"),
+      to_json(struct(counter)).as("CountersObject"))
+
+  /** The file-stream round trip the streaming `cap_*` queries share:
+    * `events.parquet` of `dir` is replayed as a file stream (`open` may be
+    * called more than once, for plans with several stream arms; each call
+    * yields the table's rows with `ts` as a TIMESTAMP), `records` maps the
+    * stream to event records, and those land through the checkpointed
+    * date-partitioned sink ([[graft.sink.EventSink.writeStream]],
+    * Trigger.AvailableNow) in a fresh log that is then read back. Each call
+    * uses a fresh temp log + checkpoint: the run IS the test of the commit
+    * protocol. */
+  private def replay(s: SparkSession, dir: String, name: String)(
+      records: (() => DataFrame) => DataFrame): DataFrame = {
+    val tmp = Graft.scratchDir(s"${name}_")
     val out = s"$tmp/log"
-    val ckpt = s"$tmp/ckpt"
     val src = s"$dir/events.parquet"
     val batchSchema = s.read.parquet(src).schema
     // The file stream source wants a DIRECTORY; the table is a single
     // parquet file, so stream the parent dir with a glob pinned to it.
-    val raw = s.readStream.schema(batchSchema)
+    val ss = Graft.streamSession(s)
+    def open() = Tables.eventTs(ss.readStream.schema(batchSchema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    val ts = batchSchema("ts").dataType.typeName match {
-      case "long" => expr("timestamp_micros(ts DIV 1000)")
-      case _      => col("ts")
-    }
-    val records = raw.select(
-      col("event_id").cast("string").as("QueryId"),
-      upper(col("event_type")).as("QueryType"),
-      lit("QUERY_COMPLETED").as("EventType"),
-      ts.as("StartTime"),
-      ts.as("EndTime"),
-      when(col("event_type") === "error", lit("FAIL"))
-        .otherwise(lit("SUCCESS")).as("Status"),
-      to_json(struct(col("value").as("value"))).as("CountersObject"))
-    val q = graft.sink.EventSink.writeStream(records, out, ckpt,
-      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    q.awaitTermination()
+      .parquet(dir))
+    graft.sink.EventSink.writeStream(records(open _), out, s"$tmp/ckpt",
+      org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination()
     val back = graft.sink.EventSink.read(s, out)
     // The glob-pinned file source streams 0 rows silently if the table
     // layout ever changes (e.g. events becomes a parquet DIRECTORY); an
     // empty round trip must be a loud failure, not a 0-row "pass".
     require(!back.isEmpty,
-      s"cap_stream round trip read back 0 rows from $out (source $src)")
+      s"$name round trip read back 0 rows from $out (source $src)")
     back
+  }
+
+  /** End-to-end streaming capture: the events table is replayed through a
+    * capture projection (QueryEvent columns, status classification,
+    * counters-as-JSON) into the exactly-once sink, then read BACK from the
+    * committed log and rolled up per (event date, query type) — so one
+    * oracle-checked query spans O1 source → O4/O5 projection → O16
+    * counters JSON → O23 partitioned sink → O26 read → A2 rollup, and the
+    * DuckDB oracle checks the round trip end-to-end (any
+    * lost/duplicated/mis-partitioned record breaks the hash). */
+  def capStream(s: SparkSession, dir: String): DataFrame =
+    replay(s, dir, "cap_stream")(open => asCompleted(open(),
+        status = when(col("event_type") === "error", lit("FAIL"))
+          .otherwise(lit("SUCCESS"))))
       .groupBy(col("EventDate").cast("string").as("day"),
         col("QueryType").as("query_type"))
       .agg(
@@ -132,53 +149,23 @@ object CaptureDemo {
         round(sum(get_json_object(col("CountersObject"), "$.value")
           .cast("double")) + lit(1e-9), 4).as("sum_value"))
       .orderBy("day", "query_type")
-  }
 
   /** Streaming watermark dedup round trip (A14's streaming face + O21/O23
     * exactly-once): every source event is duplicated IN-STREAM (explode of
     * a 2-element array — the at-least-once delivery a real capture bus
-    * exhibits), collapsed by `dropDuplicatesWithinWatermark` on the event
-    * id, and written through the checkpointed date-partitioned sink. The
-    * DuckDB oracle aggregates the ORIGINAL table — so the check passes
-    * only if the stream emitted every event exactly once despite the
+    * exhibits), collapsed by [[graft.streaming.EventStream.dedupWithinWatermark]]
+    * on the event id, and written through the checkpointed date-partitioned
+    * sink. The DuckDB oracle aggregates the ORIGINAL table — so the check
+    * passes only if the stream emitted every event exactly once despite the
     * injected duplication. */
-  def capStreamDedup(s: SparkSession, dir: String): DataFrame = {
-    val tmp = Graft.scratchDir("dedup_")
-    val out = s"$tmp/log"
-    val ckpt = s"$tmp/ckpt"
-    val src = s"$dir/events.parquet"
-    val batchSchema = s.read.parquet(src).schema
-    val raw = Graft.streamSession(s).readStream.schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    val ts = batchSchema("ts").dataType.typeName match {
-      case "long" => expr("timestamp_micros(ts DIV 1000)")
-      case _      => col("ts")
-    }
-    val duplicated = raw
-      .select(col("*"), explode(array(lit(1), lit(2))).as("_copy"))
-      .withColumn("event_time", ts)
-      .withWatermark("event_time", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-    val records = duplicated.select(
-      col("event_id").cast("string").as("QueryId"),
-      upper(col("event_type")).as("QueryType"),
-      lit("QUERY_COMPLETED").as("EventType"),
-      col("event_time").as("StartTime"),
-      col("event_time").as("EndTime"),
-      lit("SUCCESS").as("Status"),
-      to_json(struct(col("value").as("value"))).as("CountersObject"))
-    graft.sink.EventSink.writeStream(records, out, ckpt,
-      org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination()
-    val back = graft.sink.EventSink.read(s, out)
-    require(!back.isEmpty,
-      s"cap_stream_dedup round trip read back 0 rows from $out (source $src)")
-    back
+  def capStreamDedup(s: SparkSession, dir: String): DataFrame =
+    replay(s, dir, "cap_stream_dedup")(open => asCompleted(
+        graft.streaming.EventStream.dedupWithinWatermark(
+          open().select(col("*"), explode(array(lit(1), lit(2))).as("_copy")))))
       .groupBy(col("EventDate").cast("string").as("day"),
         col("QueryType").as("query_type"))
       .agg(count(lit(1)).as("n"))
       .orderBy("day", "query_type")
-  }
 
   /** Stream-stream join round trip (A1's streaming face through the real
     * sink): the events file is replayed as TWO independent file streams — a
@@ -193,57 +180,34 @@ object CaptureDemo {
     * table, so the hash passes only if the stateful join paired every
     * event exactly once — nothing dropped at the watermark, nothing
     * emitted twice. */
-  def capStreamJoin(s: SparkSession, dir: String): DataFrame = {
-    val tmp = Graft.scratchDir("join_")
-    val out = s"$tmp/log"
-    val ckpt = s"$tmp/ckpt"
-    val src = s"$dir/events.parquet"
-    val batchSchema = s.read.parquet(src).schema
-    val ss = Graft.streamSession(s)
-    def stream() = ss.readStream.schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    def tsCol = batchSchema("ts").dataType.typeName match {
-      case "long" => expr("timestamp_micros(ts DIV 1000)")
-      case _      => col("ts")
+  def capStreamJoin(s: SparkSession, dir: String): DataFrame =
+    replay(s, dir, "cap_stream_join") { open =>
+      // The assessment layer's valid-event contract, applied to BOTH stream
+      // arms AND the oracle: a NULL event time cannot carry a watermark and
+      // a NULL latency can never satisfy the range bound, so without the
+      // symmetric filter the join silently drops exactly the rows the
+      // oracle still counts (found by the nullev adversarial corpus).
+      val valid = col("ts").isNotNull && col("event_type").isNotNull &&
+        col("value").isNotNull
+      val sub = open().filter(valid)
+        .select(col("event_id").as("sub_id"), col("event_type"),
+          col("ts").as("sub_ts"))
+        .withWatermark("sub_ts", "1 hour")
+      val done = open().filter(valid)
+        // pmod, not %: a negative value would yield a negative latency, and
+        // a completion before its submission can never satisfy the range
+        // bound
+        .withColumn("latency_s", pmod(floor(col("value")).cast("long"), lit(300)))
+        .select(col("event_id").as("done_id"), col("latency_s"),
+          (col("ts") +
+            expr("make_interval(0, 0, 0, 0, 0, 0, latency_s)")).as("done_ts"))
+        .withWatermark("done_ts", "2 hours")
+      val joined = sub.join(done, expr(
+        "done_id = sub_id AND done_ts >= sub_ts AND " +
+          "done_ts <= sub_ts + interval 5 minutes"))
+      asCompleted(joined, id = col("sub_id"), start = col("sub_ts"),
+        end = col("done_ts"), counter = col("latency_s"))
     }
-    // The assessment layer's valid-event contract, applied to BOTH stream
-    // arms AND the oracle: a NULL event time cannot carry a watermark and a
-    // NULL latency can never satisfy the range bound, so without the
-    // symmetric filter the join silently drops exactly the rows the oracle
-    // still counts (found by the nullev adversarial corpus).
-    val valid = col("ts").isNotNull && col("event_type").isNotNull &&
-      col("value").isNotNull
-    val sub = stream().filter(valid)
-      .select(col("event_id").as("sub_id"), col("event_type"),
-        tsCol.as("sub_ts"))
-      .withWatermark("sub_ts", "1 hour")
-    val done = stream().filter(valid)
-      .withColumn("base_ts", tsCol)
-      // pmod, not %: a negative value would yield a negative latency, and a
-      // completion before its submission can never satisfy the range bound
-      .withColumn("latency_s", pmod(floor(col("value")).cast("long"), lit(300)))
-      .select(col("event_id").as("done_id"), col("latency_s"),
-        (col("base_ts") +
-          expr("make_interval(0, 0, 0, 0, 0, 0, latency_s)")).as("done_ts"))
-      .withWatermark("done_ts", "2 hours")
-    val joined = sub.join(done, expr(
-      "done_id = sub_id AND done_ts >= sub_ts AND " +
-        "done_ts <= sub_ts + interval 5 minutes"))
-    val records = joined.select(
-      col("sub_id").cast("string").as("QueryId"),
-      upper(col("event_type")).as("QueryType"),
-      lit("QUERY_COMPLETED").as("EventType"),
-      col("sub_ts").as("StartTime"),
-      col("done_ts").as("EndTime"),
-      lit("SUCCESS").as("Status"),
-      to_json(struct(col("latency_s").as("latency_s"))).as("CountersObject"))
-    graft.sink.EventSink.writeStream(records, out, ckpt,
-      org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination()
-    val back = graft.sink.EventSink.read(s, out)
-    require(!back.isEmpty,
-      s"cap_stream_join round trip read back 0 rows from $out (source $src)")
-    back
       // submission day, NOT EventDate: the sink partitions on the record's
       // effective (end) time per the reference contract, and a completion
       // latency can cross midnight — the funnel is reported by when work
@@ -255,29 +219,34 @@ object CaptureDemo {
         round(avg(get_json_object(col("CountersObject"), "$.latency_s")
           .cast("double")) + lit(1e-9), 4).as("avg_latency_s"))
       .orderBy("day", "query_type")
-  }
 
   /** Run `n` tagged probe executions under a freshly installed
     * [[SparkCaptureListener]] and return every captured event whose text
-    * carries the tag, polling the bounded buffer until `expected` tagged
+    * carries the tag, draining the bounded buffer until `expected` tagged
     * events arrived (listener-bus delivery is asynchronous). Probes are
     * filtered by a tag in the captured text because the shared listener
     * bus may also deliver events from whatever else ran on the context. */
   private def runTaggedProbes(s: SparkSession, tag: String, n: Int,
                               expected: Int): Seq[graft.model.QueryEvent] = {
     val l = SparkCaptureListener.install(s)
+    def probes(evs: Seq[graft.model.QueryEvent]) =
+      evs.filter(_.QueryText.exists(_.contains(tag)))
     try {
       (1 to n).foreach(i =>
         s.range(100L * i).selectExpr(s"sum(id) AS ${tag}_$i").collect())
-      val got = scala.collection.mutable.ArrayBuffer.empty[graft.model.QueryEvent]
-      def nProbes = got.count(_.QueryText.exists(_.contains(tag)))
-      val deadline = System.currentTimeMillis() + 30000
-      while (nProbes < expected && System.currentTimeMillis() < deadline) {
-        got ++= l.drain()
-        if (nProbes < expected) Thread.sleep(50)
-      }
-      got.filter(_.QueryText.exists(_.contains(tag))).toSeq
+      probes(l.drainUntil()(probes(_).size >= expected))
     } finally SparkCaptureListener.uninstall(s, l)
+  }
+
+  /** Lands captured events through the retrying batch sink
+    * ([[graft.sink.EventSink.writeBatchWithRetry]]) in a fresh log and
+    * reads them back through the schema-evolution read. */
+  private def land(s: SparkSession, prefix: String,
+                   events: Seq[graft.model.QueryEvent]): DataFrame = {
+    val log = s"${Graft.scratchDir(prefix)}/log"
+    import s.implicits._
+    graft.sink.EventSink.writeBatchWithRetry(s.createDataset(events).toDF(), log)
+    graft.sink.EventSink.readAsEvents(s, log)
   }
 
   /** Live-hook round trip: the [[SparkCaptureListener]] (the reference's
@@ -297,19 +266,15 @@ object CaptureDemo {
     val probed = runTaggedProbes(s, tag, n = 3, expected = 6)
       .filter(_.EventType.contains(graft.model.EventType.QueryCompleted.name))
     require(probed.size == 3, s"expected 3 probe captures, got ${probed.size}")
-    val tmp = Graft.scratchDir("livehook_")
-    import s.implicits._
-    graft.sink.EventSink.writeBatchWithRetry(
-      s.createDataset(probed).toDF(), s"$tmp/log")
-    graft.sink.EventSink.readAsEvents(s, s"$tmp/log")
+    land(s, "livehook_", probed)
       .filter(col("QueryText").contains(tag))
       .groupBy(col("QueryType").as("query_type"), col("Status").as("status"))
       .agg(count(lit(1)).as("n"))
       .orderBy("query_type", "status")
   }
 
-  /** The reference's TWO-EVENT lifecycle, captured live and assessed
-    * (VERDICT r8 #1): each probe must yield one QUERY_SUBMITTED and one
+  /** The reference's TWO-EVENT lifecycle, captured live and assessed:
+    * each probe must yield one QUERY_SUBMITTED and one
     * QUERY_COMPLETED event sharing a QueryId; both flow through the sink
     * and are paired back by the A1 lifecycle join ON THE CAPTURED LOG —
     * submit side to start side — with a non-negative duration. The output
@@ -319,11 +284,7 @@ object CaptureDemo {
   def capLiveLifecycle(s: SparkSession, dir: String): DataFrame = {
     val tag = s"graft_life_${java.util.UUID.randomUUID().toString.take(8)}"
     val events = runTaggedProbes(s, tag, n = 3, expected = 6)
-    val tmp = Graft.scratchDir("livelife_")
-    import s.implicits._
-    graft.sink.EventSink.writeBatchWithRetry(
-      s.createDataset(events).toDF(), s"$tmp/log")
-    val log = graft.sink.EventSink.readAsEvents(s, s"$tmp/log")
+    val log = land(s, "livelife_", events)
       .filter(col("QueryText").contains(tag))
       // which probe: the tag's alias suffix in the captured text
       .withColumn("probe",
@@ -351,7 +312,7 @@ object CaptureDemo {
       .orderBy("probe")
   }
 
-  /** Live entity + provenance round trip (VERDICT r9 #1): a partitioned
+  /** Live entity + provenance round trip: a partitioned
     * catalog table is created, filled with TWO static-partition inserts and
     * read back under a partition filter, all under the live hook — then the
     * captured events flow through the sink and the six entity arrays plus
@@ -368,36 +329,28 @@ object CaptureDemo {
     val pool = s"pool_$tag"
     val l = SparkCaptureListener.install(s)
     s.conf.set("spark.scheduler.pool", pool)
-    val events = scala.collection.mutable.ArrayBuffer.empty[graft.model.QueryEvent]
-    try {
+    def ready(evs: Seq[graft.model.QueryEvent]) = {
+      val done = evs.filter(_.EventType
+        .contains(graft.model.EventType.QueryCompleted.name))
+      done.count(_.PartitionsWritten.exists(_.contains(table))) >= 2 &&
+        done.exists(_.PartitionsRead.exists(_.contains(table)))
+    }
+    val events = try {
       s.sql(s"CREATE TABLE $table (x INT, day STRING) USING parquet " +
         "PARTITIONED BY (day)")
       s.sql(s"INSERT INTO $table PARTITION (day='2024-01-01') VALUES (1), (2)")
       s.sql(s"INSERT INTO $table PARTITION (day='2024-01-02') VALUES (3)")
       s.sql(s"SELECT sum(x) AS s_$tag FROM $table WHERE day = '2024-01-01'")
         .collect()
-      def ready = {
-        val done = events.filter(_.EventType
-          .contains(graft.model.EventType.QueryCompleted.name))
-        done.count(_.PartitionsWritten.exists(_.contains(table))) >= 2 &&
-          done.exists(_.PartitionsRead.exists(_.contains(table)))
-      }
-      val deadline = System.currentTimeMillis() + 30000
-      while (!ready && System.currentTimeMillis() < deadline) {
-        events ++= l.drain()
-        if (!ready) Thread.sleep(50)
-      }
-      require(ready, s"probe events not captured; got ${events.size}")
+      val got = l.drainUntil()(ready)
+      require(ready(got), s"probe events not captured; got ${got.size}")
+      got
     } finally {
       scala.util.Try(s.conf.unset("spark.scheduler.pool"))
       SparkCaptureListener.uninstall(s, l)
       scala.util.Try(s.sql(s"DROP TABLE IF EXISTS $table"))
     }
-    val tmp = Graft.scratchDir("livent_")
-    import s.implicits._
-    graft.sink.EventSink.writeBatchWithRetry(
-      s.createDataset(events.toSeq).toDF(), s"$tmp/log")
-    val back = graft.sink.EventSink.readAsEvents(s, s"$tmp/log")
+    val back = land(s, "livent_", events)
       .filter(col("EventType") === "QUERY_COMPLETED")
     val ins = back.filter(exists(col("PartitionsWritten"),
       p => p.contains(table)))
@@ -431,7 +384,7 @@ object CaptureDemo {
       .orderBy("aspect")
   }
 
-  /** Live FAIL path end-to-end (VERDICT r10 #5): the reference emits FAIL
+  /** Live FAIL path end-to-end: the reference emits FAIL
     * COMPLETED events as first-class data (`EventStatus.java:20-21`) —
     * here a deliberately failing query (a per-row `assert_true` that trips
     * at TASK time, so submission really happened and the plan exists) runs
@@ -463,9 +416,8 @@ object CaptureDemo {
         evs.filter(col("EventType") === "QUERY_SUBMITTED")
           .join(failIds, "QueryId").count() >= 1
       }.getOrElse(false)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!ready && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      require(ready, s"tagged FAIL pair never reached the sink at $log")
+      require(SparkCaptureListener.awaitReady()(ready),
+        s"tagged FAIL pair never reached the sink at $log")
     } finally drainer.close()
     val evs = graft.sink.EventSink.readAsEvents(s, log)
     val done = evs.filter(col("EventType") === "QUERY_COMPLETED" &&
@@ -492,8 +444,7 @@ object CaptureDemo {
       .orderBy("aspect")
   }
 
-  /** Multi-writer capture as a hard-gate row (VERDICT r12 #6 — the
-    * deployment shape was spec-only): TWO full live pipelines (hook →
+  /** Multi-writer capture as a hard-gate row: TWO full live pipelines (hook →
     * bounded buffer → daemon drain → reference-format Avro container
     * writer), with distinct writer ids, run concurrently against ONE log
     * tree — the multi-tenant shape where several hosts share a log
@@ -511,67 +462,58 @@ object CaptureDemo {
     val tag = s"graft_multi_${java.util.UUID.randomUUID().toString.take(8)}"
     val tmp = Graft.scratchDir("livemulti_")
     val base = new java.io.File(s"$tmp/log"); base.mkdirs()
-    val schema = graft.sink.AvroEventSink.avroSchema
-    val names = graft.model.QueryEvent.schema.fieldNames
     def mkWriter(id: String) = new graft.sink.DatePartitionedAvroWriter(
-      base, schema, java.time.Clock.systemUTC(), id,
-      java.time.Duration.ofMinutes(30))
+      base, graft.sink.AvroEventSink.avroSchema, java.time.Clock.systemUTC(),
+      id, java.time.Duration.ofMinutes(30))
     val wA = mkWriter("wrA"); val wB = mkWriter("wrB")
-    def sinkTo(w: graft.sink.DatePartitionedAvroWriter): DataFrame => Unit =
-      df => df.collect().foreach(r =>
-        w.write(graft.sink.AvroEventSink.toRecord(r, names, schema)))
-    def avroFiles: Seq[java.io.File] =
-      Option(base.listFiles()).toSeq.flatten.filter(_.isDirectory)
-        .flatMap(d => Option(d.listFiles()).toSeq.flatten)
-        .filter(_.getName.endsWith(".avro"))
-    // driver-side poll of the live tree (Try per file: a torn mid-append
-    // read just retries on the next poll — post-close reads are settled)
-    def tagged(fs: Seq[java.io.File]): Seq[(String, String)] = fs
-      .flatMap(f => scala.util.Try(
-        graft.sink.AvroEventSink.readRecords(f)).getOrElse(Seq.empty))
+    type Tree = Seq[(java.io.File, Seq[org.apache.avro.generic.GenericRecord])]
+    // (QueryId, EventType) of the tagged records in one writer's files
+    def side(tree: Tree, id: String): Seq[(String, String)] = tree
+      .filter(_._1.getName.contains(id)).flatMap(_._2)
       .filter(r => Option(r.get("QueryText")).exists(_.toString.contains(tag)))
       .map(r => (Option(r.get("QueryId")).map(_.toString).getOrElse(""),
         Option(r.get("EventType")).map(_.toString).getOrElse("")))
     val dA = new CaptureDrainer(s, base.toString, intervalMs = 200L,
-      sink = Some(sinkTo(wA)))
+      sink = Some(wA.writeFrame))
     val dB = new CaptureDrainer(s, base.toString, intervalMs = 200L,
-      sink = Some(sinkTo(wB)))
+      sink = Some(wB.writeFrame))
     try {
       (1 to 3).foreach(i =>
         s.range(100L * i).selectExpr(s"sum(id) AS ${tag}_$i").collect())
-      def side(id: String) = tagged(avroFiles.filter(_.getName.contains(id)))
-      val deadline = System.currentTimeMillis() + 30000
-      while ((side("_wrA").size < 6 || side("_wrB").size < 6) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(100)
-      require(side("_wrA").size >= 6 && side("_wrB").size >= 6,
+      var live: Tree = Nil
+      require(SparkCaptureListener.awaitReady() {
+          live = graft.sink.AvroEventSink.readTree(base, live = true)
+          side(live, "_wrA").size >= 6 && side(live, "_wrB").size >= 6
+        },
         s"multi-writer capture incomplete at $base: " +
-          s"A=${side("_wrA").size} B=${side("_wrB").size}")
+          s"A=${side(live, "_wrA").size} B=${side(live, "_wrB").size}")
     } finally { dA.close(); dB.close(); wA.close(); wB.close() }
-    val files = avroFiles
+    val tree = graft.sink.AvroEventSink.readTree(base)
+    val files = tree.map(_._1)
     val a = files.filter(_.getName.contains("_wrA"))
     val b = files.filter(_.getName.contains("_wrB"))
     val disjoint = a.nonEmpty && b.nonEmpty && a.size + b.size == files.size &&
       files.map(_.getName).distinct.size == files.size
+    val nA = side(tree, "_wrA").distinct.size
+    val nB = side(tree, "_wrB").distinct.size
     // exactly-once union through the DISTRIBUTED read path over BOTH
     // writers' files at once. `pre` counts DISTINCT (writer, QueryId,
     // EventType) copies — one per writer per lifecycle event = 12 — not
-    // raw rows (ADVICE r13: the drainer's documented requeue-after-sink-
-    // failure path may append a batch twice; at-least-once inside one
-    // writer's files is the sink contract, and pinning a raw row count
-    // would turn that transient into an opaque oracle hash red); the
-    // dedupe on the distributed read below still proves the union
-    // collapses to the single-writer truth.
+    // raw rows: the drainer's requeue-after-sink-failure path may append
+    // a batch twice, at-least-once inside one writer's files is the sink
+    // contract, and a raw row count would turn that transient into an
+    // opaque oracle hash red; the dedupe on the distributed read below
+    // still proves the union collapses to the single-writer truth.
     val frame = graft.sink.AvroEventSink.readAsFrame(s, base.toString)
       .filter(col("QueryText").contains(tag))
-    val pre = tagged(a).distinct.size + tagged(b).distinct.size
     val post = frame.select("QueryId", "EventType").distinct().count()
-    // Loss-side pin through the DISTRIBUTED read (ADVICE r14 #1): `pre`
-    // above is computed driver-side per writer, so a readAsFrame that
-    // silently dropped one writer's whole tree would leave `post` at 6 (the
-    // other writer supplies every pair). Reading each writer's files
-    // THROUGH readAsFrame (filename glob = the writer-id attribution the
-    // oracle already pins as total/disjoint) and distinct-counting per side
-    // tolerates requeue duplicates but fails loud on whole-writer loss.
+    // Loss-side pin through the DISTRIBUTED read: `pre` is computed
+    // driver-side per writer, so a readAsFrame that silently dropped one
+    // writer's whole tree would leave `post` at 6 (the other writer
+    // supplies every pair). Reading each writer's files THROUGH readAsFrame
+    // (filename glob = the writer-id attribution the oracle already pins
+    // as total/disjoint) and distinct-counting per side tolerates requeue
+    // duplicates but fails loud on whole-writer loss.
     def readSide(id: String): Long = graft.sink.AvroEventSink
       .readAsFrame(s, base.toString, glob = s"dwhassessment_*${id}*.avro")
       .filter(col("QueryText").contains(tag))
@@ -580,10 +522,10 @@ object CaptureDemo {
     s.range(1).select(explode(map(
       lit("files_disjoint"), lit(if (disjoint) "1" else "0"),
       lit("union_deduped"), lit(post.toString),
-      lit("union_pre_dedupe"), lit(pre.toString),
+      lit("union_pre_dedupe"), lit((nA + nB).toString),
       lit("union_read_attributed"), lit(readAttributed.toString),
-      lit("writer_a_events"), lit(tagged(a).distinct.size.toString),
-      lit("writer_b_events"), lit(tagged(b).distinct.size.toString)))
+      lit("writer_a_events"), lit(nA.toString),
+      lit("writer_b_events"), lit(nB.toString)))
       .as(Seq("aspect", "value")))
       .orderBy("aspect")
   }
@@ -623,8 +565,8 @@ object CaptureDemo {
     graft.ext.SqlSurface.hotKeyVerdict(exact, est, k)
   }
 
-  /** Reference-format Avro round trip, DISTRIBUTED both ways (VERDICT r9
-    * #2): the events table is projected into QueryEvent records, written
+  /** Reference-format Avro round trip, DISTRIBUTED both ways: the events
+    * table is projected into QueryEvent records, written
     * as true Avro container files in the reference's date-partitioned
     * layout ([[graft.sink.AvroEventSink.write]] — one container file per
     * task per day, reference file names), then read back through the
@@ -635,17 +577,9 @@ object CaptureDemo {
   def capAvroRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val tmp = Graft.scratchDir("avro_")
     val log = s"$tmp/log"
-    val records = graft.Tables.events(s, dir)
+    val records = asCompleted(graft.Tables.events(s, dir)
       .filter(col("ts").isNotNull && col("event_type").isNotNull &&
-        col("value").isNotNull)
-      .select(
-        col("event_id").cast("string").as("QueryId"),
-        upper(col("event_type")).as("QueryType"),
-        lit("QUERY_COMPLETED").as("EventType"),
-        col("ts").as("StartTime"),
-        col("ts").as("EndTime"),
-        lit("SUCCESS").as("Status"),
-        to_json(struct(col("value").as("value"))).as("CountersObject"))
+        col("value").isNotNull))
     graft.sink.AvroEventSink.write(
       graft.sink.EventSink.conform(records), log, "rtrip")
     val back = graft.sink.AvroEventSink.readAsFrame(s, log)
@@ -660,9 +594,9 @@ object CaptureDemo {
   }
 
   /** Log-compaction round trip — the at-least-once RECOVERY path proven
-    * end-to-end (ADVICE r8: a transient failure mid job-commit can leave
-    * some files published, and the append-mode retry then writes the whole
-    * batch again): the same batch is deliberately written TWICE, then
+    * end-to-end (a transient failure mid job-commit can leave some files
+    * published, and the append-mode retry then writes the whole batch
+    * again): the same batch is deliberately written TWICE, then
     * [[graft.sink.EventSink.readLatestEvents]] collapses the duplicates to
     * one row per (QueryId, EventType) lifecycle event and the compacted
     * log is rolled up per (day, type). The DuckDB oracle aggregates the
@@ -673,15 +607,8 @@ object CaptureDemo {
   def capLogCompact(s: SparkSession, dir: String): DataFrame = {
     val tmp = Graft.scratchDir("compact_")
     val log = s"$tmp/log"
-    val records = graft.Tables.events(s, dir)
-      .filter(col("ts").isNotNull && col("event_type").isNotNull)
-      .select(
-        col("event_id").cast("string").as("QueryId"),
-        upper(col("event_type")).as("QueryType"),
-        lit("QUERY_COMPLETED").as("EventType"),
-        col("ts").as("StartTime"),
-        col("ts").as("EndTime"),
-        lit("SUCCESS").as("Status"))
+    val records = asCompleted(graft.Tables.events(s, dir)
+      .filter(col("ts").isNotNull && col("event_type").isNotNull))
     graft.sink.EventSink.writeBatch(records, log)
     graft.sink.EventSink.writeBatch(records, log) // the duplicated commit
     graft.sink.EventSink.readLatestEvents(s, log)
@@ -772,7 +699,7 @@ object CaptureDemo {
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
     // Constant by construction: the full entity + provenance surface of
     // the live hook, captured on a partitioned-table probe and read back
-    // through the sink (VERDICT r9 #1).
+    // through the sink.
     "cap_live_entities" ->
       """SELECT aspect, value FROM (VALUES
         |  ('dbs_read', 'default'),

@@ -66,69 +66,56 @@ final class SparkCaptureListener(appId: String, user: String,
   private val droppedN = new AtomicLong(0L)
   private val buildFailedN = new AtomicLong(0L)
   private val seenN = new AtomicLong(0L)
-  // executionId → submit-time millis: duration fallback for End events whose
-  // engine-measured duration is absent. Entries normally die with their End
-  // event, but the shared bus DROPS events under saturation and cancelled
-  // executions may never post an End — so both tracking maps are pruned of
-  // stale entries (no activity for StaleMs) once they exceed MaxTracked,
-  // keeping the listener's footprint bounded even when Ends never arrive.
-  // Losing a stale startMs entry only degrades the duration fallback.
-  private val startMs = new ConcurrentHashMap[java.lang.Long, java.lang.Long]
-  // executionIds opened under the self-tag (→ insert-time ms): their End
-  // must not be admitted either. Start-side decision, so membership is
-  // settled before the End arrives (bus order). Same stale-pruning bound;
-  // a pruned entry could at worst let one >10-min-old self-write's End
-  // through, versus growing without bound.
-  private val selfIds = new ConcurrentHashMap[java.lang.Long, java.lang.Long]
 
-  private val MaxTracked = 65536
-  // Eviction drains to a LOW WATERMARK, not the cap: evicting to exactly
-  // MaxTracked would re-trigger the full scan on the very next insert
-  // under sustained saturation (all-young entries because Ends are being
-  // lost), putting an O(MaxTracked) sweep on the listener bus thread per
-  // Start. Draining a quarter of the map buys MaxTracked/4 cheap inserts
-  // per sweep, so an insert is amortized O(1) in every regime.
-  private val LowWatermark = MaxTracked - MaxTracked / 4
-  private val StaleMs = 10L * 60 * 1000
+  import SparkCaptureListener.{Exec, LowWatermark, MaxTracked, StaleMs}
 
-  private def prune(m: ConcurrentHashMap[java.lang.Long, java.lang.Long],
-                    now: Long): Unit =
-    if (m.size > MaxTracked) {
-      // stale entries first; if the map is over cap with only YOUNG
-      // entries (a burst where Ends are being lost), evict arbitrarily
-      // down to the watermark — a strict memory bound beats perfect
-      // tracking, and losing an entry only degrades a fallback (duration
-      // estimate / the self-suppression that [[selfPathHint]] also covers).
-      val it = m.entrySet().iterator()
+  // executionId → what the listener knows of it between Start and End:
+  // submit time (duration fallback for End events without an engine-
+  // measured duration), whether it runs under the self-tag (its End must
+  // not be admitted either; settled before the End arrives, bus order),
+  // and the fair-scheduler pool of its jobs. Entries normally die with
+  // their End event, but the shared bus DROPS events under saturation and
+  // cancelled executions may never post an End, so the map is pruned by
+  // [[prune]] and stays bounded even when Ends never arrive.
+  private val execs = new ConcurrentHashMap[java.lang.Long, Exec]
+
+  /** Entries currently tracked (at most `MaxTracked` after each insert). */
+  private[capture] def tracked: Int = execs.size
+
+  private def track(id: Long, now: Long)(f: Exec => Exec): Unit = {
+    execs.compute(Long.box(id), (_, e) => f(e))
+    prune(now)
+  }
+
+  // Stale entries (no activity for StaleMs) go first; if the map is over
+  // cap with only YOUNG entries (a burst where Ends are being lost), evict
+  // arbitrarily down to the watermark: a strict memory bound beats perfect
+  // tracking, and losing an entry only degrades a fallback (the duration
+  // estimate, the Queue field, or the self-suppression that
+  // [[selfPathHint]] also covers).
+  private def prune(now: Long): Unit =
+    if (execs.size > MaxTracked) {
+      val it = execs.values().iterator()
       while (it.hasNext) {
-        if (now - it.next().getValue >= StaleMs) it.remove()
+        if (now - it.next().atMs >= StaleMs) it.remove()
       }
-      val it2 = m.entrySet().iterator()
-      while (it2.hasNext && m.size > LowWatermark) { it2.next(); it2.remove() }
+      val it2 = execs.values().iterator()
+      while (it2.hasNext && execs.size > LowWatermark) { it2.next(); it2.remove() }
     }
 
-  // executionId → fair-scheduler pool, observed from the FIRST job the
-  // execution launches (SparkListenerJobStart.properties carries the
-  // submitting thread's `spark.scheduler.pool`, which the SQL events do
-  // not) — the reference's O11 queue lookup for the live hook. Bounded
-  // like the tracking maps; losing an entry only nulls the Queue field.
-  private val poolById = new ConcurrentHashMap[java.lang.Long, String]
-
+  // The pool comes from the execution's jobs: SparkListenerJobStart.properties
+  // carries the submitting thread's `spark.scheduler.pool`, which the SQL
+  // events do not (the reference's O11 queue lookup for the live hook).
   override def onJobStart(jobStart: SparkListenerJobStart): Unit = {
     val props = jobStart.properties
     if (props != null) {
       val execId = props.getProperty("spark.sql.execution.id")
       val pool = props.getProperty("spark.scheduler.pool")
       if (execId != null && pool != null) {
-        Try {
-          poolById.put(Long.box(execId.toLong), pool)
-          if (poolById.size > MaxTracked) {
-            val it = poolById.entrySet().iterator()
-            while (it.hasNext && poolById.size > LowWatermark) {
-              it.next(); it.remove()
-            }
-          }
-        }
+        Try(track(execId.toLong, jobStart.time) { e =>
+          if (e == null) Exec(jobStart.time, None, self = false, Some(pool))
+          else e.copy(pool = Some(pool))
+        })
         ()
       }
     }
@@ -136,26 +123,14 @@ final class SparkCaptureListener(appId: String, user: String,
 
   override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
     case st: SparkListenerSQLExecutionStart =>
-      if (st.jobTags.contains(SparkCaptureListener.SelfTag)) {
-        selfIds.put(Long.box(st.executionId), Long.box(st.time))
-        prune(selfIds, st.time)
-        ()
-      } else {
-        startMs.put(Long.box(st.executionId), Long.box(st.time))
-        prune(startMs, st.time)
-        admit(() => submitted(st))
-      }
+      val self = st.jobTags.contains(SparkCaptureListener.SelfTag)
+      track(st.executionId, st.time)(e =>
+        Exec(st.time, Some(st.time), self, Option(e).flatMap(_.pool)))
+      if (!self) admit(() => submitted(st))
     case en: SparkListenerSQLExecutionEnd =>
-      if (selfIds.remove(Long.box(en.executionId)) != null) {
-        poolById.remove(Long.box(en.executionId)); ()
-      } else if (isSelfByHint(en)) {
-        startMs.remove(Long.box(en.executionId))
-        poolById.remove(Long.box(en.executionId)); ()
-      } else {
-        val sub = Option(startMs.remove(Long.box(en.executionId))).map(_.longValue())
-        val pool = Option(poolById.remove(Long.box(en.executionId)))
-        admit(() => completed(en, sub, pool))
-      }
+      val e = Option(execs.remove(Long.box(en.executionId)))
+      if (!e.exists(_.self) && !isSelfByHint(en))
+        admit(() => completed(en, e.flatMap(_.startMs), e.flatMap(_.pool)))
     case _ => ()
   }
 
@@ -202,11 +177,13 @@ final class SparkCaptureListener(appId: String, user: String,
       }
     }
 
-  /** [[drain]] as a DataFrame in the 33-column QueryEvents schema —
-    * directly writable by `EventSink.writeBatch`. */
-  def drainToFrame(s: SparkSession): DataFrame = {
-    import s.implicits._
-    s.createDataset(drain()).toDF()
+  /** Drains until the events gathered so far satisfy `ready` or
+    * `timeoutMs` passes, and returns them all, in arrival order. */
+  def drainUntil(timeoutMs: Long = 30000L)(
+      ready: Seq[QueryEvent] => Boolean): Seq[QueryEvent] = {
+    var all = Vector.empty[QueryEvent]
+    SparkCaptureListener.awaitReady(timeoutMs) { all ++= drain(); ready(all) }
+    all
   }
 
   /** O21 contract: events dropped because the buffer was full. */
@@ -245,6 +222,29 @@ final class SparkCaptureListener(appId: String, user: String,
     seenN.incrementAndGet()
   }
 
+  /** The fields both lifecycle events fill the same way: id, type, user,
+    * engine and provenance, the read-side tables and their databases. */
+  private def event(executionId: Long, eventType: EventType,
+                    qe: Option[QueryExecution], reads: Seq[String]): QueryEvent =
+    QueryEvent(
+      QueryId = Some(s"${appId}_$executionId"),
+      QueryType = qe.map(q => SparkCaptureListener.queryType(q.analyzed)),
+      EventType = Some(eventType.name),
+      ExecutionMode = Some(ExecutionMode.Spark_.name),
+      ExecutionEngine = Some("spark"),
+      RequestUser = Some(user),
+      UserName = Some(user),
+      TablesRead = reads,
+      SessionId = qe.flatMap(q => Try(SqlEndShim.sessionUUID(q.sparkSession)).toOption),
+      ThreadName = Some(Thread.currentThread().getName),
+      HiveVersion = Some(org.apache.spark.SPARK_VERSION),
+      ClientIpAddress = driverHost,
+      HiveAddress = driverHost,
+      YarnApplicationId = Some(appId),
+      DatabasesRead = SparkCaptureListener.databasesOf(reads),
+      DefaultDatabase = qe.flatMap(q =>
+        Try(q.sparkSession.catalog.currentDatabase).toOption))
+
   /** The PRE event (reference `EventRecordConstructor.java:94-132`):
     * populated from what is knowable at submit time — id, user, start
     * time, query text (the action's call site plus the physical plan,
@@ -265,32 +265,14 @@ final class SparkCaptureListener(appId: String, user: String,
     val qe = Option(org.apache.spark.sql.execution.SQLExecution
       .getQueryExecution(st.executionId))
     val reads = qe.map(q => SparkCaptureListener.readTargets(q)).getOrElse(Nil)
-    QueryEvent(
-      QueryId = Some(s"${appId}_${st.executionId}"),
-      QueryType = qe.map(q => SparkCaptureListener.queryType(q.analyzed)),
+    event(st.executionId, EventType.QuerySubmitted, qe, reads).copy(
       QueryText = Some((st.description + "\n" + st.physicalPlanDescription)
         .take(2048)),
-      EventType = Some(EventType.QuerySubmitted.name),
-      ExecutionMode = Some(ExecutionMode.Spark_.name),
-      ExecutionEngine = Some("spark"),
-      RequestUser = Some(user),
-      UserName = Some(user),
       Queue = qe.flatMap(SparkCaptureListener.sessionPool),
       // sub-execution grouping: a root execution spawning nested ones is
       // the closest Spark analog of the reference's per-operation id
       OperationId = st.rootExecutionId.map(r => s"${appId}_$r"),
-      StartTime = Some(new Timestamp(st.time)),
-      TablesRead = reads,
-      SessionId = qe.flatMap(q => Try(SqlEndShim.sessionUUID(q.sparkSession)).toOption),
-      HiveVersion = Some(org.apache.spark.SPARK_VERSION),
-      ClientIpAddress = driverHost,
-      HiveAddress = driverHost,
-      ThreadName = Some(Thread.currentThread().getName),
-      YarnApplicationId = Some(appId),
-      DatabasesRead = SparkCaptureListener.databasesOf(reads),
-      DefaultDatabase = qe.flatMap(q =>
-        Try(q.sparkSession.catalog.currentDatabase).toOption)
-    )
+      StartTime = Some(new Timestamp(st.time)))
   }
 
   /** Driver host/IP (set once at install): the live hook runs embedded in
@@ -327,20 +309,12 @@ final class SparkCaptureListener(appId: String, user: String,
       outputRows.map(n => s""""outputRows": $n""")
     ).flatten ++ planTotals.map { case (k, v) => s""""$k": $v""" })
       .mkString("{", ", ", "}")
-    QueryEvent(
-      QueryId = Some(s"${appId}_${en.executionId}"),
-      QueryType = qe.map(q => SparkCaptureListener.queryType(q.analyzed)),
+    event(en.executionId, EventType.QueryCompleted, qe, reads).copy(
       QueryText = qe.map(q => Try(q.analyzed.toString)
         .getOrElse(q.logical.toString).take(2048)),
-      EventType = Some(EventType.QueryCompleted.name),
-      ExecutionMode = Some(ExecutionMode.Spark_.name),
-      ExecutionEngine = Some("spark"),
-      RequestUser = Some(user),
-      UserName = Some(user),
       Queue = jobPool.orElse(qe.flatMap(SparkCaptureListener.sessionPool)),
       StartTime = Some(new Timestamp(start)),
       EndTime = Some(new Timestamp(en.time)),
-      TablesRead = reads,
       TablesWritten = writes,
       PartitionsRead = qe.map(SparkCaptureListener.partitionsRead)
         .getOrElse(Nil),
@@ -352,18 +326,8 @@ final class SparkCaptureListener(appId: String, user: String,
         Option(e.getMessage).getOrElse(e.toString).take(2048)),
       PerfObject = qe.flatMap(SparkCaptureListener.perfObject),
       CountersObject = Some(counters),
-      SessionId = qe.flatMap(q => Try(SqlEndShim.sessionUUID(q.sparkSession)).toOption),
       InvokerInfo = SqlEndShim.executionName(en),
-      ThreadName = Some(Thread.currentThread().getName),
-      HiveVersion = Some(org.apache.spark.SPARK_VERSION),
-      ClientIpAddress = driverHost,
-      HiveAddress = driverHost,
-      YarnApplicationId = Some(appId),
-      DatabasesRead = SparkCaptureListener.databasesOf(reads),
-      DatabasesWritten = SparkCaptureListener.databasesOf(writes),
-      DefaultDatabase = qe.flatMap(q =>
-        Try(q.sparkSession.catalog.currentDatabase).toOption)
-    )
+      DatabasesWritten = SparkCaptureListener.databasesOf(writes))
   }
 }
 
@@ -373,10 +337,39 @@ object SparkCaptureListener {
     * sink writes): executions carrying it are never captured. */
   val SelfTag = "graft.capture.self"
 
+  /** One execution's tracked state: last activity time, submit time (None
+    * when its Start was not seen), self-tag flag and job-observed pool. */
+  private final case class Exec(atMs: Long, startMs: Option[Long],
+                                self: Boolean, pool: Option[String])
+
+  private[capture] val MaxTracked = 65536
+  // Eviction drains to a LOW WATERMARK, not the cap: evicting to exactly
+  // MaxTracked would re-trigger the full scan on the very next insert
+  // under sustained saturation (all-young entries because Ends are being
+  // lost), putting an O(MaxTracked) sweep on the listener bus thread per
+  // Start. Draining a quarter of the map buys MaxTracked/4 cheap inserts
+  // per sweep, so an insert is amortized O(1) in every regime.
+  private val LowWatermark = MaxTracked - MaxTracked / 4
+  private val StaleMs = 10L * 60 * 1000
+
+  /** Evaluates `ready` every 50 ms until it holds or `timeoutMs` passes,
+    * and returns its last value. The one wait for asynchronous delivery
+    * (listener bus, drainer ticks, sink commits): a caller that drains
+    * does so inside `ready`. */
+  def awaitReady(timeoutMs: Long = 30000L)(ready: => Boolean): Boolean = {
+    val deadline = System.currentTimeMillis() + timeoutMs
+    var ok = ready
+    while (!ok && System.currentTimeMillis() < deadline) {
+      Thread.sleep(50)
+      ok = ready
+    }
+    ok
+  }
+
   /** Attach a capture hook to the session's context (reference analog:
     * `hive.exec.post.hooks=MigrationAssessmentLoggingHook`). Returns the
-    * listener; call `drain`/`drainToFrame` to collect and [[uninstall]] to
-    * detach. */
+    * listener; call `drain` (or [[SparkCaptureListener.drainUntil]]) to
+    * collect and [[uninstall]] to detach. */
   def install(session: SparkSession,
               maxBuffered: Int = 8192): SparkCaptureListener = {
     val sc = session.sparkContext
@@ -630,18 +623,18 @@ object SparkCaptureListener {
   * ([[graft.sink.EventSink.writeBatchWithRetry]], O22/O23). The sink writes
   * run under [[SparkCaptureListener.SelfTag]] so the hook never captures —
   * and then re-captures, forever — its own output. [[close]] (idempotent;
-  * also registered as a JVM shutdown hook) stops the scheduler, flushes the
-  * residue exactly once, and detaches the listener. */
+  * also registered as a JVM shutdown hook) stops the scheduler, lets the
+  * events already posted to the listener bus arrive, flushes the residue
+  * exactly once, and detaches the listener. */
 final class CaptureDrainer(session: SparkSession, sinkPath: String,
                            intervalMs: Long = 5000L, maxBuffered: Int = 8192,
-                           closeFlushTimeoutMs: Long = 10000L,
                            sink: Option[DataFrame => Unit] = None)
     extends AutoCloseable {
 
   /** Where a drained batch goes: the date-partitioned retrying parquet
-    * sink by default, or a caller-supplied function — e.g. the
-    * reference-format [[graft.sink.DatePartitionedAvroWriter]] under a
-    * test clock (the live multi-day rollover path), or a network
+    * sink by default, or a caller-supplied function — e.g. a
+    * reference-format [[graft.sink.DatePartitionedAvroWriter]]'s
+    * `writeFrame` (the live multi-day rollover path), or a network
     * forwarder. Runs under the self-tag either way. */
   private val sinkFn: DataFrame => Unit = sink.getOrElse(df =>
     graft.sink.EventSink.writeBatchWithRetry(df, sinkPath))
@@ -703,6 +696,11 @@ final class CaptureDrainer(session: SparkSession, sinkPath: String,
   override def close(): Unit = if (closed.compareAndSet(false, true)) {
     exec.shutdown()
     exec.awaitTermination(5, TimeUnit.SECONDS) // the reference's ≤5 s bound
+    // An execution that ended before close() may still have its events
+    // queued on the listener bus: let them reach the listener (bounded) so
+    // the final flush carries them, instead of leaving them un-flushed.
+    Try(SqlEndShim.awaitListenerBus(session.sparkContext,
+      CaptureDrainer.BusDrainTimeoutMs))
     // Final residue flush on a BOUNDED daemon thread: close() runs as a
     // JVM shutdown hook, and an unreachable sink would otherwise block
     // shutdown for the whole Spark-write + retry budget (the reference's
@@ -712,7 +710,7 @@ final class CaptureDrainer(session: SparkSession, sinkPath: String,
     val t = new Thread(() => { Try(drainOnce()); () }, "graft-capture-final-flush")
     t.setDaemon(true)
     t.start()
-    t.join(closeFlushTimeoutMs)
+    t.join(CaptureDrainer.CloseFlushTimeoutMs)
     if (t.isAlive) {
       // The flush overran its bound: interrupt it BEFORE uninstalling the
       // listener so the in-flight self-tagged write doesn't race the
@@ -720,7 +718,7 @@ final class CaptureDrainer(session: SparkSession, sinkPath: String,
       t.interrupt()
       t.join(500)
       System.err.println(
-        s"[graft-capture] final flush exceeded ${closeFlushTimeoutMs} ms " +
+        s"[graft-capture] final flush exceeded ${CaptureDrainer.CloseFlushTimeoutMs} ms " +
           "and was interrupted; un-flushed events remain buffered")
     }
     SparkCaptureListener.uninstall(session, listener)
@@ -735,4 +733,13 @@ final class CaptureDrainer(session: SparkSession, sinkPath: String,
     Try(shutdownHook.remove())
     ()
   }
+}
+
+object CaptureDrainer {
+  /** Bound on the close-time residue flush (a Spark job, so wider than the
+    * reference's 5 s writer-thread bound, but still finite). */
+  private val CloseFlushTimeoutMs = 10000L
+
+  /** Bound on the close-time wait for events still queued on the bus. */
+  private val BusDrainTimeoutMs = 5000L
 }

@@ -36,14 +36,34 @@ object EventSink {
     )
 
   /** Batch write. `maxRecordsPerFile` bounds file size the way the
-    * reference's hourly rollover bounds it (O24). */
+    * reference's hourly rollover bounds it (O24).
+    *
+    * Appends to one path are serialized within the JVM: the commit
+    * protocol stages every job under `<path>/_temporary`, and the first
+    * job to commit deletes that whole directory, so a second job appending
+    * at the same time loses its staged task files (or fails its commit and
+    * is retried on top of files already published). Writers in different
+    * processes are not serialized; give each process its own path. */
   def writeBatch(events: DataFrame, path: String,
                  maxRecordsPerFile: Long = 1000000L): Unit =
-    withEventDate(events).write
-      .mode("append")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("EventDate")
-      .parquet(path)
+    lockFor(events.sparkSession, path).synchronized {
+      withEventDate(events).write
+        .mode("append")
+        .option("maxRecordsPerFile", maxRecordsPerFile)
+        .partitionBy("EventDate")
+        .parquet(path)
+    }
+
+  // Striped by the qualified path, so the set of locks stays fixed however
+  // many paths a process writes; two paths sharing a stripe only queue.
+  private val writeLocks = Array.fill(64)(new Object)
+
+  private def lockFor(spark: SparkSession, path: String): Object = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val key = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toString
+    writeLocks(Math.floorMod(key.hashCode, writeLocks.length))
+  }
 
   /** O22 — [[writeBatch]] under the reference's retry-with-backoff policy
     * ([[Retry]]): the whole batch commit retries on transient IO failure

@@ -43,18 +43,17 @@ object Retry {
     loop(t)
   }
 
-  /** Run `op`, retrying on `retryOn` failures with the reference's
+  /** Run `op`, retrying [[ioShaped]] failures with the reference's
     * quadratic schedule. `sleep` is injectable so tests pin the schedule
     * without wall-clock waits. Throws the last failure after
-    * `maxRetries` retries; non-matching failures propagate immediately. */
+    * `maxRetries` retries; other failures propagate immediately. */
   def withBackoff[T](maxRetries: Int = 2,
-                     sleep: Long => Unit = Thread.sleep,
-                     retryOn: Throwable => Boolean = ioShaped)(op: => T): T = {
+                     sleep: Long => Unit = Thread.sleep)(op: => T): T = {
     var attempt = 0
     while (true) {
       try return op
       catch {
-        case e: Throwable if retryOn(e) && attempt < maxRetries =>
+        case e: Throwable if ioShaped(e) && attempt < maxRetries =>
           sleep(1000L * attempt * attempt) // 0 s, 1 s, 4 s, ...
           attempt += 1
       }

@@ -7,7 +7,7 @@ import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The reference's entire lifecycle re-enacted natively (VERDICT r9 #5):
+/** The reference's entire lifecycle re-enacted natively:
   * observe a real star-query workload through the live hook, persist the
   * log through the sink, then run the ASSESSMENT LAYER — template mining,
   * recurring-job detection, and the per-user workload report — on the
@@ -16,11 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class LiveAssessSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def awaitUntil(timeoutMs: Long = 30000L)(cond: => Boolean): Unit = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (!cond && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(cond, s"condition not met within $timeoutMs ms")
-  }
+  import SparkCaptureListener.awaitReady
 
   test("star workload captured live, assessed from the captured log") {
     val t0 = new java.sql.Timestamp(System.currentTimeMillis() - 1000)
@@ -37,15 +33,14 @@ class LiveAssessSpec extends AnyFunSuite {
         graft.assess.StarQueries.queries(q)(spark, TestSpark.Sf0001).collect())
       // `seen` also counts unrelated bus traffic: drain until every
       // execution has delivered the COMPLETED event the log filter keeps
-      val events = collection.mutable.ArrayBuffer.empty[graft.model.QueryEvent]
-      awaitUntil() {
-        events ++= l.drain()
-        events.count(e => e.EventType.contains("QUERY_COMPLETED") &&
+      def ready(evs: Seq[graft.model.QueryEvent]) =
+        evs.count(e => e.EventType.contains("QUERY_COMPLETED") &&
           e.StartTime.exists(!_.before(t0)) &&
           e.TablesRead.exists(_.contains("lineitem"))) >= workload.size
-      }
+      val events = l.drainUntil()(ready)
+      assert(ready(events))
       val dir = Files.createTempDirectory("graft_live_assess_full").toString
-      graft.sink.EventSink.writeBatch(spark.createDataFrame(events.toSeq), dir)
+      graft.sink.EventSink.writeBatch(spark.createDataFrame(events), dir)
       // this test's workload only: completed events started after t0 whose
       // plans scan lineitem (all five star queries do)
       val captured = graft.sink.EventSink.readLatestEvents(spark, dir)
@@ -89,7 +84,7 @@ class LiveAssessSpec extends AnyFunSuite {
         assert(r.getAs[Double]("p50_ms") >= 0.0 &&
           r.getAs[Double]("p95_ms") >= r.getAs[Double]("p50_ms"))
 
-        // --- readiness scorecard on the captured log (VERDICT r10 #6) ---
+        // --- readiness scorecard on the captured log ---
         val sc = graft.assess.Migration.liveReadinessScorecard(log).collect()
         assert(sc.length == 1, sc.mkString("; "))
         val row = sc.head
@@ -136,7 +131,7 @@ class LiveAssessSpec extends AnyFunSuite {
     def mine = graft.sink.EventSink.readAsEvents(spark, dir)
       .filter(col("StartTime") >= lit(t0) &&
         col("QueryText").contains(tag))
-    // the awaitUntil polls embed the tag literal in their own plan text
+    // the awaitReady polls embed the tag literal in their own plan text
     // and would be captured as part of the workload (the cap_live_fail
     // lesson); run them under the production self-tag so both listeners
     // suppress them and the raw-row arithmetic below stays exact
@@ -148,9 +143,9 @@ class LiveAssessSpec extends AnyFunSuite {
     try {
       (1 to n).foreach(i =>
         spark.range(30 + i).selectExpr(s"sum(id) AS ${tag}_q$i").collect())
-      awaitUntil()(selfTagged(scala.util.Try(
+      assert(awaitReady()(selfTagged(scala.util.Try(
         mine.filter(col("EventType") === "QUERY_COMPLETED").count() >= 2L * n
-      ).getOrElse(false)))
+      ).getOrElse(false))))
     } finally { dA.close(); dB.close() }
     // the raw tree really is multi-writer: two copies of each lifecycle
     // event (one per drainer), collapsed exactly-once by the read path

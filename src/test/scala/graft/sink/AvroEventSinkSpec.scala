@@ -44,6 +44,45 @@ class AvroEventSinkSpec extends AnyFunSuite {
     assert(st.getType == Type.UNION && st.getTypes.get(0).getType == Type.NULL)
   }
 
+  test("live log-tree read skips a file not yet decodable; a settled read is strict") {
+    import org.apache.avro.file.DataFileWriter
+    import org.apache.avro.generic.{GenericDatumWriter, GenericRecord}
+    val schema = AvroEventSink.avroSchema
+    val base = Files.createTempDirectory("graft_avro_tree").toFile
+    val clock = java.time.Clock.fixed(
+      java.time.Instant.parse("2022-12-25T12:00:22Z"), java.time.ZoneOffset.UTC)
+    val w = new DatePartitionedAvroWriter(base, schema, clock, "tree",
+      java.time.Duration.ofMinutes(30))
+    import spark.implicits._
+    w.writeFrame(Seq(QueryEvent(QueryId = Some("q1")),
+      QueryEvent(QueryId = Some("q2"))).toDF())
+    w.close()
+    def ids(tree: Seq[(File, Seq[org.apache.avro.generic.GenericRecord])]) =
+      tree.flatMap(_._2).map(_.get("QueryId").toString).sorted
+    // a writer that has just opened its file and not yet written the
+    // header: the file on disk is not an Avro container, and a plain
+    // read of it fails the way a poll of a live tree used to
+    val day = new File(base, "2022-12-25")
+    val opened = new File(day, "dwhassessment_2022-12-25T1201_tree.avro")
+    Files.createFile(opened.toPath)
+    intercept[java.io.IOException](AvroEventSink.readRecords(opened))
+    assert(ids(AvroEventSink.readTree(base, live = true)) == Seq("q1", "q2"))
+    intercept[java.io.IOException](AvroEventSink.readTree(base))
+    // the header lands: the file decodes, holding no records yet
+    new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+      .create(schema, opened).close()
+    assert(ids(AvroEventSink.readTree(base)) == Seq("q1", "q2"))
+    // a file truncated inside its header never passes a settled read, and
+    // a live one skips it
+    val full = AvroEventSink.readTree(base).map(_._1)
+      .find(_.getName.contains("T120022")).get
+    val bytes = Files.readAllBytes(full.toPath)
+    Files.write(new File(day, "dwhassessment_2022-12-25T1202_tree.avro").toPath,
+      bytes.take(24))
+    assert(ids(AvroEventSink.readTree(base, live = true)) == Seq("q1", "q2"))
+    intercept[java.io.IOException](AvroEventSink.readTree(base))
+  }
+
   test("write + read-back: reference dir layout, file names, values") {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_avro").toString

@@ -86,4 +86,35 @@ class EventSinkSpec extends AnyFunSuite {
       .filter(_.isDirectory)
     assert(dirs.isEmpty)
   }
+
+  test("concurrent appends to one path from one JVM lose nothing") {
+    // Two drainers sharing a log tree append at the same time. The commit
+    // protocol stages every job under `<path>/_temporary` and the first job
+    // to commit deletes that directory, taking the other job's staged task
+    // output with it (or failing its commit), unless the appends are
+    // serialized per path.
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_sink_conc").toString
+    val writers = 2
+    val rounds = 6
+    val perBatch = 8
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+    try {
+      val jobs = (0 until writers).map { w =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (0 until rounds).foreach { r =>
+            val batch = (0 until perBatch)
+              .map(i => ev(s"w${w}_r${r}_$i", 1671969622334L)).toDF()
+              .repartition(2)
+            EventSink.writeBatch(batch, dir)
+          }
+        })
+      }
+      jobs.foreach(_.get())
+    } finally pool.shutdown()
+    val ids = EventSink.read(spark, dir).select("QueryId").as[String].collect()
+    assert(ids.length == writers * rounds * perBatch,
+      s"${ids.length} rows of ${writers * rounds * perBatch}")
+    assert(ids.distinct.length == ids.length, "no batch landed twice")
+  }
 }
