@@ -251,26 +251,49 @@ object Dedup {
       .orderBy("bin")
   }
 
-  /** SimHash (64-bit, emitted as 16 hex chars): per token take its 64-bit
-    * xxhash64 (one codegen'd hash per row — an order of magnitude cheaper
-    * than md5 hex-string slicing); per bit position sum ±1 over tokens;
-    * sign → fingerprint bit. Near-dups have small Hamming distance; at scale
-    * the fingerprint joins on band substrings exactly like MinHash. One
-    * explode + one aggregate — shuffle carries (doc_id, 64 small ints). */
-  /** Per-doc 64-bit SimHash fingerprint as a long (`fp`). */
-  private def simhashFingerprints(s: SparkSession, dir: String): DataFrame = {
-    val h = xxhash64(col("tok"))
-    // Bit i is the i-th bit from the MSB of the 64-bit hash.
+  /** SimHash sign sums: per token a 64-bit hash (`tokenHash`, an
+    * expression over the token column `tok`); per bit position sum ±1 over
+    * the document's tokens. Returns `(doc_id, b0..b63)` with b0 the MSB;
+    * the sign of each sum is a fingerprint bit, and near-dups have small
+    * Hamming distance. One explode + one aggregate — the shuffle carries
+    * (doc_id, 64 small ints). */
+  private def simhashSignSums(s: SparkSession, dir: String,
+                              tokenHash: Column): DataFrame = {
     val bitCols = (0 until 64).map { i =>
-      val bit = shiftright(h, 63 - i).bitwiseAND(1)
+      val bit = shiftright(tokenHash, 63 - i).bitwiseAND(1)
       sum(when(bit === 1, 1).otherwise(-1)).as(s"b$i")
     }
-    val perDoc = Tables.load(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .groupBy("doc_id")
       .agg(bitCols.head, bitCols.tail: _*)
-    perDoc.select(col("doc_id"), signBitsToLong.as("fp"))
   }
+
+  /** The production token hash: xxhash64, one codegen'd hash per token —
+    * an order of magnitude cheaper than md5 hex-string slicing. DuckDB has
+    * no xxhash64, so no oracle checks the values of its queries. */
+  private def xxhashToken: Column = xxhash64(col("tok"))
+
+  /** The oracle twin's token hash: the first 16 hex nibbles of md5(token) —
+    * the md5-parity trick that oracle-ized the hyperplane LSH
+    * ([[Similarity.planeSign]]) — so DuckDB reproduces the whole SimHash
+    * construction bit-for-bit and the oracle checks it. Built from TWO
+    * 8-hex-char conv()s instead of 16 per-nibble extractions: hi fits 32
+    * bits and shiftleft keeps exactly the low 64, so the bit pattern equals
+    * the nibble-by-nibble construction the DuckDB oracle uses, with ~8x
+    * fewer string ops per token. */
+  private def md5Token: Column = {
+    val h = md5(col("tok"))
+    val hi = conv(substring(h, 1, 8), 16, 10).cast("long")
+    val lo = conv(substring(h, 9, 8), 16, 10).cast("long")
+    shiftleft(hi, 32).bitwiseOR(lo)
+  }
+
+  /** Per-doc 64-bit SimHash fingerprint as a long (`fp`). */
+  private def simhashFingerprints(s: SparkSession, dir: String,
+                                  tokenHash: Column): DataFrame =
+    simhashSignSums(s, dir, tokenHash)
+      .select(col("doc_id"), signBitsToLong.as("fp"))
 
   /** Packs the 64 per-bit sign sums (`b0`..`b63`, b0 = MSB) into one long
     * fingerprint: bit i set iff the sign sum is positive. */
@@ -279,25 +302,17 @@ object Dedup {
       .otherwise(lit(0L)))
     .reduce(_ + _)
 
+  /** SimHash fingerprint of every document, emitted as 16 hex chars. */
   def xSimhash(s: SparkSession, dir: String): DataFrame =
-    simhashFingerprints(s, dir)
+    simhashFingerprints(s, dir, xxhashToken)
       .select(col("doc_id"),
         lower(lpad(hex(col("fp")), 16, "0")).as("simhash_hex"))
       .orderBy("doc_id")
 
-  /** SimHash near-dup pairing: candidates share at least one of four 16-bit
-    * bands of the fingerprint (pigeonhole: any pair within Hamming distance
-    * 3 shares a band; wider distances are caught probabilistically), scored
-    * by exact Hamming distance via `bit_count(xor)`. Four equi-joins on a
-    * 16-bit key — the 64-bit-fingerprint twin of the MinHash band join, and
-    * the cheapest near-dup pass at 100 TB (the shuffle carries 16 bytes per
-    * doc). Rows-only at the driver (xxhash64 has no DuckDB twin); properties
-    * pinned in ExtSpec. */
   /** Four 16-bit-band self-joins over a `(doc_id, fp: long)` fingerprint
-    * frame, Hamming-scored with one `bit_count(xor)` per candidate. Shared
-    * by the xxhash64 production path and its md5 oracle twin — the twin
-    * used to Hamming-score on hex strings (16 nibble conv/strpos per
-    * candidate) and paid 3x for it on the in-bucket quadratic. */
+    * frame, Hamming-scored with one `bit_count(xor)` per candidate (on
+    * hex strings the score would cost 16 nibble conv/strpos per candidate
+    * of the in-bucket quadratic). */
   private def simhashBandPairs(fps: DataFrame, maxHamming: Int): DataFrame = {
     val withBands = fps.select(
       col("doc_id") +: col("fp") +:
@@ -315,41 +330,20 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
+  /** SimHash near-dup pairing: candidates share at least one of four 16-bit
+    * bands of the fingerprint (pigeonhole: any pair within Hamming distance
+    * 3 shares a band; wider distances are caught probabilistically), scored
+    * by exact Hamming distance via `bit_count(xor)`. Four equi-joins on a
+    * 16-bit key — the 64-bit-fingerprint twin of the MinHash band join, and
+    * the cheapest near-dup pass at 100 TB (the shuffle carries 16 bytes per
+    * doc). Properties pinned in ExtSpec. */
   def xSimhashPairs(s: SparkSession, dir: String,
                     maxHamming: Int = 16): DataFrame = {
-    // 16 bytes per doc — materialize once. Measured both ways at sf0.1
-    // (r4): checkpoint 2.9 s, exchange-reuse-only 6.1 s — the final-merge
-    // aggregate re-runs per band branch and dwarfs the one eager job.
-    val fps = simhashFingerprints(s, dir).localCheckpoint()
+    // 16 bytes per doc — materialize once. Without the checkpoint the
+    // fingerprint aggregate's final merge re-runs in each band branch:
+    // 6.1 s against 2.9 s at sf0.1.
+    val fps = simhashFingerprints(s, dir, xxhashToken).localCheckpoint()
     simhashBandPairs(fps, maxHamming)
-  }
-
-  /** Oracle twin of [[xSimhash]]: the per-token 64-bit hash is the first 16
-    * hex nibbles of md5(token) — the md5-parity trick that oracle-ized the
-    * hyperplane LSH ([[Similarity.planeSign]]) — so DuckDB reproduces the
-    * whole SimHash construction bit-for-bit and the driver hash-checks it.
-    * The xxhash64 [[xSimhash]] stays the production/perf path (one codegen'd
-    * hash per token vs 16 nibble extractions). Same aggregate shape: one
-    * explode + 64 small partial-aggregated sums per doc. */
-  private def simhashMd5Bits(s: SparkSession, dir: String): DataFrame = {
-    // The per-token 64-bit value (first 16 md5 nibbles) is assembled from
-    // TWO 8-hex-char conv()s instead of 16 per-nibble extractions: hi fits
-    // 32 bits, and shiftleft keeps exactly the low 64 bits, so `fp64`'s bit
-    // pattern equals the nibble-by-nibble construction the DuckDB oracle
-    // still uses — same bits, ~8x fewer string ops per token (measured
-    // 6.2 s -> 3.6 s at sf0.1 for the pairs twin).
-    val h = md5(col("tok"))
-    val hi = conv(substring(h, 1, 8), 16, 10).cast("long")
-    val lo = conv(substring(h, 9, 8), 16, 10).cast("long")
-    val fp64 = shiftleft(hi, 32).bitwiseOR(lo)
-    val bitCols = (0 until 64).map { i =>
-      val bit = shiftright(fp64, 63 - i).bitwiseAND(1)
-      sum(when(bit === 1, 1).otherwise(-1)).as(s"b$i")
-    }
-    Tables.load(s, dir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy("doc_id")
-      .agg(bitCols.head, bitCols.tail: _*)
   }
 
   /** 16-hex-char fingerprint assembled nibble-by-nibble from the b0..b63 sign
@@ -362,8 +356,9 @@ object Dedup {
     lower(hex(v))
   }.reduce(concat(_, _))
 
+  /** Oracle twin of [[xSimhash]] over the [[md5Token]] hash. */
   def xSimhashMd5(s: SparkSession, dir: String): DataFrame =
-    simhashMd5Bits(s, dir)
+    simhashSignSums(s, dir, md5Token)
       .select(col("doc_id"), md5FingerprintHex.as("simhash_hex"))
       .orderBy("doc_id")
 
@@ -374,64 +369,21 @@ object Dedup {
     * strategy differs). The long cast matches the oracle's BIGINT hamming. */
   def xSimhashPairsMd5(s: SparkSession, dir: String,
                        maxHamming: Int = 16): DataFrame = {
-    val fps = simhashMd5Bits(s, dir)
-      .select(col("doc_id"), signBitsToLong.as("fp"))
-      .localCheckpoint() // measured r4: eager twin beats exchange reuse 2x+
+    val fps = simhashFingerprints(s, dir, md5Token)
+      .localCheckpoint() // materialized once, as in xSimhashPairs
     simhashBandPairs(fps, maxHamming)
       .withColumn("hamming", col("hamming").cast("bigint"))
   }
 
-  /** Exact token-bigram Jaccard with deterministic blocking — the
-    * non-probabilistic member of the near-dup family: candidates are pairs
-    * in the same (lang, token-count-bucket) block and EVERY candidate gets
-    * its true bigram-set Jaccard (no MinHash estimation, no LSH recall
-    * loss within a block). Scored through a block-local inverted index:
-    * explode each doc's distinct bigrams and self equi-join on (lang,
-    * bucket, bigram), so the intersection count per pair falls out of one
-    * hash join + one aggregate. Because the threshold is > 0, pairs that
-    * share no bigram never materialize — the in-block O(docs²) pair set is
-    * never built (r5's per-pair `array_intersect` over full bigram arrays
-    * did exactly that: 672k candidate pairs, 92 s at sf0.1; this shape is
-    * 2.5M fixed-width join rows). The shuffle carries (doc_id, n_bg,
-    * bigram) — never an array. The residual quadratic is per (block,
-    * bigram): docs sharing one bigram inside one block (max 63 at sf0.1) —
-    * inherent to exact all-pairs scoring; [[xMinhashPairs]] is the 100 TB
-    * front end when even that is too much. Near-dups that straddle a
-    * bucket boundary are missed by construction (mirrored exactly by the
-    * oracle); widen buckets or overlap them for recall.
-    *
-    * Scale shape (rewritten r11 — the 30× probe CAUGHT the old one): the
-    * r9 design self-joined the full gram index on (lang, bucket, gram)
-    * and counted shared grams per pair, so every bigram common within a
-    * length bucket contributed df²/2 join rows — quadratic in bucket
-    * population, measured 11.6× wall-time for 10× data once second-pass
-    * timing stripped the warmup that had been hiding it. Now the gram
-    * index takes the [[xEditPairs]] treatment: ONE aggregation builds
-    * df-capped posting lists per (lang, bucket, gram), candidate pairs
-    * expand in-bucket from the sorted list (≤ dfCap²/2 per gram — linear
-    * in corpus size), and the exact Jaccard is scored per CANDIDATE from
-    * the two full bigram arrays. Per-pair set algebra on a candidate-
-    * bounded frame is the edit-pairs levenshtein pattern, not the r5
-    * anti-pattern (which ran it on the quadratic in-bucket pair set). The
-    * df cap is a recall knob exactly like the gram cap in [[xEditPairs]]:
-    * a pair whose EVERY shared bigram is more common than dfCap in its
-    * bucket is missed, and the oracle mirrors the cap exactly. */
   /** Shared doc prep for the exact-jaccard family ([[xJaccardNgram]] and
-    * the [[xJaccardRecall]] truth arm): token-split, length-bucketed,
-    * distinct-bigram documents. OOB-safe like [[shingles]]: the optimizer
-    * infers a size(bg)>0 pre-filter from the explode and evaluates this
-    * expression on rows the size>=2 filter later removes — sequence must
-    * never descend (sequence(1,0) yields [1,0] and index 0 always throws)
-    * and the lookahead must tolerate the end. Identical output for
-    * surviving rows. */
+    * the [[xJaccardRecall]] truth arm): token-split, length-bucketed
+    * (`floor(n_tokens / bucketWidth)`), distinct-bigram documents; a doc
+    * with fewer than two tokens has no bigram and is left out. The grams
+    * come from the typed [[Grams.distinct]] loop, not a `transform`/
+    * `sequence` lambda: the interpreted lambda cost 22 s of aggregate
+    * compile time in the postings build at sf0.1. */
   private[ext] def bigramDocs(s: SparkSession, dir: String,
                               bucketWidth: Int): DataFrame = {
-    // r17: native gram loop instead of the interpreted transform/sequence
-    // lambda (guide §4; the lambda was the family's JIT-storm source —
-    // 22 s of aggregate compile time during the postings build alone on
-    // the r17 probe). Rows byte-identical: same tokenization, same
-    // concat_ws null-skip tail, same first-occurrence distinct order,
-    // same floor(len/bucketWidth) bucket.
     import s.implicits._
     val bw = bucketWidth
     Tables.load(s, dir, "documents")
@@ -562,6 +514,29 @@ object Dedup {
     try result.localCheckpoint()
     finally caches.foreach(_.unpersist(blocking = false))
 
+  /** Exact token-bigram Jaccard with deterministic blocking — the
+    * non-probabilistic member of the near-dup family: candidates are pairs
+    * in the same (lang, token-count-bucket) block, and every candidate gets
+    * its true bigram-set Jaccard (no MinHash estimation, no LSH recall loss
+    * within a block). Near-dups that straddle a bucket boundary are missed
+    * by construction (mirrored exactly by the oracle); widen buckets or
+    * overlap them for recall.
+    *
+    * Scale shape: the gram index takes the [[xEditPairs]] treatment. ONE
+    * aggregation builds the posting list of every (lang, bucket, gram)
+    * ([[bigramPostings]]); candidate pairs expand in-bucket from the sorted
+    * lists of at most dfCap docs ([[expandSortedPairs]], ≤ dfCap²/2 per
+    * gram — linear in corpus size); the exact Jaccard is scored per
+    * CANDIDATE from the two full bigram arrays. Because the threshold is
+    * > 0, pairs that share no bigram never materialize. The two shapes this
+    * avoids are quadratic in bucket population: a self-join of the full
+    * gram index adds df²/2 join rows for every bigram common within a
+    * bucket (measured 11.6× wall time for 10× data), and per-pair
+    * `array_intersect` over every in-bucket pair scored 672k pairs in 92 s
+    * at sf0.1. The df cap is a recall knob exactly like the gram cap in
+    * [[xEditPairs]]: a pair whose EVERY shared bigram is more common than
+    * dfCap in its bucket is missed, and the oracle mirrors the cap
+    * exactly. */
   def xJaccardNgram(s: SparkSession, dir: String,
                     threshold: Double = 0.3, bucketWidth: Int = 20,
                     dfCap: Int = 50): DataFrame =

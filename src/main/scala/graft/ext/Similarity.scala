@@ -1,8 +1,10 @@
 package graft.ext
 
 import graft.Tables
+import graft.functions.CosineSimilarity.cosineSim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.3).
@@ -16,6 +18,13 @@ import org.apache.spark.sql.functions._
   * Dot products use `zip_with`+`aggregate` higher-order functions in double
   * precision — sequential left-fold element order, which is what makes the
   * DuckDB oracle (`list_dot_product`) agree exactly.
+  *
+  * Each step of the family has one definition below the queries: the query
+  * set and top-k ranker ([[querySet]], [[topK]]), the hyperplane projection
+  * ([[projections]]), the PQ encoder ([[pqEncode]]), the recall@5 eval
+  * ([[recallAt5]]), and the ordered collect and fold ([[collectOrdered]],
+  * [[foldSum]]). The values the oracles hard-code are the constants next to
+  * the oracle SQL.
   */
 object Similarity {
 
@@ -23,7 +32,7 @@ object Similarity {
 
   /** Fused dot product of two `array<double>` columns. */
   def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+    foldSum(zip_with(a, b, (x, y) => x * y))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -35,7 +44,7 @@ object Similarity {
     * cosine denominator throws DIVIDE_BY_ZERO. Filtering once at the
     * source keeps every downstream formula guard-free; all oracles carry
     * the identical WHERE. */
-  private def emb(s: SparkSession, dir: String): DataFrame =
+  private[ext] def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
       .filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
@@ -47,48 +56,25 @@ object Similarity {
   /** Brute-force cosine top-5 for the first 10 vectors as the query set.
     * The tiny query side is broadcast so the corpus is scanned exactly once
     * with no shuffle before the per-query top-k. */
-  def xAnnCosineTopk(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
-    val qs = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val scored = e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosine(col("v"), col("qv")).as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("q_id"), col("rnk"), col("vec_id"),
-        round(col("sim"), 6).as("cosine"))
-      .orderBy("q_id", "rnk")
-  }
+  def xAnnCosineTopk(s: SparkSession, dir: String): DataFrame =
+    bruteForceTopK(s, dir, cosine)
 
   /** Brute-force top-k scored by the fused native `cosine_sim` Catalyst
     * expression ([[graft.functions.CosineSimilarity]]) — one vector pass, no
     * intermediate arrays, whole-stage codegen. Bit-identical to the HOF
     * variant, so it shares that oracle's SQL. */
-  def xAnnCosineFused(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
+  def xAnnCosineFused(s: SparkSession, dir: String): DataFrame =
+    bruteForceTopK(s, dir, cosineSim)
+
+  private def bruteForceTopK(s: SparkSession, dir: String,
+                             score: (Column, Column) => Column): DataFrame = {
     val e = emb(s, dir)
-    val qs = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val scored = e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), expr("cosine_sim(v, qv)").as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    scored
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("q_id"), col("rnk"), col("vec_id"),
-        round(col("sim"), 6).as("cosine"))
-      .orderBy("q_id", "rnk")
+    topKRows(topK(exactPairs(e, querySet(e)), score))
   }
 
   /** Embedding-cosine near-dup detection (the dedup modality for vector
     * corpora), LSH-bucketed: the 8 hyperplane sign bits are split into
-    * `bands` bands of `rowsPerBand` bits; a pair is a candidate iff it
+    * `Bands` bands of `RowsPerBand` bits; a pair is a candidate iff it
     * shares ALL bits of at least one band (standard OR-amplification — add
     * bands to raise recall, rows to cut candidates). Candidate generation is
     * an equi-join per band on a fixed-width key, the quadratic scoring never
@@ -96,32 +82,12 @@ object Similarity {
     * band is one shuffle of (key, id, vector) and bucket-local compare.
     * Scoring uses the fused native `cosine_sim`; the oracle reproduces the
     * exact bucketing (planes are md5-parity-derived, see [[planeSign]]). */
-  def xEmbeddingNeardup(s: SparkSession, dir: String,
-                        threshold: Double = 0.45, bands: Int = 2,
-                        rowsPerBand: Int = 4, dims: Int = 64): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    val e = emb(s, dir)
-    val bandCol = (b: Int) => (0 until rowsPerBand).map { r =>
-      val p = b * rowsPerBand + r
-      val plane = typedLit((0 until dims).map(planeSign(p, _)))
-      when(dot(col("v"), plane) >= 0, lit("1")).otherwise(lit("0"))
-    }.reduce(concat(_, _))
-    val sig = e.select(
-      col("vec_id") +: col("v") +:
-        (0 until bands).map(b => bandCol(b).as(s"band$b")): _*)
-    val perBand = (0 until bands).map { b =>
-      sig.as("a").join(sig.as("b"),
-        col(s"a.band$b") === col(s"b.band$b") &&
-          col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-          expr("cosine_sim(a.v, b.v)").as("sim"))
-        .filter(col("sim") >= threshold)
-    }
-    perBand.reduce(_ union _)
+  def xEmbeddingNeardup(s: SparkSession, dir: String): DataFrame =
+    bandPairs(bandSignatures(emb(s, dir)), _ < _, "vec_a", "vec_b")
+      .filter(col("sim") >= NeardupThreshold)
       .dropDuplicates("vec_a", "vec_b") // a pair may match several bands
       .select(col("vec_a"), col("vec_b"), round(col("sim"), 6).as("cosine"))
       .orderBy("vec_a", "vec_b")
-  }
 
   /** Semantic k-NN graph — each vector's top-k nearest neighbors among its
     * LSH-band candidates (the structure SemDeDup-style semantic dedup and
@@ -131,35 +97,16 @@ object Similarity {
     * a band with it, so the join fans out per bucket (sub-quadratic by the
     * LSH guarantee) and the ranking window partitions on vec_id — each
     * partition is one vector's candidate set, never the corpus. */
-  def xKnnGraph(s: SparkSession, dir: String, k: Int = 3,
-                bands: Int = 2, rowsPerBand: Int = 4,
-                dims: Int = 64): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    val e = emb(s, dir)
-    val bandCol = (b: Int) => (0 until rowsPerBand).map { r =>
-      val p = b * rowsPerBand + r
-      val plane = typedLit((0 until dims).map(planeSign(p, _)))
-      when(dot(col("v"), plane) >= 0, lit("1")).otherwise(lit("0"))
-    }.reduce(concat(_, _))
-    val sig = e.select(
-      col("vec_id") +: col("v") +:
-        (0 until bands).map(b => bandCol(b).as(s"band$b")): _*)
-      // Referenced 2x per band (both self-join sides): materialize once so
-      // the embeddings scan + 8x64-dim signature arithmetic doesn't replay
-      // per reference (same idiom as Dedup.lshPairs / Fingerprint pairs).
-      .localCheckpoint()
-    val cand = (0 until bands).map { b =>
-      sig.as("a").join(sig.as("b"),
-        col(s"a.band$b") === col(s"b.band$b") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("nbr"),
-          expr("cosine_sim(a.v, b.v)").as("sim"))
-    }.reduce(_ union _)
+  def xKnnGraph(s: SparkSession, dir: String): DataFrame = {
+    // Referenced 2x per band (both self-join sides): materialize once so
+    // the embeddings scan + 8x64-dim signature arithmetic doesn't replay
+    // per reference (same idiom as Dedup.lshPairs / Fingerprint pairs).
+    val sig = bandSignatures(emb(s, dir)).localCheckpoint()
+    val w = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("nbr"))
+    bandPairs(sig, _ =!= _, "vec_id", "nbr")
       .dropDuplicates("vec_id", "nbr") // a pair may share several bands
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(col("sim").desc, col("nbr"))
-    cand.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= KnnK)
       .select(col("vec_id"), col("rk"), col("nbr"),
         round(col("sim"), 6).as("cosine"))
       .orderBy("vec_id", "rk")
@@ -188,13 +135,12 @@ object Similarity {
     * Scale shape: one posexplode + one (dim, cohort)-grouped
     * map-side-combinable aggregate; everything after is dim-bounded (64
     * rows). No collects, no joins on the corpus. */
-  def xEmbeddingDrift(s: SparkSession, dir: String,
-                      shiftDims: Int = 4, shift: Double = 0.2): DataFrame = {
+  def xEmbeddingDrift(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     val ref = e.filter(col("vec_id") % 2 === 0).select(col("v"))
     val cand = e.filter(col("vec_id") % 2 === 1)
-      .select(transform(col("v"),
-        (x, i) => x + when(i < shiftDims, lit(shift)).otherwise(lit(0.0)))
+      .select(transform(col("v"), (x, i) =>
+        x + when(i < DriftShiftDims, lit(DriftShift)).otherwise(lit(0.0)))
         .as("v"))
     def dims(df: DataFrame, half: String) = df
       .select(lit(half).as("half"), posexplode(col("v")).as(Seq("dim", "x")))
@@ -213,18 +159,8 @@ object Similarity {
       .select(col("dim"), col("n_a"), col("n_b"),
         (round(col("m_a"), 6) + lit(0.0)).as("mean_ref"),
         (round(col("m_b"), 6) + lit(0.0)).as("mean_cand"),
-        d.as("d_mean"), (abs(d) > shift / 2).as("drifted"))
+        d.as("d_mean"), (abs(d) > DriftShift / 2).as("drifted"))
       .orderBy("dim")
-  }
-
-  /** Deterministic ±1 hyperplane component for (plane p, dim i): parity of
-    * the first 16 bits of md5("p#i"). Computed once on the driver and shipped
-    * as a literal — the executors do pure arithmetic, no per-row hashing. */
-  private[ext] def planeSign(p: Int, i: Int): Double = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$p#$i".getBytes("UTF-8"))
-    val first16 = ((d(0) & 0xff) << 8) | (d(1) & 0xff)
-    if (first16 % 2 == 0) 1.0 else -1.0
   }
 
   /** LSH-bucketed ANN: 8 deterministic pseudo-hyperplanes (sign of a
@@ -233,44 +169,17 @@ object Similarity {
     * literal (the IVF coarse-quantizer pattern: tiny model to every
     * executor, single map stage over the corpus). Rows-only check
     * (bucketing is heuristic); properties pinned in ExtSpec. */
-  def xAnnLshBuckets(s: SparkSession, dir: String, dims: Int = 64): DataFrame = {
-    val e = emb(s, dir)
-    val sig = (0 until 8).map { p =>
-      val plane = typedLit((0 until dims).map(planeSign(p, _)))
-      val proj = dot(col("v"), plane)
-      when(proj >= 0, lit(1)).otherwise(lit(0)).cast("string")
-    }.reduce(concat(_, _))
-    e.select(col("vec_id"), sig.as("bucket"))
+  def xAnnLshBuckets(s: SparkSession, dir: String): DataFrame =
+    emb(s, dir)
+      .select(col("vec_id"), concat(signBits(col("v")): _*).as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_vectors"), min("vec_id").as("min_vec_id"))
       .orderBy("bucket")
-  }
 
   /** IVF assignment step: every vector assigned to its nearest label
     * centroid. The centroid "index" is tiny and broadcast; the corpus makes
     * one pass — at 100 TB this is the partition-the-corpus-by-cell stage
     * that makes subsequent ANN probes touch 1/k of the data. */
-  /** Every vector with its nearest-centroid cell, vector retained —
-    * the shared assignment stage of [[xIvfAssign]] and [[xAnnIvfTopk]]. */
-  private def ivfAssignments(s: SparkSession, dir: String): DataFrame = {
-    val e = emb(s, dir)
-    val centroids = e
-      .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy("label", "dim").agg(avg("x").as("mx"))
-      .groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("mx")))),
-        t => t.getField("mx")).as("cv"))
-      .select(col("label").as("c_label"), col("cv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("sim").desc, col("c_label").asc)
-    e.crossJoin(broadcast(centroids))
-      .select(col("vec_id"), col("label"), col("v"), col("c_label"),
-        cosine(col("v"), col("cv")).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-  }
-
   def xIvfAssign(s: SparkSession, dir: String): DataFrame =
     ivfAssignments(s, dir)
       .select(col("vec_id"), col("label"), col("c_label").as("assigned_label"),
@@ -287,16 +196,12 @@ object Similarity {
     * cells stay ~constant-sized and the cell equi-join stays the only
     * shuffle. Threshold 0.45 is calibrated to this synthetic corpus (random
     * embeddings have no 0.95-twins; real corpora tune this). */
-  def xSemdedup(s: SparkSession, dir: String,
-                threshold: Double = 0.45): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    val assigned = ivfAssignments(s, dir)
-      .select(col("vec_id"), col("v"), col("c_label"))
-      .localCheckpoint() // both self-join sides + the verdict spine
+  def xSemdedup(s: SparkSession, dir: String): DataFrame = {
+    val assigned = cells(s, dir) // both self-join sides + the verdict spine
     val twins = assigned.as("a").join(assigned.as("b"),
         col("a.c_label") === col("b.c_label") &&
           col("b.vec_id") < col("a.vec_id"))
-      .filter(expr("cosine_sim(a.v, b.v)") > threshold)
+      .filter(cosineSim(col("a.v"), col("b.v")) > SemdedupThreshold)
       .groupBy(col("a.vec_id").as("vec_id"))
       .agg(count(lit(1)).as("n_twins"))
     assigned.select(col("vec_id"), col("c_label").as("cell"))
@@ -315,23 +220,8 @@ object Similarity {
     * exists anywhere in the plan. Recall is the standard IVF single-probe
     * tradeoff (raise nprobe cells for more). */
   def xAnnIvfTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    val assigned = ivfAssignments(s, dir)
-      .select(col("vec_id"), col("v"), col("c_label"))
-      .localCheckpoint() // two references below: query side + corpus side
-    val qs = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("c_label").as("q_cell"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    assigned.join(broadcast(qs),
-        col("c_label") === col("q_cell") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), expr("cosine_sim(v, qv)").as("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("q_id"), col("rnk"), col("vec_id"),
-        round(col("sim"), 6).as("cosine"))
-      .orderBy("q_id", "rnk")
+    val assigned = cells(s, dir) // two readers: query side + corpus side
+    topKRows(topK(cellPairs(assigned, querySet(assigned)), cosineSim))
   }
 
   /** Recall@5 of the IVF single-probe ANN path ([[xAnnIvfTopk]]) against
@@ -347,39 +237,13 @@ object Similarity {
     * its cost is queries × corpus, never corpus². The hit-join and the
     * per-query rollup shuffle only (q_id, vec_id) pairs. */
   def xAnnRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    val assigned = ivfAssignments(s, dir)
-      .select(col("vec_id"), col("v"), col("c_label"))
-      .localCheckpoint() // four readers: 2 probe arms, query set, cell sizes
-    val qs = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("c_label").as("q_cell"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    val exact = assigned.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), expr("cosine_sim(v, qv)").as("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("q_id"), col("vec_id"))
-    val probe = assigned.join(broadcast(qs),
-        col("c_label") === col("q_cell") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), expr("cosine_sim(v, qv)").as("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("q_id").as("p_qid"), col("vec_id").as("p_vid"))
-    val hits = exact.join(probe,
-        col("q_id") === col("p_qid") && col("vec_id") === col("p_vid"), "left")
-      .groupBy("q_id")
-      .agg(count(col("p_vid")).as("n_hits"))
-    val cand = qs.select(col("q_id"), col("q_cell"))
-      .join(assigned.groupBy("c_label").agg(count(lit(1)).as("cell_n")),
+    val assigned = cells(s, dir) // four readers: 2 probe arms, query set, cell sizes
+    val qs = querySet(assigned)
+    val nCand = qs.join(assigned.groupBy("c_label").agg(count(lit(1)).as("cell_n")),
         col("q_cell") === col("c_label"))
       .select(col("q_id"), (col("cell_n") - 1).as("n_cand"))
-    hits.join(cand, Seq("q_id"))
-      .select(col("q_id"), col("n_cand"), col("n_hits"),
-        round(col("n_hits") / 5.0 + lit(1e-9), 6).as("recall_at_5"))
-      .orderBy("q_id")
+    recallAt5(topK(exactPairs(assigned, qs), cosineSim),
+      topK(cellPairs(assigned, qs), cosineSim), nCand)
   }
 
   /** One k-means (Lloyd) iteration — the training step that produces the
@@ -392,13 +256,13 @@ object Similarity {
     * an explode+groupBy over (cell, dim, component) triples — whole vectors
     * never shuffle, exactly the [[xLabelCentroids]] shape. Iterating =
     * feeding the output back as the next literal centroid set. */
-  def xKmeansStep(s: SparkSession, dir: String, k: Int = 8): DataFrame = {
+  def xKmeansStep(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val init = e.filter(col("vec_id") < k)
+    val init = e.filter(col("vec_id") < KmeansK)
       .select(col("vec_id").as("c_id"), col("v").as("cv"))
     val diff = zip_with(col("v"), col("cv"), (x, y) => x - y)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("d2").asc, col("c_id").asc)
+    val w = Window.partitionBy(col("vec_id"))
+      .orderBy(col("d2").asc, col("c_id").asc)
     val assigned = e.crossJoin(broadcast(init))
       .select(col("vec_id"), col("v"), col("c_id"), dot(diff, diff).as("d2"))
       .withColumn("rn", row_number().over(w))
@@ -416,14 +280,10 @@ object Similarity {
     * projection matrix is a broadcast literal; the corpus makes one narrow
     * pass — the compression stage before a cheap 8-d index or visualization
     * at 100 TB. */
-  def xEmbedProject(s: SparkSession, dir: String,
-                    planes: Int = 8, dims: Int = 64): DataFrame = {
-    val e = emb(s, dir)
-    val cols = (0 until planes).map { p =>
-      val plane = typedLit((0 until dims).map(planeSign(p, _)))
-      round(dot(col("v"), plane), 6).as(s"p$p")
-    }
-    e.select(col("vec_id") +: cols: _*).orderBy("vec_id")
+  def xEmbedProject(s: SparkSession, dir: String): DataFrame = {
+    val coords = projections(col("v")).zipWithIndex
+      .map { case (x, p) => round(x, 6).as(s"p$p") }
+    emb(s, dir).select(col("vec_id") +: coords: _*).orderBy("vec_id")
   }
 
   /** Scalar int8 quantization of the embedding column — the storage-shrink
@@ -438,11 +298,8 @@ object Similarity {
       .select(posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy("dim").agg(min("x").as("mn"), max("x").as("mx"))
       .groupBy()
-      .agg(
-        transform(array_sort(collect_list(struct(col("dim"), col("mn")))),
-          t => t.getField("mn")).as("mins"),
-        transform(array_sort(collect_list(struct(col("dim"), col("mx")))),
-          t => t.getField("mx")).as("maxs"))
+      .agg(collectOrdered(col("dim"), col("mn")).as("mins"),
+        collectOrdered(col("dim"), col("mx")).as("maxs"))
     val code = transform(sequence(lit(0), size(col("v")) - 1), i => {
       val x = element_at(col("v"), i + 1)
       val mn = element_at(col("mins"), i + 1)
@@ -459,117 +316,20 @@ object Similarity {
   /** Product quantization (Jégou et al., "Product Quantization for Nearest
     * Neighbor Search", TPAMI 2011) — the compression half of an IVF-PQ
     * index: the 64-d vector splits into m=8 contiguous 8-d subvectors, each
-    * encoded as the id of its nearest codebook centroid, so a vector
-    * becomes 8 small codes (here 3 bits each) plus a shared codebook.
-    * Codebooks are seeded deterministically from the subvectors of
-    * `vec_id < k` (same convention as [[xKmeansStep]]'s init — one Lloyd
-    * round over these codes IS PQ codebook training).
-    *
-    * Scale shape: the codebook (m·k tiny rows) is broadcast; the corpus
-    * explodes to m rows per vector (fixed fan-out, never corpus²), the
-    * nearest-centroid argmin is `min(struct(d2, c_id))` — an ordinary
-    * map-side-combinable aggregate with a deterministic tie-break, not a
-    * window — and the codes regroup per vector. Emits the code string and
-    * the fold-ordered total reconstruction error. */
-  def xPqCodes(s: SparkSession, dir: String,
-               m: Int = 8, d: Int = 8, k: Int = 8): DataFrame = {
-    val e = emb(s, dir)
-    val subs = e.select(col("vec_id"), posexplode(
-        transform(sequence(lit(0), lit(m - 1)),
-          j => slice(col("v"), j * d + 1, lit(d)))).as(Seq("sub", "sv")))
-    val cb = subs.filter(col("vec_id") < k)
-      .select(col("sub").as("csub"), col("vec_id").as("c_id"),
-        col("sv").as("cv"))
-    val diff = zip_with(col("sv"), col("cv"), (x, y) => x - y)
-    val best = subs.join(broadcast(cb), col("sub") === col("csub"))
-      .select(col("vec_id"), col("sub"), col("c_id"), dot(diff, diff).as("d2"))
-      .groupBy("vec_id", "sub")
-      .agg(min(struct(col("d2"), col("c_id"))).as("best"))
-      .select(col("vec_id"), col("sub"),
-        col("best.c_id").as("code"), col("best.d2").as("d2"))
-    best.groupBy("vec_id")
-      .agg(array_sort(collect_list(struct(col("sub"), col("code"), col("d2"))))
-        .as("arr"))
+    * encoded as the id of its nearest codebook centroid ([[pqEncode]]), so
+    * a vector becomes 8 small codes (here 3 bits each) plus a shared
+    * codebook. Codes regroup per vector; emits the code string and the
+    * fold-ordered total reconstruction error. */
+  def xPqCodes(s: SparkSession, dir: String): DataFrame = {
+    val (_, codes) = pqEncode(emb(s, dir))
+    codes.groupBy("vec_id")
+      .agg(collectOrdered(col("sub"), struct(col("code"), col("d2"))).as("arr"))
       .select(col("vec_id"),
         array_join(transform(col("arr"), t => t.getField("code"))
           .cast("array<string>"), ",").as("codes"),
-        round(aggregate(transform(col("arr"), t => t.getField("d2")),
-          lit(0.0), (acc, x) => acc + x), 6).as("recon_err"))
+        round(foldSum(transform(col("arr"), t => t.getField("d2"))), 6)
+          .as("recon_err"))
       .orderBy("vec_id")
-  }
-
-  /** The shared IVF+PQ probe chain: per query, ADC-scored candidates from
-    * the query's IVF cell, top-`tier` kept by approximate distance, then
-    * exact cosine re-rank. Returns the re-ranked frame BEFORE the final
-    * top-5 cut so both the probe query and its recall eval derive from one
-    * definition. Columns: q_id, vec_id, adc (deterministic sub-ordered
-    * fold), sim (exact), rnk (exact-cosine rank within the tier). */
-  private def ivfpqReranked(s: SparkSession, dir: String,
-                            m: Int, d: Int, k: Int,
-                            tier: Int): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    val assigned = ivfAssignments(s, dir)
-      .select(col("vec_id"), col("v"), col("c_label"))
-      .localCheckpoint() // readers: codes, codebook, query set, re-rank
-    // PQ codebook + per-vector codes — the xPqCodes construction verbatim
-    // (codebook = subvectors of vec_id < k; argmin via struct-min)
-    val subs = assigned.select(col("vec_id"), posexplode(
-        transform(sequence(lit(0), lit(m - 1)),
-          j => slice(col("v"), j * d + 1, lit(d)))).as(Seq("sub", "sv")))
-    val cb = subs.filter(col("vec_id") < k)
-      .select(col("sub").as("csub"), col("vec_id").as("c_id"),
-        col("sv").as("cv"))
-    val diff = zip_with(col("sv"), col("cv"), (x, y) => x - y)
-    val codes = subs.join(broadcast(cb), col("sub") === col("csub"))
-      .select(col("vec_id"), col("sub"), col("c_id"), dot(diff, diff).as("d2"))
-      .groupBy("vec_id", "sub")
-      .agg(min(struct(col("d2"), col("c_id"))).as("best"))
-      .select(col("vec_id"), col("sub"), col("best.c_id").as("code"))
-    val qs = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("c_label").as("q_cell"))
-    // ADC distance table: one row per (query, subspace, centroid) — the
-    // tiny lookup table ADC scoring exists for (|q|·m·k rows, broadcast)
-    val qdiff = zip_with(
-      slice(col("qv"), col("csub") * d + 1, lit(d)), col("cv"),
-      (x, y) => x - y)
-    val dtab = qs.crossJoin(broadcast(cb))
-      .select(col("q_id"), col("csub").as("sub"), col("c_id"),
-        dot(qdiff, qdiff).as("d2"))
-    // candidates = the query's IVF cell; ADC = sum over subspaces of the
-    // table entry for the candidate's code — summed in SUB ORDER via the
-    // sorted-struct fold (xPqCodes' recon_err idiom) so the double is
-    // deterministic and the DuckDB oracle reproduces it bitwise
-    val cellCodes = codes
-      .join(assigned.select(col("vec_id"), col("c_label")), "vec_id")
-      .join(broadcast(qs.select(col("q_id"), col("q_cell"))),
-        col("c_label") === col("q_cell") && col("vec_id") =!= col("q_id"))
-    val dt = dtab.select(col("q_id").as("t_qid"), col("sub").as("t_sub"),
-      col("c_id").as("t_cid"), col("d2"))
-    val adc = cellCodes
-      .join(broadcast(dt),
-        col("t_qid") === col("q_id") && col("t_sub") === col("sub") &&
-          col("t_cid") === col("code"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(array_sort(collect_list(struct(col("sub"), col("d2"))))
-        .as("arr"))
-      .select(col("q_id"), col("vec_id"),
-        aggregate(transform(col("arr"), t => t.getField("d2")),
-          lit(0.0), (acc, x) => acc + x).as("adc"))
-    val wAdc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("adc").asc, col("vec_id").asc)
-    val tiered = adc.withColumn("tr", row_number().over(wAdc))
-      .filter(col("tr") <= tier)
-      .select(col("q_id").as("t_qid2"), col("vec_id").as("t_vid"), col("adc"))
-    // exact re-rank of the tier only: |q|·tier cosine evaluations total
-    val wSim = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    tiered
-      .join(assigned, col("t_vid") === col("vec_id"))
-      .join(broadcast(qs), col("t_qid2") === col("q_id"))
-      .select(col("q_id"), col("vec_id"), col("adc"),
-        expr("cosine_sim(v, qv)").as("sim"))
-      .withColumn("rnk", row_number().over(wSim))
   }
 
   /** IVF+PQ ANN probe with ADC scoring (Jégou et al., TPAMI 2011 — the
@@ -585,69 +345,284 @@ object Similarity {
     * corpus, and full vectors are touched for `tier` candidates per query
     * only. Deterministic md5-free arithmetic end-to-end → DuckDB-checkable
     * (fold-ordered ADC sums, vec_id tie-breaks). */
-  def xAnnIvfpq(s: SparkSession, dir: String,
-                m: Int = 8, d: Int = 8, k: Int = 8,
-                tier: Int = 10): DataFrame =
-    ivfpqReranked(s, dir, m, d, k, tier)
-      .filter(col("rnk") <= 5)
-      .select(col("q_id"), col("rnk"), col("vec_id"),
-        round(col("sim"), 6).as("cosine"), round(col("adc"), 6).as("adc_d2"))
-      .orderBy("q_id", "rnk")
+  def xAnnIvfpq(s: SparkSession, dir: String): DataFrame =
+    topKRows(ivfpqReranked(s, dir).filter(col("rnk") <= TopK),
+      round(col("adc"), 6).as("adc_d2"))
 
   /** Recall@5 of the ADC-scored IVF+PQ probe ([[xAnnIvfpq]]) against the
     * exact brute-force top-5 — [[xAnnRecall]]'s eval with the probe arm
     * swapped for the compressed-domain path, plus the tier size actually
     * scored exactly (the cost side of the ADC tradeoff: `n_exact` vectors
     * touched at full width per query instead of the whole cell). */
-  def xAnnIvfpqRecall(s: SparkSession, dir: String,
-                      tier: Int = 10): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
-    val probe = ivfpqReranked(s, dir, m = 8, d = 8, k = 8, tier = tier)
+  def xAnnIvfpqRecall(s: SparkSession, dir: String): DataFrame = {
+    val probe = ivfpqReranked(s, dir)
       .localCheckpoint() // two readers: hit join + per-query tier size
     val e = emb(s, dir)
-    val qs = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    val exact = e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), expr("cosine_sim(v, qv)").as("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5)
-      .select(col("q_id"), col("vec_id"))
-    val top5 = probe.filter(col("rnk") <= 5)
-      .select(col("q_id").as("p_qid"), col("vec_id").as("p_vid"))
-    val tierN = probe.groupBy(col("q_id").as("n_qid"))
-      .agg(count(lit(1)).as("n_exact"))
-    exact.join(top5,
+    recallAt5(topK(exactPairs(e, querySet(e)), cosineSim),
+      probe.filter(col("rnk") <= TopK),
+      probe.groupBy("q_id").agg(count(lit(1)).as("n_exact")))
+  }
+
+  // ---- shared steps -----------------------------------------------------
+
+  /** Left-to-right sum of a double array: the order of DuckDB's
+    * `list_sum` and `list_dot_product`, so both engines round alike. */
+  private def foldSum(xs: Column): Column =
+    aggregate(xs, lit(0.0), (acc, x) => acc + x)
+
+  /** A group's `value`s as an array ordered by `key` (unique within the
+    * group) — the Spark side of the oracles' `list(x ORDER BY k)`. */
+  private def collectOrdered(key: Column, value: Column): Column =
+    transform(array_sort(collect_list(struct(key.as("k"), value.as("v")))),
+      t => t.getField("v"))
+
+  /** Deterministic ±1 hyperplane component for (plane p, dim i): parity of
+    * the first 16 bits of md5("p#i"). Computed once on the driver and shipped
+    * as a literal — the executors do pure arithmetic, no per-row hashing. */
+  private[ext] def planeSign(p: Int, i: Int): Double = {
+    val d = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$p#$i".getBytes("UTF-8"))
+    val first16 = ((d(0) & 0xff) << 8) | (d(1) & 0xff)
+    if (first16 % 2 == 0) 1.0 else -1.0
+  }
+
+  /** `v` projected onto each of the [[Planes]] ±1 hyperplanes of
+    * [[planeSign]], plane p at index p. */
+  private def projections(v: Column): Seq[Column] = (0 until Planes).map(p =>
+    dot(v, typedLit((0 until Dims).map(planeSign(p, _)))))
+
+  /** The sign of each projection as "1" (>= 0) or "0". */
+  private def signBits(v: Column): Seq[Column] =
+    projections(v).map(x => when(x >= 0, lit("1")).otherwise(lit("0")))
+
+  /** `(vec_id, v, band0, band1, ...)`: band b concatenates sign bits
+    * `b * RowsPerBand` until `(b + 1) * RowsPerBand`. */
+  private def bandSignatures(e: DataFrame): DataFrame = {
+    val bits = signBits(col("v"))
+    e.select(col("vec_id") +: col("v") +: (0 until Bands).map(b =>
+      concat(bits.slice(b * RowsPerBand, (b + 1) * RowsPerBand): _*)
+        .as(s"band$b")): _*)
+  }
+
+  /** Per band, the pairs of [[bandSignatures]] rows that share the band
+    * and satisfy `keep(a.vec_id, b.vec_id)`, as `(idA, idB, sim)` scored by
+    * `cosine_sim`. A pair sharing several bands appears once per band. */
+  private def bandPairs(sig: DataFrame, keep: (Column, Column) => Column,
+                        idA: String, idB: String): DataFrame =
+    (0 until Bands).map { b =>
+      sig.as("a").join(sig.as("b"),
+        col(s"a.band$b") === col(s"b.band$b") &&
+          keep(col("a.vec_id"), col("b.vec_id")))
+        .select(col("a.vec_id").as(idA), col("b.vec_id").as(idB),
+          cosineSim(col("a.v"), col("b.v")).as("sim"))
+    }.reduce(_ union _)
+
+  /** Every vector with its nearest-centroid cell, vector retained —
+    * the shared assignment stage of [[xIvfAssign]] and [[cells]]. */
+  private def ivfAssignments(s: SparkSession, dir: String): DataFrame = {
+    val e = emb(s, dir)
+    val centroids = e
+      .select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
+      .groupBy("label", "dim").agg(avg("x").as("mx"))
+      .groupBy("label")
+      .agg(collectOrdered(col("dim"), col("mx")).as("cv"))
+      .select(col("label").as("c_label"), col("cv"))
+    val w = Window.partitionBy(col("vec_id"))
+      .orderBy(col("sim").desc, col("c_label").asc)
+    e.crossJoin(broadcast(centroids))
+      .select(col("vec_id"), col("label"), col("v"), col("c_label"),
+        cosine(col("v"), col("cv")).as("sim"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .drop("rn")
+  }
+
+  /** `(vec_id, v, c_label)` of [[ivfAssignments]], materialized once:
+    * every caller reads it more than once. */
+  private def cells(s: SparkSession, dir: String): DataFrame =
+    ivfAssignments(s, dir)
+      .select(col("vec_id"), col("v"), col("c_label"))
+      .localCheckpoint()
+
+  /** The query set of the top-k queries: vectors `vec_id < 10` as
+    * `(q_id, qv)`, plus their IVF cell as `q_cell` when `corpus` carries
+    * one. */
+  private def querySet(corpus: DataFrame): DataFrame = {
+    val cell =
+      if (corpus.columns.contains("c_label")) Seq(col("c_label").as("q_cell"))
+      else Nil
+    corpus.filter(col("vec_id") < NQueries)
+      .select(Seq(col("vec_id").as("q_id"), col("v").as("qv")) ++ cell: _*)
+  }
+
+  /** Every (query, corpus vector) pair but the query itself; the query set
+    * is broadcast, so the corpus is scanned once. */
+  private def exactPairs(corpus: DataFrame, qs: DataFrame): DataFrame =
+    corpus.crossJoin(broadcast(qs)).filter(col("vec_id") =!= col("q_id"))
+
+  /** The (query, corpus vector) pairs inside the query's IVF cell. */
+  private def cellPairs(assigned: DataFrame, qs: DataFrame): DataFrame =
+    assigned.join(broadcast(qs),
+      col("c_label") === col("q_cell") && col("vec_id") =!= col("q_id"))
+
+  /** `scored` (q_id, vec_id, sim, ...) with each query's rank `rnk`: by
+    * sim descending, ties to the lower vec_id. */
+  private def ranked(scored: DataFrame): DataFrame = scored.withColumn("rnk",
+    row_number().over(Window.partitionBy(col("q_id"))
+      .orderBy(col("sim").desc, col("vec_id").asc)))
+
+  /** Each query's top 5 of `pairs`, scored by `score(v, qv)`:
+    * `(q_id, vec_id, sim, rnk)`. */
+  private def topK(pairs: DataFrame,
+                   score: (Column, Column) => Column): DataFrame =
+    ranked(pairs.select(col("q_id"), col("vec_id"),
+        score(col("v"), col("qv")).as("sim")))
+      .filter(col("rnk") <= TopK)
+
+  /** The output rows of a top-k query, in rank order per query. */
+  private def topKRows(top: DataFrame, extra: Column*): DataFrame =
+    top.select(Seq(col("q_id"), col("rnk"), col("vec_id"),
+        round(col("sim"), 6).as("cosine")) ++ extra: _*)
+      .orderBy("q_id", "rnk")
+
+  /** Recall@5 of a probe's top 5 against the exact top 5, both
+    * `(q_id, vec_id, ...)`: per query, `n_hits` = |exact ∩ probe| and
+    * `recall_at_5`, next to the columns of `cost` (q_id plus the probe's
+    * cost side). */
+  private def recallAt5(exact: DataFrame, probe: DataFrame,
+                        cost: DataFrame): DataFrame = {
+    val hits = exact.join(
+        probe.select(col("q_id").as("p_qid"), col("vec_id").as("p_vid")),
         col("q_id") === col("p_qid") && col("vec_id") === col("p_vid"), "left")
       .groupBy("q_id")
       .agg(count(col("p_vid")).as("n_hits"))
-      .join(tierN, col("q_id") === col("n_qid"))
-      .select(col("q_id"), col("n_exact"), col("n_hits"),
-        round(col("n_hits") / 5.0 + lit(1e-9), 6).as("recall_at_5"))
+    cost.join(hits, Seq("q_id"))
+      .withColumn("recall_at_5",
+        round(col("n_hits") / TopK.toDouble + lit(1e-9), 6))
       .orderBy("q_id")
   }
 
+  /** Product-quantization encoding of `vecs` (vec_id, v): each vector
+    * splits into `PqM` contiguous `PqD`-dim subvectors; the codebook
+    * `(csub, c_id, cv)` is the subvectors of `vec_id < PqK` (the
+    * [[xKmeansStep]] seeding — one Lloyd round over these codes IS PQ
+    * codebook training); each `(vec_id, sub)` gets its nearest codebook
+    * entry as `code` with its squared distance `d2`. The codebook (m·k tiny
+    * rows) is broadcast, the corpus explodes to m rows per vector, and the
+    * argmin is `min(struct(d2, c_id))` — a map-side-combinable aggregate
+    * with a deterministic tie-break, not a window. */
+  private def pqEncode(vecs: DataFrame): (DataFrame, DataFrame) = {
+    val subs = vecs.select(col("vec_id"), posexplode(
+        transform(sequence(lit(0), lit(PqM - 1)),
+          j => slice(col("v"), j * PqD + 1, lit(PqD)))).as(Seq("sub", "sv")))
+    val cb = subs.filter(col("vec_id") < PqK)
+      .select(col("sub").as("csub"), col("vec_id").as("c_id"),
+        col("sv").as("cv"))
+    val diff = zip_with(col("sv"), col("cv"), (x, y) => x - y)
+    val codes = subs.join(broadcast(cb), col("sub") === col("csub"))
+      .select(col("vec_id"), col("sub"), col("c_id"), dot(diff, diff).as("d2"))
+      .groupBy("vec_id", "sub")
+      .agg(min(struct(col("d2"), col("c_id"))).as("best"))
+      .select(col("vec_id"), col("sub"),
+        col("best.c_id").as("code"), col("best.d2").as("d2"))
+    (cb, codes)
+  }
+
+  /** The shared IVF+PQ probe chain: per query, ADC-scored candidates from
+    * the query's IVF cell, top-`IvfpqTier` kept by approximate distance,
+    * then exact cosine re-rank. Returns the re-ranked frame BEFORE the
+    * final top-5 cut so both the probe query and its recall eval derive
+    * from one definition. Columns: q_id, vec_id, adc (deterministic
+    * sub-ordered fold), sim (exact), rnk (exact-cosine rank within the
+    * tier). */
+  private def ivfpqReranked(s: SparkSession, dir: String): DataFrame = {
+    val assigned = cells(s, dir) // readers: codes, codebook, query set, re-rank
+    val (cb, codes) = pqEncode(assigned)
+    val qs = querySet(assigned)
+    // ADC distance table: one row per (query, subspace, centroid) — the
+    // tiny lookup table ADC scoring exists for (|q|·m·k rows, broadcast)
+    val qdiff = zip_with(
+      slice(col("qv"), col("csub") * PqD + 1, lit(PqD)), col("cv"),
+      (x, y) => x - y)
+    val dt = qs.crossJoin(broadcast(cb))
+      .select(col("q_id").as("t_qid"), col("csub").as("t_sub"),
+        col("c_id").as("t_cid"), dot(qdiff, qdiff).as("d2"))
+    // candidates = the query's IVF cell; ADC = sum over subspaces of the
+    // table entry for the candidate's code, summed in SUB ORDER so the
+    // double is deterministic and the DuckDB oracle reproduces it bitwise
+    val cellCodes = codes.select(col("vec_id"), col("sub"), col("code"))
+      .join(assigned.select(col("vec_id"), col("c_label")), "vec_id")
+      .join(broadcast(qs.select(col("q_id"), col("q_cell"))),
+        col("c_label") === col("q_cell") && col("vec_id") =!= col("q_id"))
+    val adc = cellCodes
+      .join(broadcast(dt),
+        col("t_qid") === col("q_id") && col("t_sub") === col("sub") &&
+          col("t_cid") === col("code"))
+      .groupBy(col("q_id"), col("vec_id"))
+      .agg(foldSum(collectOrdered(col("sub"), col("d2"))).as("adc"))
+    val wAdc = Window.partitionBy(col("q_id"))
+      .orderBy(col("adc").asc, col("vec_id").asc)
+    val tiered = adc.withColumn("tr", row_number().over(wAdc))
+      .filter(col("tr") <= IvfpqTier)
+      .select(col("q_id").as("t_qid2"), col("vec_id").as("t_vid"), col("adc"))
+    // exact re-rank of the tier only: |q|·tier cosine evaluations total
+    ranked(tiered
+      .join(assigned, col("t_vid") === col("vec_id"))
+      .join(broadcast(qs), col("t_qid2") === col("q_id"))
+      .select(col("q_id"), col("vec_id"), col("adc"),
+        cosineSim(col("v"), col("qv")).as("sim")))
+  }
+
   val queries: Map[String, Q] = Map(
-    "x_ann_ivfpq" -> ((s, dir) => xAnnIvfpq(s, dir)),
-    "x_ann_ivfpq_recall" -> ((s, dir) => xAnnIvfpqRecall(s, dir)),
+    "x_ann_ivfpq" -> xAnnIvfpq,
+    "x_ann_ivfpq_recall" -> xAnnIvfpqRecall,
     "x_embed_quantize" -> xEmbedQuantize,
-    "x_pq_codes" -> ((s, dir) => xPqCodes(s, dir)),
+    "x_pq_codes" -> xPqCodes,
     "x_ann_cosine_topk" -> xAnnCosineTopk,
     "x_ann_cosine_fused" -> xAnnCosineFused,
-    "x_embedding_neardup" -> ((s, dir) => xEmbeddingNeardup(s, dir)),
-    "x_knn_graph" -> ((s, dir) => xKnnGraph(s, dir)),
+    "x_embedding_neardup" -> xEmbeddingNeardup,
+    "x_knn_graph" -> xKnnGraph,
     "x_label_centroids" -> xLabelCentroids,
-    "x_embedding_drift" -> ((s, dir) => xEmbeddingDrift(s, dir)),
+    "x_embedding_drift" -> xEmbeddingDrift,
     "x_ivf_assign" -> xIvfAssign,
-    "x_semdedup" -> ((s, dir) => xSemdedup(s, dir)),
+    "x_semdedup" -> xSemdedup,
     "x_ann_ivf_topk" -> xAnnIvfTopk,
     "x_ann_recall" -> xAnnRecall,
-    "x_ann_lsh_buckets" -> ((s, dir) => xAnnLshBuckets(s, dir)),
-    "x_kmeans_step" -> ((s, dir) => xKmeansStep(s, dir)),
-    "x_embed_project" -> ((s, dir) => xEmbedProject(s, dir))
+    "x_ann_lsh_buckets" -> xAnnLshBuckets,
+    "x_kmeans_step" -> xKmeansStep,
+    "x_embed_project" -> xEmbedProject
   )
+
+  // ---- constants fixed by the oracles -----------------------------------
+  // The oracle SQL below writes each of these values out literally, so a
+  // different value here would move the Spark side away from its oracle.
+
+  // The top-k family's query set is `vec_id < NQueries`; each query keeps
+  // its `TopK` best neighbors.
+  private final val NQueries = 10
+  private final val TopK = 5
+  // The md5 hyperplanes: `Planes` planes over `Dims` dimensions, split into
+  // `Bands` LSH bands of `RowsPerBand` sign bits (band0/band1 of the
+  // near-dup and k-NN oracles).
+  private final val Planes = 8
+  private final val Dims = 64
+  private final val Bands = 2
+  private final val RowsPerBand = 4
+  private final val NeardupThreshold = 0.45
+  private final val KnnK = 3
+  // The drift fixture's rendered shift: +DriftShift on the first
+  // `DriftShiftDims` dimensions; the flag fires above half of it.
+  private final val DriftShiftDims = 4
+  private final val DriftShift = 0.2
+  private final val SemdedupThreshold = 0.45
+  private final val KmeansK = 8
+  // Product quantization: `PqM` subvectors of `PqD` dims, a codebook of
+  // `PqK` entries per subspace; the IVF+PQ probe re-ranks its `IvfpqTier`
+  // best ADC candidates exactly.
+  private final val PqM = 8
+  private final val PqD = 8
+  private final val PqK = 8
+  private final val IvfpqTier = 10
 
   /** Shared CTE chain for the IVF+PQ oracles: assignment (the
     * x_ann_ivf_topk chain) + PQ codebook/codes (the x_pq_codes chain) +

@@ -18,7 +18,8 @@ object SqlSurface {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** All-pairs cosine over a bounded query window, written in SQL against a
+  /** All-pairs cosine over a bounded query window (vec_id < 32 of the
+    * valid-embedding subset, [[Similarity.emb]]), written in SQL against a
     * temp view with the fused native `cosine_sim` — proves the codegen
     * Expression resolves through the SQL parser/analyzer path, not only
     * through `Column`. The plan is the same broadcast-light self-join the
@@ -27,12 +28,9 @@ object SqlSurface {
     * cosine), so the check is value-bearing, never vacuous. */
   def xSqlCosinePairs(s: SparkSession, dir: String): DataFrame = {
     graft.functions.CosineSimilarity.register(s)
-    Tables.load(s, dir, "embeddings")
-      // valid-embedding subset, mirrored by the oracle (Similarity.emb)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .filter(col("vec_id") < 32 &&
-        aggregate(col("v"), lit(0.0), (acc, x) => acc + x * x) > 0)
+    Similarity.emb(s, dir)
+      .filter(col("vec_id") < 32)
+      .select(col("vec_id"), col("v"))
       .createOrReplaceTempView("graft_emb32")
     s.sql("""
       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,

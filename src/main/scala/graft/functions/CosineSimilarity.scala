@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.classic.GraftBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -77,6 +78,11 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
+  /** Column form: `cosine_sim(a, b)` with no function-registry entry. */
+  def cosineSim(a: Column, b: Column): Column =
+    GraftBridge.column(CosineSimilarity(
+      GraftBridge.expression(a), GraftBridge.expression(b)))
+
   /** Register `cosine_sim(a, b)` in the session's function registry so it is
     * usable from SQL and `expr(...)`. Idempotent. */
   def register(spark: SparkSession): Unit =

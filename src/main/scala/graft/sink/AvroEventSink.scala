@@ -191,13 +191,28 @@ object AvroEventSink {
       .start()
 
   /** Read container files back to Rows of (subset) columns — the O26 dual,
-    * used by tests for round-trip assertions. */
+    * used by tests for round-trip assertions. A file whose tail is cut off
+    * throws (see [[requireWhole]]). */
   def readRecords(file: File): Seq[GenericRecord] = {
     val reader = new DataFileReader[GenericRecord](
       file, new GenericDatumReader[GenericRecord]())
-    try reader.iterator().asScala.toList
-    finally reader.close()
+    try {
+      val records = reader.iterator().asScala.toList
+      requireWhole(reader, file.length(), file.toString)
+      records
+    } finally reader.close()
   }
+
+  /** Every block of a container file ends with the file's sync marker, so
+    * a reader that has consumed all records of a whole file has its last
+    * sync point at the end of the file. Avro's reader stops without an
+    * error at a block cut off mid-way, returning the records before the
+    * cut; this check makes such a torn file fail loudly instead. */
+  private def requireWhole(reader: DataFileReader[_], length: Long,
+                           name: String): Unit =
+    if (reader.previousSync() != length)
+      throw new java.io.IOException(s"torn Avro container file $name: " +
+        s"last sync marker at byte ${reader.previousSync()} of $length")
 
   /** Every container file of the log tree under `base` (one directory per
     * day), with its records, in path order. With `live = true` the tree
@@ -254,7 +269,7 @@ object AvroEventSink {
       .option("pathGlobFilter", glob)
       .option("recursiveFileLookup", "true")
       .load(path)
-      .select("content")
+      .select("path", "content")
     val enc = org.apache.spark.sql.Encoders.row(QueryEvent.schema)
     files.mapPartitions { it: Iterator[Row] =>
       val readerSchema = new Schema.Parser().parse(readerSchemaJson)
@@ -265,7 +280,7 @@ object AvroEventSink {
       val data = new GenericData()
       data.setFastReaderEnabled(false)
       it.flatMap { fileRow =>
-        val bytes = fileRow.getAs[Array[Byte]](0)
+        val bytes = fileRow.getAs[Array[Byte]](1)
         val in = new org.apache.avro.file.SeekableByteArrayInput(bytes)
         val reader = new DataFileReader[GenericRecord](in,
           new GenericDatumReader[GenericRecord](null, readerSchema, data))
@@ -287,6 +302,7 @@ object AvroEventSink {
               }
             })
           }
+          requireWhole(reader, bytes.length, fileRow.getString(0))
           out.result()
         } finally reader.close()
       }

@@ -306,7 +306,12 @@ class SparkCaptureListenerSpec extends AnyFunSuite {
       spark.sql(s"SELECT sum(x) AS s_$tag FROM $table WHERE day = '2024-01-01'")
         .collect()
       assert(awaitReady(20000L)(l.seen >= 8)) // 4 statements × 2 lifecycle events
-      val events = l.drain()
+      // Drain until the last statement's COMPLETED is in: events of earlier
+      // executions still queued on the shared bus reach a new listener
+      // too, so 8 seen events can come before this test's last one.
+      val events = l.drainUntil(20000L)(_.exists(e =>
+        e.EventType.contains("QUERY_COMPLETED") &&
+          e.QueryText.exists(_.contains(s"s_$tag"))))
       val inserts = events.filter(e =>
         e.EventType.contains("QUERY_COMPLETED") &&
           e.PartitionsWritten.exists(_.contains(table)))

@@ -350,6 +350,15 @@ class ExtSpec extends AnyFunSuite {
     }
   }
 
+  test("ann topk: fused cosine_sim and HOF cosine rank the same rows") {
+    // x_ann_cosine_fused is checked against x_ann_cosine_topk's oracle;
+    // both run through one ranker, so a swapped scorer shows up here
+    val hof = Similarity.xAnnCosineTopk(spark, dir).collect().map(_.toSeq).toSeq
+    val fused = Similarity.xAnnCosineFused(spark, dir).collect().map(_.toSeq).toSeq
+    assert(hof.length == 50)
+    assert(fused == hof)
+  }
+
   test("quality score: bounded, deterministic, both verdict arms fire") {
     val rows = TextOps.xQualityScore(spark, dir).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))

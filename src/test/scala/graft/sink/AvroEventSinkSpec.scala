@@ -81,6 +81,22 @@ class AvroEventSinkSpec extends AnyFunSuite {
       bytes.take(24))
     assert(ids(AvroEventSink.readTree(base, live = true)) == Seq("q1", "q2"))
     intercept[java.io.IOException](AvroEventSink.readTree(base))
+    // a file whose tail is cut off inside its last block: Avro's reader
+    // returns the records before the cut without an error, so a settled
+    // read and the distributed read must fail on it, naming the file
+    new File(day, "dwhassessment_2022-12-25T1202_tree.avro").delete()
+    assert(ids(AvroEventSink.readTree(base)) == Seq("q1", "q2"))
+    val torn = new File(day, "dwhassessment_2022-12-25T1203_tree.avro")
+    Files.write(torn.toPath, bytes.dropRight(8))
+    val e = intercept[java.io.IOException](AvroEventSink.readRecords(torn))
+    assert(e.getMessage.contains(torn.getName), e.getMessage)
+    assert(ids(AvroEventSink.readTree(base, live = true)) == Seq("q1", "q2"))
+    intercept[java.io.IOException](AvroEventSink.readTree(base))
+    val f = intercept[Exception](
+      AvroEventSink.readAsFrame(spark, base.toString).collect())
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    assert(msgs(f).exists(_.contains(torn.getName)), f.toString)
   }
 
   test("write + read-back: reference dir layout, file names, values") {

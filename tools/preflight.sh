@@ -14,6 +14,9 @@
 # 3. If a parent dump directory is given (a Verify dump of the parent
 #    commit over the same queries), the new dump must match it under
 #    `tools/compare.py --dumps`: the result-identity check of a refactor.
+# 4. If every query was dumped and python3 can import duckdb, the dump must
+#    also pass the DuckDB oracle compare (`tools/compare.py <sf> <dump>`)
+#    with no FAIL line. Otherwise one "SKIP oracle" line says why not.
 #
 # Exit 0 = safe to commit. Nonzero = do NOT commit; fix first.
 set -euo pipefail
@@ -40,7 +43,7 @@ if ! sbt --batch "testOnly *" > /tmp/preflight_test.log 2>&1; then
 fi
 grep -E "Tests: succeeded|All tests passed" /tmp/preflight_test.log | tail -2
 
-if [[ -n "$queries" || -n "$parent" ]]; then
+if [[ $# -ge 1 ]]; then
   out="$(mktemp -d /tmp/preflight_verify.XXXX)"
   echo "[preflight] Verify on: ${queries:-all queries} -> $out"
   only=()
@@ -68,5 +71,23 @@ if [[ -n "$queries" || -n "$parent" ]]; then
     fi
     tail -1 /tmp/preflight_compare.log
   fi
+  if [[ -n "$queries" ]]; then
+    echo "[preflight] SKIP oracle: only the named queries were dumped"
+  elif ! python3 -c "import duckdb" 2> /dev/null; then
+    echo "[preflight] SKIP oracle: python3 cannot import duckdb"
+  else
+    echo "[preflight] compare.py (DuckDB oracle) on $out"
+    if ! python3 tools/compare.py /root/testdata/sf0.01 "$out" \
+        > /tmp/preflight_oracle.log 2>&1 ||
+        grep -q "^FAIL" /tmp/preflight_oracle.log; then
+      grep -v "^PASS" /tmp/preflight_oracle.log | tail -40
+      echo "[preflight] FAIL: oracle compare" \
+        "(full log: /tmp/preflight_oracle.log)"
+      exit 1
+    fi
+    tail -1 /tmp/preflight_oracle.log
+  fi
+else
+  echo "[preflight] SKIP oracle: no Verify dump was asked for"
 fi
 echo "[preflight] OK"
